@@ -44,12 +44,6 @@ from relation_graph_spark.config import OutputMode, RGConfig
 from relation_graph_spark.decode import decode_axioms, told_tables
 
 
-def _bcast_if_small(df: DataFrame, threshold: int) -> DataFrame:
-    if threshold > 0 and df.count() <= threshold:
-        return F.broadcast(df)
-    return df
-
-
 # token-packing width: 3 tokens fit one int64 when every token < 2^21 (~2M
 # vocabulary). The distinct then hashes one 8-byte key instead of a 3-column
 # row — 2.6x faster at 44M groups (less hash-table memory traffic).

@@ -473,9 +473,12 @@ class IdempotentParquetSink:
         # repartition on the bucket column: one file per bucket dir (without
         # it, every task writes its own file into every bucket it touches —
         # up to min(rows, tasks) files per bucket per batch; see the state
-        # store's _write_rel_bucketed and BENCH/BASELINE.md 4.13)
+        # store's _write_state and BENCH/BASELINE.md 4.13). The explicit
+        # partition count keeps AQE from coalescing a delta-sized batch into
+        # ONE task that writes every bucket file serially.
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         df.withColumn("bucket", self._bucket_col()).repartition(
-            "bucket"
+            n, "bucket"
         ).write.mode("overwrite").partitionBy("bucket").parquet(path)
         n_tomb = 0
         if tombstones is not None:

@@ -180,6 +180,11 @@ class IncrementalClosureJob:
             len(folded_delta_ids(self.state_dir, b)) for b in self._delta_ids
         )
         self._prev_unsat = output_frames(self._state, self.cfg)["unsat"].localCheckpoint()
+        # seed the running owl:Nothing stat once (as materialize_edges does
+        # for a fresh job): with it unknown, every batch after a restart
+        # would recompute unsat in full and pay the unsat anti-joins that a
+        # known-empty unsat folds away
+        self._state["_has_bot"] = not self._prev_unsat.isEmpty()
 
     def _prev_manifest(self) -> dict:
         ms = self.sink.metrics()
@@ -190,18 +195,9 @@ class IncrementalClosureJob:
         if self.sink.is_committed(int(batch_id)):
             return  # replayed micro-batch: already fully applied
 
-        import time as _time
-
-        _phase_timing = bool(os.environ.get("RGS_PHASE_TIMING"))
-        _t = [_time.time()]
-
-        def _mark(label: str) -> None:
-            if _phase_timing:
-                now = _time.time()
-                print(f"[phase b{batch_id}] {label}: {now - _t[0]:.2f}s")
-                _t[0] = now
-
-        batch_df = batch_df.localCheckpoint()
+        # lazy: a file scan has no exchange, so the checkpoint costs no job
+        # of its own — the stats job below materializes it
+        batch_df = batch_df.localCheckpoint(eager=False)
 
         # ONE batch-sized aggregation covers the watermark (max event ts),
         # late-row accounting, and per-source lineage counts — instead of a
@@ -256,12 +252,10 @@ class IncrementalClosureJob:
             decode_axioms(batch_seq.select("doc_id", "tokens", "n_tok", "source"))
         )
         self._ensure_state_loaded()
-        _mark("watermark+told+decode")
         if self._state is None:
             state, deltas = initial_state(delta_told, self.cfg), None
         else:
             state, deltas = apply_delta(self._state, delta_told, self.cfg)
-        _mark("apply_delta")
         deltas_for_emit = deltas
 
         prev_m = self._prev_manifest()
@@ -280,7 +274,7 @@ class IncrementalClosureJob:
             deltas is None or self._deltas_since_snapshot + 1 >= self.compact_every
         )
         if wrote_snapshot:
-            frame_paths = save_state_snapshot(state, self.state_dir, int(batch_id))
+            roots = save_state_snapshot(state, self.state_dir, int(batch_id))
             self._deltas_since_snapshot = 0
             self._delta_ids = []
         else:
@@ -307,28 +301,17 @@ class IncrementalClosureJob:
                 written = save_state_delta(deltas, self.state_dir, int(batch_id))
                 self._delta_ids.append(int(batch_id))
             self._deltas_since_snapshot += 1
-            prev_paths: dict = dict(state.get("_frame_paths") or {})
-            folded_prefixes = tuple(
-                os.path.join(self.state_dir, f"delta-{b}") + os.sep
-                for b in fold_ids
-            )
-            frame_paths = {
-                name: [
-                    p
-                    for p in prev_paths.get(name, [])
-                    if not (folded_prefixes and p.startswith(folded_prefixes))
-                ]
-                + ([written[name]] if name in written else [])
-                for name in set(prev_paths) | set(written)
-            }
+            folded = {os.path.join(self.state_dir, f"delta-{b}") for b in fold_ids}
+            roots = [
+                r for r in state.get("_state_roots") or [] if r not in folded
+            ] + sorted(set(written.values()))
         # re-point EVERY state frame at the on-disk store: the next batch's
         # history anti-join prunes its parquet scan to delta-touched
         # buckets, and per-batch plans stay one level deep over parquet
         # leaves with real statistics (see incremental.repoint_state — the
         # alternative, chaining checkpointed Datasets across batches, is an
         # exponential planning-time cliff past ~15 batches)
-        repoint_state(self.spark, state, frame_paths)
-        _mark("persist_state")
+        repoint_state(self.spark, state, roots)
 
         if deltas_for_emit is not None and self._prev_unsat is not None:
             # -------- fast path: delta-sized emission -----------------------
@@ -350,19 +333,24 @@ class IncrementalClosureJob:
             )
             # running closure total is computed from the delta frames BEFORE
             # commit so the manifest is written exactly once (no post-commit
-            # patch to lose in a crash); the two counts are independent jobs
-            # and run concurrently (guide §2.6)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as _pool:
-                _fn, _ft = _pool.submit(hashed.count), _pool.submit(tomb.count)
-                n_new_rows, n_tomb_rows = _fn.result(), _ft.result()
+            # patch to lose in a crash); both counts come from ONE
+            # aggregate, parallel — a retraction scans history, and a bulk
+            # delta hashes many rows
+            counts = {
+                r["k"]: r["count"]
+                for r in hashed.selectExpr("0 AS k")
+                .unionByName(tomb.selectExpr("1 AS k"))
+                .groupBy("k")
+                .count()
+                .collect()
+            }
+            n_new_rows, n_tomb_rows = counts.get(0, 0), counts.get(1, 0)
             total = prev_total + n_new_rows - n_tomb_rows
-            _mark("delta_counts")
             self.sink.append(
                 hashed.select("s", "p", "o", "edge", "edge_hash"),
                 int(batch_id),
-                tombstones=tomb,
+                # nothing retracted: no tombstone write job
+                tombstones=tomb if n_tomb_rows else None,
                 extra_metrics=self._metrics(
                     prev_m, batch_per_source, n_late, hwm, total, None
                 ),
@@ -400,7 +388,6 @@ class IncrementalClosureJob:
                 n_rows_hint=n_edges if committed is None else None,
             )
 
-        _mark("sink_append")
         # post-commit maintenance: expire state dirs superseded by a
         # now-committed snapshot; run the sink's INLINE compaction tier
         # (bounded minor fold only — size-tiered merges rewrite up to
@@ -423,7 +410,6 @@ class IncrementalClosureJob:
             self.told_trail.fold_through(int(batch_id))
         if hasattr(self.sink, "maybe_compact"):
             self.sink.maybe_compact()
-        _mark("maintenance")
         self._state = state
         self._state_batch = int(batch_id)
         if deltas_for_emit is not None and unsat_new is not None:

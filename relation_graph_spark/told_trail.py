@@ -165,7 +165,9 @@ class ToldTrail:
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         # one file per batch dir: the trail is audit-only and batch-sized,
         # so file count should track batch count, not shuffle parallelism
-        df.repartition(1).write.mode("overwrite").parquet(
+        # (coalesce, not repartition: the batch is already materialized, and
+        # a shuffle would cost a second Spark job per batch)
+        df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self.root, f"batch={int(batch_id)}")
         )
 

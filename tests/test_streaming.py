@@ -989,8 +989,19 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path):
     for f in files[2:]:
         shutil.copy2(os.path.join(inp_stage, f), os.path.join(inp, f))
     job2 = IncrementalClosureJob(spark, inp, work, cfg)
+    has_bot = []
+    process = job2.process_batch
+
+    def recording(df, batch_id):
+        process(df, batch_id)
+        has_bot.append(job2._state["_has_bot"])
+
+    job2.process_batch = recording
     job2.run_available(max_files_per_trigger=1)
     assert _sink_triples(job2) == _equiv_golden(spark)
+    # the restart seeds the owl:Nothing stat instead of leaving it unknown
+    # (unknown = every later batch recomputes unsat in full)
+    assert has_bot and has_bot[0] is False
 
 
 def test_lineage_running_totals(spark, tmp_path):
