@@ -8,8 +8,8 @@ hash maps (``closureSubsBySuperclass``, RelationGraph.scala:163); we hold it
 as a distributed DataFrame and iterate the classic semi-naive delta:
 
     delta_0  = edges
-    delta_i  = project(delta_{i-1} join edges) anti-join closure
-    closure  = union of all deltas
+    delta_i  = project(delta_{i-1} join closure) anti-join closure
+    closure  = closure union delta_i
 
 Properties that matter at 100 TB:
 - the per-iteration join shuffles on the single int join key; the small side
@@ -18,17 +18,23 @@ Properties that matter at 100 TB:
 - ``localCheckpoint`` after every iteration truncates lineage, otherwise the
   logical plan grows linearly with iterations and Catalyst analysis time
   explodes (well-known iterative-Spark pitfall, SURVEY.md section 4.1);
-- iteration count = graph diameter (right-linear recursion), with an
-  optional doubling mode (closure o closure) for long chains: O(log d)
-  iterations at the cost of heavier joins.
+- each round composes the delta with the ACCUMULATED closure, so reachable
+  path length doubles per round: O(log diameter) rounds, not one round per
+  edge of the longest path;
 - cycles (e.g. from named-class equivalences) terminate naturally: the
   anti-join makes every delta strictly new.
+
+A stream that extends one vocabulary-sized closure batch after batch keeps
+it on the driver as well, as a ``ClosureIndex`` (the reference's in-place
+extended maps, packed into sorted int64 arrays), and ``incremental_tc``
+extends that index instead of running distributed rounds.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -37,11 +43,12 @@ class FixpointDidNotConverge(RuntimeError):
     pass
 
 
-# Driver fast path (round-7 optimization): hierarchy edge sets at or below
-# this row count are closed in one driver-side pass instead of N distributed
-# semi-naive rounds. Rationale (guide §1.2 "the distributed algorithm"): each
-# distributed round costs a broadcast build + a dedup shuffle + an anti-join
-# + a count job — ~0.5-1s of fixed cost per round on any cluster — while a
+# Driver fast path of transitive_closure (round-7 optimization): hierarchy
+# edge sets at or below this row count are closed in one driver-side pass
+# instead of N distributed semi-naive rounds. Rationale (guide §1.2 "the
+# distributed algorithm"): each distributed round costs a broadcast build +
+# a dedup shuffle + an anti-join + a count job — ~0.5-1s of fixed cost per
+# round on any cluster — while a
 # vocabulary-sized hierarchy (the ONLY thing this engine ever closes without
 # group scoping: ontology class/property graphs, which the reference holds in
 # Whelk's in-memory maps) closes in milliseconds in one process. The driver
@@ -138,22 +145,12 @@ def ensure_iteration_confs(df: DataFrame) -> None:
     df.sparkSession.conf.set("spark.sql.constraintPropagation.enabled", "false")
 
 
-def _maybe_broadcast(df: DataFrame, threshold: int) -> DataFrame:
-    """Broadcast `df` if its row count is below threshold (count is cached)."""
-    if threshold <= 0:
-        return df
-    if df.count() <= threshold:
-        return F.broadcast(df)
-    return df
-
-
 def transitive_closure(
     edges: DataFrame,
     child: str = "child",
     parent: str = "parent",
     max_iterations: int = 200,
     broadcast_row_threshold: int = 5_000_000,
-    mode: str = "smart",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Non-reflexive transitive closure of an edge DataFrame.
@@ -167,14 +164,11 @@ def transitive_closure(
     group value — computed for ALL groups in one distributed job: the join
     key is simply (group..., node), no per-window driver loop).
 
-    mode='smart' (default): each round composes the delta with the FULL
-    accumulated closure, so reachable path length doubles per round —
-    O(log diameter) rounds. Right for Spark, where per-round fixed cost
-    (shuffle + checkpoint + scheduling) dominates: a depth-40 chain closes
-    in ~6 rounds instead of 40.
-    mode='linear': classic right-linear semi-naive (delta composed with the
-    base edges) — fewer duplicate derivations per round; preferable when the
-    closure dwarfs memory and rounds are cheap relative to join width.
+    Each round composes the delta with the FULL accumulated closure, so
+    reachable path length doubles per round — O(log diameter) rounds. Right
+    for Spark, where per-round fixed cost (shuffle + checkpoint +
+    scheduling) dominates: a depth-40 chain closes in ~6 rounds instead of
+    40.
     """
     ensure_iteration_confs(edges)
     groups = list(group_cols or [])
@@ -185,18 +179,12 @@ def transitive_closure(
         out = _driver_tc(base, child, parent, max_iterations)
         if out is not None:
             return out
-    linear_side = (
-        _maybe_broadcast(base, broadcast_row_threshold) if mode == "linear" else None
-    )
 
     closure = base
     delta = base
     for _ in range(max_iterations):
         small = total_rows <= broadcast_row_threshold
-        if mode == "smart":
-            join_side = F.broadcast(closure) if small else closure
-        else:
-            join_side = linear_side
+        join_side = F.broadcast(closure) if small else closure
         cond = F.col(f"d.{parent}") == F.col(f"e.{child}")
         for g in groups:
             cond = cond & (F.col(f"d.{g}") == F.col(f"e.{g}"))
@@ -234,45 +222,181 @@ def transitive_closure(
     )
 
 
-def _driver_incremental_tc(
-    old_tc: DataFrame, delta_edges: DataFrame, max_iterations: int
-) -> tuple[DataFrame, DataFrame] | None:
-    """Driver fast path for incremental_tc: pull the (vocabulary-sized,
-    caller-bounded) closure + delta, close in one pass, ship back ONLY the
-    delta pairs — new_tc stays the old frame plus a local-relation union, so
-    the persisted/parquet anchoring of the accumulated closure is untouched.
-    Returns None to fall back (nulls)."""
-    import pandas as pd
+# Packed pair keys: sub in the high 32 bits, sup's two's-complement bits in
+# the low 32, so sorted keys order by (sub, sup) and the keys of one sub are
+# one contiguous range. Every int32 token packs, negative ones included.
+_LOW32 = np.int64(0xFFFFFFFF)
 
-    old_pdf = old_tc.select("sub", "sup").toPandas()
-    d_pdf = delta_edges.select("sub", "sup").toPandas()
-    if (
-        old_pdf["sub"].isnull().any()
-        or old_pdf["sup"].isnull().any()
-        or d_pdf["sub"].isnull().any()
-        or d_pdf["sup"].isnull().any()
-    ):
+
+def _pack(hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    return (hi.astype(np.int64) << 32) | (lo.astype(np.int64) & _LOW32)
+
+
+def _unpack(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    return (keys >> 32).astype(np.int32), _low(keys)
+
+
+def _low(keys: np.ndarray) -> np.ndarray:
+    # the int32 cast keeps the low 32 bits: the original signed token
+    return keys.astype(np.int32)
+
+
+def _member(keys: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Which of `q` are in the sorted `keys`."""
+    pos = np.searchsorted(keys, q)
+    return keys[np.minimum(pos, len(keys) - 1)] == q if len(keys) else np.zeros(len(q), bool)
+
+
+def _ranges(keys: np.ndarray, nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(start, length) of the range of sorted `keys` whose high half is each
+    of `nodes`."""
+    base = nodes.astype(np.int64) << 32
+    lo = np.searchsorted(keys, base, "left")
+    return lo, np.searchsorted(keys, base | _LOW32, "right") - lo
+
+
+def _expand(keys: np.ndarray, nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(index into nodes, position in keys) of every key of sorted `keys`
+    whose high half is one of `nodes`: one range lookup per node."""
+    lo, n = _ranges(keys, nodes)
+    owner = np.repeat(np.arange(len(nodes)), n)
+    return owner, np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
+
+
+def _close_packed(keys: np.ndarray) -> np.ndarray:
+    """Transitive closure of packed edges (sorted, unique): each round
+    composes the delta with the accumulated closure, as transitive_closure
+    does."""
+    closure = delta = keys
+    while len(delta):
+        x, y = _unpack(delta)
+        owner, pos = _expand(closure, y)
+        grown = np.unique(_pack(x[owner], _low(closure[pos])))
+        delta = grown[~_member(closure, grown)]
+        closure = np.union1d(closure, delta)
+    return closure
+
+
+class ClosureIndex:
+    """A transitively closed (sub, sup) relation held on the driver as two
+    sorted packed int64 arrays: `fwd` (sub<<32|sup) and `bwd` (sup<<32|sub),
+    16 bytes per pair. Ancestors of a class are one range of `fwd`,
+    descendants one range of `bwd`. Immutable: `extend` returns a new index,
+    whose `added` holds the packed (sub<<32|sup) pairs it added over the
+    index it extended (every pair, for an index built by `of_pairs`)."""
+
+    def __init__(self, fwd: np.ndarray, bwd: np.ndarray, added: np.ndarray):
+        self.fwd, self.bwd, self.added = fwd, bwd, added
+
+    @classmethod
+    def of_pairs(cls, sub: np.ndarray, sup: np.ndarray) -> ClosureIndex:
+        fwd = np.unique(_pack(sub, sup))
+        s, p = _unpack(fwd)
+        return cls(fwd, np.sort(_pack(p, s)), fwd)
+
+    @classmethod
+    def pull(cls, tc: DataFrame) -> ClosureIndex | None:
+        """The index of a closed (sub, sup) frame: one job. None if a token
+        is null."""
+        pairs = _pull_pairs(tc)
+        return None if pairs is None else cls.of_pairs(*pairs)
+
+    def __len__(self) -> int:
+        return len(self.fwd)
+
+    def pairs(self) -> tuple[np.ndarray, np.ndarray]:
+        """(sub, sup) token arrays of every pair."""
+        return _unpack(self.fwd)
+
+    def added_pairs(self) -> tuple[np.ndarray, np.ndarray]:
+        """(sub, sup) token arrays of the pairs in `added`."""
+        return _unpack(self.added)
+
+    def extend(self, sub: np.ndarray, sup: np.ndarray, max_pairs: int) -> ClosureIndex | None:
+        """The closure of this relation plus the edges (sub[i], sup[i]).
+
+        A new pair's path uses at least one new edge u->v; since the old
+        relation is closed, it is x ->* u -> v ->* y with old paths (or none)
+        at both ends, so one new edge adds ({u} + desc(u)) x ({v} + anc(v)).
+        Several new edges chain through old paths: an edge i is followed by
+        every edge whose tail is v_i or one of its ancestors, and the first
+        tail u and last head v of each chain span the pairs above. The pairs
+        already present are dropped.
+
+        None, to fall back, if the generated pairs or the grown closure
+        would pass `max_pairs`."""
+        keys = np.unique(_pack(sub, sup))
+        keys = keys[~_member(self.fwd, keys)]  # entailed edges add nothing
+        if not len(keys):
+            return ClosureIndex(self.fwd, self.bwd, keys)
+        u, v = _unpack(keys)
+        # chains of new edges: i -> j when u_j is v_i or an ancestor of v_i
+        # (keys sort by tail, so the edges of one tail are one range of keys)
+        owner, pos = _expand(self.fwd, v)
+        via = np.concatenate([np.arange(len(v)), owner])
+        step, nxt = _expand(keys, np.concatenate([v, _low(self.fwd[pos])]))
+        chains = _close_packed(np.unique(_pack(via[step], nxt)))
+        every = np.arange(len(keys))
+        first = np.concatenate([every, chains >> 32])
+        last = np.concatenate([every, _low(chains)])
+        # (first tail, last head or an ancestor of it) ...
+        spans = np.unique(_pack(u[first], v[last]))
+        t, h = _unpack(spans)
+        owner, pos = _expand(self.fwd, h)
+        spans = np.union1d(spans, _pack(t[owner], _low(self.fwd[pos])))
+        # ... with the tail or any of its descendants in front
+        t, y = _unpack(spans)
+        if len(spans) + int(_ranges(self.bwd, t)[1].sum()) > max_pairs:
+            return None
+        owner, pos = _expand(self.bwd, t)
+        new = np.union1d(spans, _pack(_low(self.bwd[pos]), y[owner]))
+        new = new[~_member(self.fwd, new)]
+        if len(self) + len(new) > max_pairs:
+            return None
+        s, p = _unpack(new)
+        rev = np.sort(_pack(p, s))
+        return ClosureIndex(
+            np.insert(self.fwd, np.searchsorted(self.fwd, new), new),
+            np.insert(self.bwd, np.searchsorted(self.bwd, rev), rev),
+            new,
+        )
+
+
+def _pull_pairs(df: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
+    """(sub, sup) token arrays of a frame, through Arrow: one job. None if a
+    token is null (SQL joins never compose a null; packed keys would)."""
+    t = df.select("sub", "sup").toArrow()
+    if t.column("sub").null_count or t.column("sup").null_count:
         return None
-    old_set: dict = {}
-    for c, p in zip(old_pdf["sub"].tolist(), old_pdf["sup"].tolist()):
-        old_set.setdefault(c, set()).add(p)
-    adj = {x: set(ys) for x, ys in old_set.items()}
-    for c, p in zip(d_pdf["sub"].tolist(), d_pdf["sup"].tolist()):
-        adj.setdefault(c, set()).add(p)
-    closure = _driver_close_adj(adj, max_iterations)
-    if closure is None:
+    return t.column("sub").to_numpy(), t.column("sup").to_numpy()
+
+
+def _pairs_frame(spark, keys: np.ndarray, template: DataFrame) -> DataFrame:
+    """Packed pairs as a local relation with `template`'s (sub, sup) schema:
+    built from an Arrow table, so no Python row objects and no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = template.select("sub", "sup").schema
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array(c).cast(f.type) for c, f in zip(_unpack(keys), arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema=schema)
+
+
+def _driver_incremental_tc(
+    old_tc: DataFrame, delta_edges: DataFrame, index: ClosureIndex, max_pairs: int
+) -> tuple[DataFrame, DataFrame, ClosureIndex] | None:
+    """The index-served incremental_tc: pull the delta-sized edge frame (the
+    call's one job), extend the index, and ship only the new pairs back, as
+    a local relation unioned onto the old frame, so the persisted anchoring
+    of the accumulated closure is untouched. None to fall back (a null
+    token, or a closure past `max_pairs`)."""
+    edges = _pull_pairs(delta_edges)
+    new_index = None if edges is None else index.extend(*edges, max_pairs)
+    if new_index is None:
         return None
-    delta = {
-        x: ys - old_set.get(x, set())
-        for x, ys in closure.items()
-    }
-    delta = {x: ys for x, ys in delta.items() if ys}
-    spark = old_tc.sparkSession
-    delta_df = _pairs_to_df(spark, delta, old_tc, "sub", "sup").localCheckpoint(
-        eager=False
-    )
-    new_tc = old_tc.unionByName(delta_df).localCheckpoint(eager=False)
-    return new_tc, delta_df
+    delta_df = _pairs_frame(old_tc.sparkSession, new_index.added, old_tc)
+    return old_tc.unionByName(delta_df), delta_df, new_index
 
 
 def incremental_tc(
@@ -281,24 +405,27 @@ def incremental_tc(
     max_iterations: int = 200,
     broadcast_row_threshold: int = 5_000_000,
     old_tc_rows: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(new_tc, delta_pairs): extend an already-closed relation (columns
-    sub/sup) with new edges by two-sided delta composition — new pairs are
-    exactly those with >= 1 new edge on some path. delta_pairs = new_tc
-    minus old_tc.
+    index: ClosureIndex | None = None,
+) -> tuple[DataFrame, DataFrame, ClosureIndex | None]:
+    """(new_tc, delta_pairs, new_index): extend an already-closed relation
+    (columns sub/sup) with new edges — new pairs are exactly those with
+    >= 1 new edge on some path. delta_pairs = new_tc minus old_tc.
+
+    With `index` (old_tc's ClosureIndex) the call is served on the driver:
+    one job, no distributed round, and new_index is the extended index. If
+    that path falls back (a null token, or a closure past
+    broadcast_row_threshold pairs) or no index is given, the distributed
+    two-sided delta composition runs and new_index is None: the old index
+    no longer matches the closure.
 
     `old_tc_rows` (a caller-supplied row count or upper bound, e.g. the
-    streaming engine's running _n_sc_star stat) enables the driver fast
-    path below _DRIVER_TC_EDGES — same rationale and bound as
-    transitive_closure's — and replaces the per-round closure count behind
-    the broadcast decision.
-
-    Per-round work on the distributed path is delta x closure joins plus a
-    delta-sized dedup; the closure itself is only ever UNIONED (the delta is
-    anti-joined disjoint first), never re-deduplicated — no O(closure)
-    shuffle per round."""
-    if old_tc_rows is not None and old_tc_rows <= _DRIVER_TC_EDGES:
-        out = _driver_incremental_tc(old_tc, delta_edges, max_iterations)
+    streaming engine's running _n_sc_star stat) replaces the per-round
+    closure count behind the broadcast decision. Per-round work on the
+    distributed path is delta x closure joins plus a delta-sized dedup; the
+    closure itself is only ever UNIONED (the delta is anti-joined disjoint
+    first), never re-deduplicated — no O(closure) shuffle per round."""
+    if index is not None:
+        out = _driver_incremental_tc(old_tc, delta_edges, index, broadcast_row_threshold)
         if out is not None:
             return out
     rows = old_tc_rows if old_tc_rows is not None else old_tc.count()
@@ -315,7 +442,7 @@ def incremental_tc(
     for _ in range(max_iterations):
         n_new = delta.count()
         if n_new == 0:
-            return closure, all_delta
+            return closure, all_delta, None
         rows += n_new
         small = 0 < broadcast_row_threshold and rows <= broadcast_row_threshold
         side = F.broadcast(closure) if small else closure

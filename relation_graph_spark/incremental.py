@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
+    ClosureIndex,
     FixpointDidNotConverge,
     reflexive,
     transitive_closure,
@@ -293,7 +294,8 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
     """Populate the in-memory derived-frame/stat cache if absent (fresh
     restart or the first batch after the bootstrap). One-time O(closure)
     cost per process, not per batch: every missing running stat comes from
-    ONE union-aggregate job."""
+    ONE union-aggregate job, and the class closure's ClosureIndex from one
+    pull."""
     if "_sc_star" not in state:
         state["_sc_star"] = _sc_star_of(
             state["sc_tc"], state["classes"]
@@ -337,16 +339,25 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
                 ("some", ("s", "p", "f")),
             )
         ]
-    if not probes:
-        return
-    rows = _union(probes).collect()
-    for r in rows:
-        if r["key"] != "_max_token":
-            state[r["key"]] = r["n"]
-    if "_max_token" not in state:
-        state["_max_token"] = max(
-            (r["m"] for r in rows if r["key"] == "_max_token" and r["m"] is not None),
-            default=None,
+    if probes:
+        rows = _union(probes).collect()
+        for r in rows:
+            if r["key"] != "_max_token":
+                state[r["key"]] = r["n"]
+        if "_max_token" not in state:
+            state["_max_token"] = max(
+                (r["m"] for r in rows if r["key"] == "_max_token" and r["m"] is not None),
+                default=None,
+            )
+    if "_sc_index" not in state:
+        # the driver-resident class closure (one pull) while the star
+        # closure fits the broadcast bound, the regime in which the derive
+        # broadcasts the whole closure anyway; None = none for this process
+        # (the closure only grows, so a closure past the bound never fits
+        # again)
+        thr = cfg.broadcast_row_threshold
+        state["_sc_index"] = (
+            ClosureIndex.pull(state["sc_tc"]) if 0 < thr and state["_n_sc_star"] <= thr else None
         )
 
 
@@ -384,11 +395,13 @@ def incremental_tc(
     delta_edges: DataFrame,
     cfg: RGConfig,
     old_tc_rows: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+    index: ClosureIndex | None = None,
+) -> tuple[DataFrame, DataFrame, ClosureIndex | None]:
     """cfg-shaped wrapper over closure.incremental_tc (shared with the R4
-    feedback loop in materialize_edges). `old_tc_rows` (or an upper bound,
-    e.g. the running _n_sc_star stat) enables the driver fast path and the
-    count-free broadcast decision."""
+    feedback loop in materialize_edges). `index` (old_tc's ClosureIndex)
+    serves the call on the driver; `old_tc_rows` (or an upper bound, e.g.
+    the running _n_sc_star stat) makes the distributed path's broadcast
+    decision count-free."""
     from relation_graph_spark.closure import incremental_tc as _itc
 
     return _itc(
@@ -397,6 +410,7 @@ def incremental_tc(
         max_iterations=cfg.max_iterations,
         broadcast_row_threshold=cfg.broadcast_row_threshold,
         old_tc_rows=old_tc_rows,
+        index=index,
     )
 
 
@@ -597,8 +611,14 @@ def _settle(
     return _untag(out, "rel"), _untag(out, "sc"), {"rel": n.get("rel", 0), "sc": n.get("sc", 0)}
 
 
-def _star_stats(d_star: DataFrame) -> tuple[int, int]:
-    """(rows, rows reaching owl:Nothing) of a closure delta — one job."""
+def _star_stats(d_star: DataFrame, index: ClosureIndex | None) -> tuple[int, int]:
+    """(rows, rows reaching owl:Nothing) of a closure delta minus its self
+    and TOP pairs: from the pairs `index` added when it served the TC call
+    (no job), else one job."""
+    if index is not None:
+        sub, sup = index.added_pairs()
+        star = (sub != sup) & (sup != T.TOP)
+        return int(star.sum()), int((star & (sup == T.BOT)).sum())
     r = (
         d_star.coalesce(1)
         .selectExpr("count(1) AS n", f"sum(CASE WHEN sup = {T.BOT} THEN 1 ELSE 0 END) AS bot")
@@ -671,31 +691,51 @@ def apply_delta(
         .localCheckpoint(eager=False)
     )
     stats = {
-        r["frame"]: (r["n"], r["mx"])
+        r["frame"]: r
         for r in fold.coalesce(1)
         .groupBy("frame")
         .agg(
             F.expr("count(1) AS n"),
             # individuals never enter a closure side: no packability bound
             F.expr("max(CASE WHEN frame != 'assertions' THEN greatest(t0, t1, t2) END) AS mx"),
+            # new classes among TOP / owl:Nothing: their star rows (below)
+            F.expr(f"count(CASE WHEN t0 = {T.TOP} THEN 1 END) AS top"),
+            F.expr(f"count(CASE WHEN t0 = {T.BOT} THEN 1 END) AS bot"),
         )
         .collect()
     }
-    n_d = {n: stats.get(n, (0, None))[0] for n in _TOLD_FRAMES}
-    d_max = max((m for _n, m in stats.values() if m is not None), default=None)
+    n_d = {n: stats[n]["n"] if n in stats else 0 for n in _TOLD_FRAMES}
+    d_max = max((r["mx"] for r in stats.values() if r["mx"] is not None), default=None)
     d = {n: _untag(fold, n) for n in _TOLD_FRAMES}
 
     classes_new = state["classes"].unionByName(d["classes"])
     props_new = state["props"].unionByName(d["props"])
     sc_new = state["sc"].unionByName(d["sc"])
+    index = state["_sc_index"]
+
+    def close(
+        sc_tc: DataFrame, edges: DataFrame, rows: int
+    ) -> tuple[DataFrame, DataFrame, DataFrame, tuple[int, int]]:
+        """Incremental TC of `edges` onto `sc_tc`, served by the class
+        closure's index while the star closure (`rows`, which upper-bounds
+        |sc_tc|) fits the broadcast bound; a call the index did not serve
+        drops it. Returns (new tc, tc delta, its star rows, their stats)."""
+        nonlocal index
+        tc_new, d_tc, index = incremental_tc(
+            sc_tc, edges, cfg, old_tc_rows=rows, index=index if fits(rows) else None
+        )
+        d_star = d_tc.where(f"sub != sup AND sup != {T.TOP}")
+        return tc_new, d_tc, d_star, _star_stats(d_star, index)
+
     if n_d["sc"]:
-        # _n_sc_star (tc + reflexive + top rows) upper-bounds |sc_tc|: a
-        # valid hint for the driver fast path / broadcast decision
-        sc_tc_new, d_tc = incremental_tc(
-            state["sc_tc"], d["sc"], cfg, old_tc_rows=state["_n_sc_star"]
+        sc_tc_new, d_tc, d_star_tc, (n_star_total, bot_new) = close(
+            state["sc_tc"], d["sc"], state["_n_sc_star"]
         )
     else:
-        sc_tc_new, d_tc = state["sc_tc"], d["sc"]  # no new edge, no new pair
+        # no new edge, no new pair
+        sc_tc_new, d_tc, d_star_tc, n_star_total, bot_new = (
+            state["sc_tc"], d["sc"], d["sc"], 0, 0
+        )
 
     sp_new = state["sp"].unionByName(d["sp"])
     sp_changed = n_d["sp"] > 0
@@ -728,14 +768,17 @@ def apply_delta(
     # The pieces are pairwise disjoint by construction (d_tc minus its
     # self-pairs and TOP-pairs — both already covered by the reflexive/top
     # rows of whichever batch introduced the class), so sc_star extends by
-    # plain union, no O(closure) dedup.
+    # plain union, no O(closure) dedup. The class rows' stats come from the
+    # told fold's: one (c, c) row per new class but TOP, one (c, TOP) row
+    # per new class.
     d_classes = d["classes"]
-    d_star = (
-        d_tc.where(f"sub != sup AND sup != {T.TOP}")
-        .unionByName(d_classes.where(f"c != {T.TOP}").selectExpr("c AS sub", "c AS sup"))
-        .unionByName(d_classes.selectExpr("c AS sub", f"CAST({T.TOP} AS INT) AS sup"))
-    )
-    n_star_total, bot_new = _star_stats(d_star)
+    d_star = d_star_tc.unionByName(
+        d_classes.where(f"c != {T.TOP}").selectExpr("c AS sub", "c AS sup")
+    ).unionByName(d_classes.selectExpr("c AS sub", f"CAST({T.TOP} AS INT) AS sup"))
+    if n_d["classes"]:
+        new_classes = stats["classes"]
+        n_star_total += 2 * new_classes["n"] - new_classes["top"]
+        bot_new += new_classes["bot"]
     sc_star_new = state["_sc_star"].unionByName(d_star)
 
     # running side stats: broadcast decision + packability without a
@@ -829,17 +872,12 @@ def apply_delta(
             break
         sc_feedback.append(new_sc)
         sc_new = sc_new.unionByName(new_sc)
-        sc_tc_new, d_tc_r = incremental_tc(
-            sc_tc_new,
-            new_sc,
-            cfg,
-            old_tc_rows=state["_n_sc_star"] + n_star_total,
-        )
-        d_tc_parts.append(d_tc_r)
         # classes are fixed during feedback, so the closure delta minus
         # self/TOP pairs is disjoint from sc_star — plain union
-        d_star_r = d_tc_r.where(f"sub != sup AND sup != {T.TOP}")
-        n_star_r, bot_r = _star_stats(d_star_r)
+        sc_tc_new, d_tc_r, d_star_r, (n_star_r, bot_r) = close(
+            sc_tc_new, new_sc, state["_n_sc_star"] + n_star_total
+        )
+        d_tc_parts.append(d_tc_r)
         if n_star_r == 0:
             break  # facts were already entailed; no new rel can arise
         bot_new += bot_r
@@ -885,6 +923,7 @@ def apply_delta(
         # computing unsat
         "_has_bot": True if bot_new > 0 else state.get("_has_bot"),
         "_max_token": max_tok,
+        "_sc_index": index,
     }
     for key in ("_state_roots", "_state_tagged"):
         if key in state:

@@ -372,7 +372,7 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
                     sc_star, some, sp_star, thr, **dr_kw
                 ).localCheckpoint(eager=False)
                 continue
-            sc_tc, d_tc = incremental_tc(
+            sc_tc, d_tc, _ = incremental_tc(
                 sc_tc, new_sc, max_iterations=cfg.max_iterations,
                 broadcast_row_threshold=thr,
             )

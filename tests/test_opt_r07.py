@@ -3,7 +3,8 @@ result-identical to the path it replaced.
 
 - driver-side transitive closure (closure._driver_tc fast path) vs the
   distributed semi-naive loop, on a graph with cycles, diamonds and chains;
-- driver-side incremental_tc vs the distributed two-sided delta composition;
+- index-served incremental_tc (closure.ClosureIndex) vs the distributed
+  two-sided delta composition;
 - fused (staged=False) vs staged derive_relations;
 - single-pass told_tables classes/props vs the per-branch union definition.
 """
@@ -14,7 +15,7 @@ import pyspark.sql.functions as F
 import pytest
 
 import relation_graph_spark.closure as C
-from relation_graph_spark.closure import incremental_tc, transitive_closure
+from relation_graph_spark.closure import ClosureIndex, incremental_tc, transitive_closure
 
 
 @pytest.fixture()
@@ -60,19 +61,21 @@ def test_driver_tc_falls_back_on_nulls(spark, force_paths):
     assert got == want
 
 
-def test_driver_incremental_tc_equals_distributed(spark, force_paths):
+def test_driver_incremental_tc_equals_distributed(spark):
     old = transitive_closure(
         spark.createDataFrame([(1, 2), (2, 3)], "sub: int, sup: int"),
         child="sub",
         parent="sup",
     )
     delta = spark.createDataFrame([(3, 4), (0, 1), (4, 1)], "sub: int, sup: int")
-    force_paths(10_000)
-    tc_a, d_a = incremental_tc(old, delta, old_tc_rows=3)
-    force_paths(0)
-    tc_b, d_b = incremental_tc(old, delta, old_tc_rows=3)
+    tc_a, d_a, index = incremental_tc(old, delta, old_tc_rows=3, index=ClosureIndex.pull(old))
+    assert index is not None  # the index served the call
+    tc_b, d_b, dropped = incremental_tc(old, delta, old_tc_rows=3)
+    assert dropped is None
     assert {tuple(r) for r in tc_a.collect()} == {tuple(r) for r in tc_b.collect()}
     assert {tuple(r) for r in d_a.collect()} == {tuple(r) for r in d_b.collect()}
+    sub, sup = index.pairs()
+    assert set(zip(sub.tolist(), sup.tolist())) == {tuple(r) for r in tc_b.collect()}
     # the 3->4->1 edges close a cycle through 1..4: self-pairs must appear
     assert (1, 1) in {tuple(r) for r in d_a.collect()}
 

@@ -1,8 +1,9 @@
 """The streaming state store's tagged layout and the per-batch fast path
 built on it: every persisted frame reads back under the pinned schema, the
 store refuses the old per-frame layout, the shared-scan delta derive equals
-the one-sided passes it replaces, and a steady micro-batch stays inside its
-Spark job budget."""
+the one-sided passes it replaces, the class closure's driver-resident index
+gives way to the distributed TC past its bound, and a steady micro-batch
+stays inside its Spark job budget."""
 
 import glob
 import json
@@ -14,7 +15,6 @@ from dataclasses import replace
 import pyarrow.parquet as pq
 import pytest
 
-from relation_graph_spark import closure
 from relation_graph_spark import fixtures as FX
 from relation_graph_spark import incremental as inc
 from relation_graph_spark import tokens as T
@@ -72,6 +72,26 @@ def _sink(job):
     return triples(job.result_edges())
 
 
+def _tc_paths(monkeypatch):
+    """{batch id: [served by the class closure's index?] per incremental TC
+    call}, recorded from every stream job run while the patch holds."""
+    paths, batch = {}, []
+    process, tc = IncrementalClosureJob.process_batch, inc.incremental_tc
+
+    def tracked(self, df, batch_id):
+        batch[:] = [batch_id]
+        return process(self, df, batch_id)
+
+    def recorded(*args, **kw):
+        out = tc(*args, **kw)
+        paths.setdefault(batch[0], []).append(out[2] is not None)
+        return out
+
+    monkeypatch.setattr(IncrementalClosureJob, "process_batch", tracked)
+    monkeypatch.setattr(inc, "incremental_tc", recorded)
+    return paths
+
+
 # ------------------------------------------------ (i) pinned-schema read back
 
 
@@ -104,9 +124,11 @@ def _assert_int32_store(spark, state_dir):
 @pytest.mark.parametrize("tc_path", ["driver", "distributed"])
 def test_every_persisted_frame_reads_back_pinned(spark, tmp_path, monkeypatch, tc_path):
     """Bootstrap snapshot, plain delta, consolidated delta and R4 feedback
-    batches, on both sides of the TC fork: no int32 -> bigint drift."""
-    if tc_path == "distributed":
-        monkeypatch.setattr(closure, "_DRIVER_TC_EDGES", 0)
+    batches, on both sides of the TC fork: no int32 -> bigint drift. The
+    index is kept only while the star closure fits the broadcast bound, so
+    a zero bound sends every TC call down the distributed path."""
+    cfg = CFG if tc_path == "driver" else replace(CFG, broadcast_row_threshold=0)
+    paths = _tc_paths(monkeypatch)
     batches = _feedback_stream(3)
     stage, inp = str(tmp_path / "stage"), str(tmp_path / "in")
     os.makedirs(inp)
@@ -118,7 +140,7 @@ def test_every_persisted_frame_reads_back_pinned(spark, tmp_path, monkeypatch, t
     def run(upto):
         for f in files[:upto]:
             shutil.copy2(os.path.join(stage, f), os.path.join(inp, f))
-        job = IncrementalClosureJob(spark, inp, work, CFG, compact_every=100, delta_fold_every=2)
+        job = IncrementalClosureJob(spark, inp, work, cfg, compact_every=100, delta_fold_every=2)
         job.run_available(max_files_per_trigger=1)
         return job
 
@@ -133,6 +155,9 @@ def test_every_persisted_frame_reads_back_pinned(spark, tmp_path, monkeypatch, t
         df = loaded[inc.DERIVED_FRAMES.get(name, name)]
         assert set(dict(df.dtypes).values()) == {"int"}, (name, df.dtypes)
     assert _sink(job) == _golden(spark, batches)
+    # every delta batch ran incremental TC, all of it on the forced path
+    assert sorted(paths) == [1, 2, 3], paths
+    assert {p for calls in paths.values() for p in calls} == {tc_path == "driver"}, paths
 
 
 # ------------------------------------------------------ (ii) format version
@@ -316,13 +341,40 @@ def test_stream_without_broadcasts_equals_batch(spark, tmp_path):
     assert got == _golden(spark, batches)
 
 
+def test_index_dropped_past_bound_mid_stream(spark, tmp_path, monkeypatch):
+    """A class closure that grows past the index's bound mid-stream: the
+    batch that crosses it drops the index after its first TC call, and every
+    later call runs distributed. The live sink still equals the batch
+    output."""
+    paths = _tc_paths(monkeypatch)
+    batches = _feedback_stream(4)
+    inp = str(tmp_path / "in")
+    _write_batches(inp, batches, "fb")
+    job = IncrementalClosureJob(spark, inp, str(tmp_path / "work"), CFG)
+    process = job.process_batch
+
+    def bounded(df, batch_id):
+        if batch_id == 2:
+            # the bound at the star closure's size: the batch's first TC
+            # call still fits, the R4 round's (after its new pairs) does not
+            job.cfg = replace(CFG, broadcast_row_threshold=job._state["_n_sc_star"])
+        process(df, batch_id)
+
+    job.process_batch = bounded
+    job.run_available(max_files_per_trigger=1)
+    assert paths == {1: [True, True], 2: [True, False], 3: [False, False], 4: [False, False]}
+    assert job._state["_sc_index"] is None
+    assert _sink(job) == _golden(spark, batches)
+
+
 # ------------------------------------------------------- per-batch job budget
 
 # Spark jobs a steady toy feedback batch may start (incremental TC, one R4
-# round, state persist, sink commit). The engine starts 39-42 on this toy
-# (114-125 with one job per frame and per probe); the margin absorbs
-# plan-shape noise, not a return of per-frame jobs.
-STEADY_BATCH_JOB_BUDGET = 46
+# round, state persist, sink commit). The engine starts 35 on this toy
+# (39-42 when each TC call pulled the whole closure and each closure delta
+# was counted by a job; 114-125 with one job per frame and per probe); the
+# margin absorbs plan-shape noise, not a return of per-frame jobs.
+STEADY_BATCH_JOB_BUDGET = 39
 
 
 def test_steady_batch_job_budget(spark, tmp_path, monkeypatch):
@@ -350,9 +402,22 @@ def test_steady_batch_job_budget(spark, tmp_path, monkeypatch):
         return real_settle(*args, **kw)
 
     monkeypatch.setattr(inc, "_settle", settle)
+    # every incremental TC call is served by the class closure's index, at
+    # one job (the pull of its edge delta)
+    tc_jobs = []
+    real_tc = inc.incremental_tc
+
+    def tc(*args, **kw):
+        j0 = dag.nextJobId()
+        out = real_tc(*args, **kw)
+        tc_jobs.append((out[2] is not None, dag.nextJobId() - j0))
+        return out
+
+    monkeypatch.setattr(inc, "incremental_tc", tc)
     job.run_available(max_files_per_trigger=1)
     assert sorted(jobs) == list(range(len(batches)))
     steady = [jobs[b] for b in range(2, len(batches))]
     assert max(steady) <= STEADY_BATCH_JOB_BUDGET, jobs
     assert narrow and all(narrow), narrow
+    assert tc_jobs and all(served and n <= 1 for served, n in tc_jobs), tc_jobs
     assert _sink(job) == _golden(spark, batches)

@@ -966,7 +966,7 @@ def test_streaming_equivalence_feedback_delta_path(spark, tmp_path):
     assert deltas == ["delta-1", "delta-2", "delta-3"]
 
 
-def test_streaming_equivalence_feedback_resume(spark, tmp_path):
+def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
     """Kill/restart mid-stream with standing equivalence definitions: the
     reloaded state (told + R4-derived sc facts) must finish identically."""
     inp_stage = str(tmp_path / "stage")
@@ -997,11 +997,35 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path):
         has_bot.append(job2._state["_has_bot"])
 
     job2.process_batch = recording
+    # the restarted job rebuilds the class closure's index once, from the
+    # stored sc_tc
+    from relation_graph_spark.closure import ClosureIndex
+
+    pulls = []
+    pull = ClosureIndex.pull.__func__
+
+    def recorded_pull(cls, tc):
+        index = pull(cls, tc)
+        pulls.append((index, {tuple(r) for r in tc.collect()}))
+        return index
+
+    monkeypatch.setattr(ClosureIndex, "pull", classmethod(recorded_pull))
     job2.run_available(max_files_per_trigger=1)
     assert _sink_triples(job2) == _equiv_golden(spark)
     # the restart seeds the owl:Nothing stat instead of leaving it unknown
     # (unknown = every later batch recomputes unsat in full)
     assert has_bot and has_bot[0] is False
+
+    def pairs(index):
+        sub, sup = index.pairs()
+        return set(zip(sub.tolist(), sup.tolist()))
+
+    assert len(pulls) == 1 and pulls[0][0] is not None
+    assert pairs(pulls[0][0]) == pulls[0][1]
+    # ... and keeps it equal to the stored closure through later batches
+    assert pairs(job2._state["_sc_index"]) == {
+        tuple(r) for r in job2._state["sc_tc"].collect()
+    }
 
 
 def test_lineage_running_totals(spark, tmp_path):
