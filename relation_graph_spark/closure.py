@@ -24,10 +24,14 @@ Properties that matter at 100 TB:
 - cycles (e.g. from named-class equivalences) terminate naturally: the
   anti-join makes every delta strictly new.
 
-A stream that extends one vocabulary-sized closure batch after batch keeps
-it on the driver as well, as a ``ClosureIndex`` (the reference's in-place
-extended maps, packed into sorted int64 arrays), and ``incremental_tc``
-extends that index instead of running distributed rounds.
+A vocabulary-sized closure is computed on the driver instead, over sorted
+packed int64 arrays (the reference's in-memory maps, packed): a batch
+``transitive_closure`` of a small edge set closes there in one pass, and a
+stream that extends one closure batch after batch keeps it as a
+``ClosureIndex``, which ``incremental_tc`` extends instead of running
+distributed rounds. Both are bounded by ``broadcast_row_threshold`` pairs.
+The star closures both engines build (``star_closure``, ``property_star``)
+live here too.
 """
 
 from __future__ import annotations
@@ -38,98 +42,50 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from relation_graph_spark import tokens as T
+
 
 class FixpointDidNotConverge(RuntimeError):
     pass
 
 
-# Driver fast path of transitive_closure (round-7 optimization): hierarchy
-# edge sets at or below this row count are closed in one driver-side pass
-# instead of N distributed semi-naive rounds. Rationale (guide §1.2 "the
-# distributed algorithm"): each distributed round costs a broadcast build +
-# a dedup shuffle + an anti-join + a count job — ~0.5-1s of fixed cost per
-# round on any cluster — while a
-# vocabulary-sized hierarchy (the ONLY thing this engine ever closes without
-# group scoping: ontology class/property graphs, which the reference holds in
-# Whelk's in-memory maps) closes in milliseconds in one process. The driver
-# pull is bounded by the same order as broadcast_row_threshold (the closure
-# was going to be collected for a broadcast join anyway); above the
-# threshold, or if the closure blows past RGS_DRIVER_TC_MAX_PAIRS mid-way,
-# the distributed path runs unchanged. Group-scoped closures (per-window /
-# per-session over event data — stream-scale, not vocabulary-scale) never
+# Driver fast path of transitive_closure: an ungrouped edge set at or below
+# this row count is pulled to the driver and closed there over packed int64
+# keys (_close_packed, the algorithm ClosureIndex is built on) instead of in
+# distributed semi-naive rounds. Each distributed round costs a broadcast
+# build, a dedup shuffle, an anti-join and a count job, ~0.5-1 s of fixed
+# cost on any cluster, while a vocabulary-sized hierarchy (ontology class or
+# property graphs, which the reference holds in Whelk's in-memory maps)
+# closes in milliseconds in one process. The closure is bounded by
+# broadcast_row_threshold pairs, the bound the stream's ClosureIndex uses
+# too (a closure that fits was going to be broadcast anyway); past it, or on
+# a null or non-int32 token, the distributed path runs unchanged.
+# Group-scoped closures (per-window / per-session over event data) never
 # take this path.
 _DRIVER_TC_EDGES = int(os.environ.get("RGS_DRIVER_TC_EDGES", "50000"))
-_DRIVER_TC_MAX_PAIRS = int(os.environ.get("RGS_DRIVER_TC_MAX_PAIRS", "12000000"))
+
+_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
+_INT32 = np.iinfo(np.int32)
 
 
-def _driver_close_adj(adj: dict, max_iterations: int):
-    """Transitive closure of an adjacency dict {x: set(ys)} on the driver via
-    semi-naive 'smart' rounds (delta composed with the ACCUMULATED closure,
-    so reachable path length doubles per round — the same O(log diameter)
-    round bound callers of the distributed loop size max_iterations
-    against). Returns {x: set of reachable} or None if the result exceeds
-    _DRIVER_TC_MAX_PAIRS (caller falls back to the distributed path)."""
-    closure: dict = {x: set(ys) for x, ys in adj.items()}
-    delta = {x: set(ys) for x, ys in adj.items()}
-    total = sum(len(s) for s in closure.values())
-    for _ in range(max_iterations):
-        new: dict = {}
-        for x, ys in delta.items():
-            add: set = set()
-            for y in ys:
-                t = closure.get(y)
-                if t:
-                    add |= t
-            add -= closure.get(x, ())
-            if add:
-                new[x] = add
-                total += len(add)
-                if total > _DRIVER_TC_MAX_PAIRS:
-                    return None
-        if not new:
-            return closure
-        for x, a in new.items():
-            closure.setdefault(x, set()).update(a)
-        delta = new
-    raise FixpointDidNotConverge(
-        f"driver transitive closure did not converge in {max_iterations} iterations"
-    )
-
-
-def _pairs_to_df(spark, pairs_closure: dict, template: DataFrame, child: str, parent: str):
-    """{x: set(ys)} -> DataFrame with `template`'s (child, parent) schema."""
-    import pandas as pd
-
-    xs: list = []
-    zs: list = []
-    for x, s in pairs_closure.items():
-        xs.extend([x] * len(s))
-        zs.extend(s)
-    pdf = pd.DataFrame({child: xs, parent: zs})
-    types = dict(template.dtypes)
-    np_type = {"int": "int32", "bigint": "int64", "smallint": "int16"}
-    for c in (child, parent):
-        t = np_type.get(types[c])
-        if t:
-            pdf[c] = pdf[c].astype(t)
-    return spark.createDataFrame(pdf, schema=template.select(child, parent).schema)
-
-
-def _driver_tc(base: DataFrame, child: str, parent: str, max_iterations: int):
-    """Driver-side closure of a (deduplicated, materialized) edge frame.
-    Returns the closed DataFrame, or None to fall back (null keys — SQL join
-    semantics drop them from composition, a Python dict would not — or a
-    closure above the pair cap)."""
-    pdf = base.select(child, parent).toPandas()
-    if pdf[child].isnull().any() or pdf[parent].isnull().any():
+def _driver_tc(
+    base: DataFrame, child: str, parent: str, max_iterations: int, max_pairs: int
+) -> DataFrame | None:
+    """Driver-side closure of a (deduplicated, materialized) edge frame: pull
+    it, close it over packed keys, ship it back with the frame's schema.
+    None to fall back: a token that is null (SQL joins never compose one),
+    not of an integer type, or outside int32 (packing would truncate it), or
+    a closure past `max_pairs`."""
+    types = dict(base.dtypes)
+    if types[child] not in _INT_TYPES or types[parent] not in _INT_TYPES:
         return None
-    adj: dict = {}
-    for c, p in zip(pdf[child].tolist(), pdf[parent].tolist()):
-        adj.setdefault(c, set()).add(p)
-    closure = _driver_close_adj(adj, max_iterations)
+    pairs = _pull_pairs(base, child, parent)
+    if pairs is None or any(np.any((a < _INT32.min) | (a > _INT32.max)) for a in pairs):
+        return None
+    closure = _close_packed(np.unique(_pack(*pairs)), max_pairs, max_iterations)
     if closure is None:
         return None
-    return _pairs_to_df(base.sparkSession, closure, base, child, parent)
+    return _pairs_frame(base.sparkSession, closure, base, child, parent)
 
 
 def ensure_iteration_confs(df: DataFrame) -> None:
@@ -176,7 +132,7 @@ def transitive_closure(
     base = edges.select(*[F.col(c) for c in cols]).dropDuplicates().localCheckpoint(eager=False)
     total_rows = base.count()
     if not groups and 0 < total_rows <= _DRIVER_TC_EDGES:
-        out = _driver_tc(base, child, parent, max_iterations)
+        out = _driver_tc(base, child, parent, max_iterations, broadcast_row_threshold)
         if out is not None:
             return out
 
@@ -263,18 +219,27 @@ def _expand(keys: np.ndarray, nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray
     return owner, np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
 
 
-def _close_packed(keys: np.ndarray) -> np.ndarray:
+def _close_packed(keys: np.ndarray, max_pairs: int, max_iterations: int) -> np.ndarray | None:
     """Transitive closure of packed edges (sorted, unique): each round
     composes the delta with the accumulated closure, as transitive_closure
-    does."""
+    does, so `max_iterations` bounds the same O(log diameter) rounds. None,
+    to fall back, once the closure plus the pairs a round generates (before
+    deduplication) would pass `max_pairs`, so no round's arrays outgrow the
+    bound."""
     closure = delta = keys
-    while len(delta):
+    for _ in range(max_iterations):
         x, y = _unpack(delta)
+        if len(closure) + int(_ranges(closure, y)[1].sum()) > max_pairs:
+            return None
         owner, pos = _expand(closure, y)
         grown = np.unique(_pack(x[owner], _low(closure[pos])))
         delta = grown[~_member(closure, grown)]
+        if not len(delta):
+            return closure
         closure = np.union1d(closure, delta)
-    return closure
+    raise FixpointDidNotConverge(
+        f"driver transitive closure did not converge in {max_iterations} iterations"
+    )
 
 
 class ClosureIndex:
@@ -298,7 +263,7 @@ class ClosureIndex:
     def pull(cls, tc: DataFrame) -> ClosureIndex | None:
         """The index of a closed (sub, sup) frame: one job. None if a token
         is null."""
-        pairs = _pull_pairs(tc)
+        pairs = _pull_pairs(tc, "sub", "sup")
         return None if pairs is None else cls.of_pairs(*pairs)
 
     def __len__(self) -> int:
@@ -335,7 +300,12 @@ class ClosureIndex:
         owner, pos = _expand(self.fwd, v)
         via = np.concatenate([np.arange(len(v)), owner])
         step, nxt = _expand(keys, np.concatenate([v, _low(self.fwd[pos])]))
-        chains = _close_packed(np.unique(_pack(via[step], nxt)))
+        # chains over k edges close within ceil(log2 k) + 1 rounds
+        chains = _close_packed(
+            np.unique(_pack(via[step], nxt)), max_pairs, len(keys).bit_length() + 1
+        )
+        if chains is None:
+            return None
         every = np.arange(len(keys))
         first = np.concatenate([every, chains >> 32])
         last = np.concatenate([every, _low(chains)])
@@ -362,22 +332,22 @@ class ClosureIndex:
         )
 
 
-def _pull_pairs(df: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
-    """(sub, sup) token arrays of a frame, through Arrow: one job. None if a
-    token is null (SQL joins never compose a null; packed keys would)."""
-    t = df.select("sub", "sup").toArrow()
-    if t.column("sub").null_count or t.column("sup").null_count:
+def _pull_pairs(df: DataFrame, child: str, parent: str) -> tuple[np.ndarray, np.ndarray] | None:
+    """(child, parent) token arrays of a frame, through Arrow: one job. None
+    if a token is null (SQL joins never compose a null; packed keys would)."""
+    t = df.select(child, parent).toArrow()
+    if t.column(child).null_count or t.column(parent).null_count:
         return None
-    return t.column("sub").to_numpy(), t.column("sup").to_numpy()
+    return t.column(child).to_numpy(), t.column(parent).to_numpy()
 
 
-def _pairs_frame(spark, keys: np.ndarray, template: DataFrame) -> DataFrame:
-    """Packed pairs as a local relation with `template`'s (sub, sup) schema:
-    built from an Arrow table, so no Python row objects and no job."""
+def _pairs_frame(spark, keys: np.ndarray, template: DataFrame, child: str, parent: str) -> DataFrame:
+    """Packed pairs as a local relation with `template`'s (child, parent)
+    schema: built from an Arrow table, so no Python row objects and no job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = template.select("sub", "sup").schema
+    schema = template.select(child, parent).schema
     arrow = to_arrow_schema(schema)
     cols = [pa.array(c).cast(f.type) for c, f in zip(_unpack(keys), arrow)]
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema=schema)
@@ -391,11 +361,11 @@ def _driver_incremental_tc(
     a local relation unioned onto the old frame, so the persisted anchoring
     of the accumulated closure is untouched. None to fall back (a null
     token, or a closure past `max_pairs`)."""
-    edges = _pull_pairs(delta_edges)
+    edges = _pull_pairs(delta_edges, "sub", "sup")
     new_index = None if edges is None else index.extend(*edges, max_pairs)
     if new_index is None:
         return None
-    delta_df = _pairs_frame(old_tc.sparkSession, new_index.added, old_tc)
+    delta_df = _pairs_frame(old_tc.sparkSession, new_index.added, old_tc, "sub", "sup")
     return old_tc.unionByName(delta_df), delta_df, new_index
 
 
@@ -481,6 +451,48 @@ def reflexive(nodes: DataFrame, node_col: str, child: str, parent: str) -> DataF
     return nodes.select(
         F.col(node_col).alias(child), F.col(node_col).alias(parent)
     ).dropDuplicates()
+
+
+def star_closure(tc: DataFrame, classes: DataFrame) -> DataFrame:
+    """The class star closure: tc (sub, sup) plus every class's reflexive
+    pair plus its implicit (c, TOP) pair.
+
+    Built as a DISJOINT union instead of deduplicated: tc overlaps the
+    reflexive rows only on cycle self-pairs and the top rows only on told
+    (x, TOP) pairs, both vocabulary-rare and broadcast-anti-joined away, and
+    the reflexive and top rows overlap each other only at (TOP, TOP),
+    excluded from the top side. No O(closure) dropDuplicates exchange."""
+    refl = reflexive(classes, "c", "sub", "sup")
+    top = classes.where(F.col("c") != T.TOP).select(
+        F.col("c").alias("sub"), F.lit(T.TOP).cast("int").alias("sup")
+    )
+    self_pairs = tc.where(F.col("sub") == F.col("sup"))
+    top_pairs = tc.where((F.col("sup") == T.TOP) & (F.col("sub") != T.TOP))
+    return tc.unionByName(
+        refl.join(F.broadcast(self_pairs), on=["sub", "sup"], how="left_anti")
+    ).unionByName(
+        top.join(F.broadcast(top_pairs), on=["sub", "sup"], how="left_anti")
+    )
+
+
+def property_star(
+    sp: DataFrame, props: DataFrame, max_iterations: int, broadcast_row_threshold: int
+) -> DataFrame:
+    """R2: the reflexive-transitive property closure sp* (sub, sup) of the
+    told sub-property edges over every property, deduplicated and
+    checkpointed (vocabulary-sized)."""
+    return (
+        transitive_closure(
+            sp,
+            child="sub",
+            parent="sup",
+            max_iterations=max_iterations,
+            broadcast_row_threshold=broadcast_row_threshold,
+        )
+        .unionByName(reflexive(props, "p", "sub", "sup"))
+        .dropDuplicates()
+        .localCheckpoint(eager=False)
+    )
 
 
 def reflexive_transitive_closure(

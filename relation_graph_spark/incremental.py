@@ -5,9 +5,12 @@ fixpoint over all accumulated told axioms per micro-batch, maintain a
 ClosureState and extend it with just the batch's delta:
 
 - incremental transitive closure: new pairs are exactly those with >= 1 new
-  edge on some path, found by composing the delta against the accumulated
-  closure from BOTH sides until fixpoint (O(log diameter) rounds, same
-  'smart' discipline as closure.transitive_closure);
+  edge on some path. While the star closure fits broadcast_row_threshold, a
+  driver-resident closure.ClosureIndex serves each call at one job (it
+  extends sorted packed int64 arrays by range lookups); past the bound, the
+  distributed path composes the delta against the accumulated closure from
+  BOTH sides until fixpoint (O(log diameter) rounds, same 'smart'
+  discipline as closure.transitive_closure);
 - delta-restricted R3: a new relation row needs >= 1 new input among
   {subject-closure pair, told existential, filler-closure pair, property-
   closure pair}; one shared-scan join chain over side-tagged closures
@@ -73,13 +76,14 @@ from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
     ClosureIndex,
     FixpointDidNotConverge,
-    reflexive,
-    transitive_closure,
+    property_star,
+    star_closure,
 )
 from relation_graph_spark.config import RGConfig
 from relation_graph_spark.materialize import (
     _PACK_BITS,
     _distinct3,
+    _fire,
     derive_relations,
     materialize_edges,
 )
@@ -253,22 +257,6 @@ def _prune_evidence(roots: list[str], touched: list[int]) -> dict:
     }
 
 
-def _sc_star_of(sc_tc: DataFrame, classes: DataFrame) -> DataFrame:
-    # disjoint-union construction (no O(closure) dedup) — see
-    # materialize._sc_star for the overlap argument
-    refl = reflexive(classes, "c", "sub", "sup")
-    top = classes.where(F.col("c") != T.TOP).select(
-        F.col("c").alias("sub"), F.lit(T.TOP).cast("int").alias("sup")
-    )
-    self_pairs = sc_tc.where(F.col("sub") == F.col("sup"))
-    top_pairs = sc_tc.where((F.col("sup") == T.TOP) & (F.col("sub") != T.TOP))
-    return sc_tc.unionByName(
-        refl.join(F.broadcast(self_pairs), on=["sub", "sup"], how="left_anti")
-    ).unionByName(
-        top.join(F.broadcast(top_pairs), on=["sub", "sup"], how="left_anti")
-    )
-
-
 def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
     m = materialize_edges(told, cfg)
     return {
@@ -297,21 +285,12 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
     ONE union-aggregate job, and the class closure's ClosureIndex from one
     pull."""
     if "_sc_star" not in state:
-        state["_sc_star"] = _sc_star_of(
-            state["sc_tc"], state["classes"]
-        ).localCheckpoint(eager=False)
+        state["_sc_star"] = star_closure(state["sc_tc"], state["classes"]).localCheckpoint(
+            eager=False
+        )
     if "_sp_star" not in state:
-        state["_sp_star"] = (
-            transitive_closure(
-                state["sp"],
-                child="sub",
-                parent="sup",
-                max_iterations=cfg.max_iterations,
-                broadcast_row_threshold=cfg.broadcast_row_threshold,
-            )
-            .unionByName(reflexive(state["props"], "p", "sub", "sup"))
-            .dropDuplicates()
-            .localCheckpoint(eager=False)
+        state["_sp_star"] = property_star(
+            state["sp"], state["props"], cfg.max_iterations, cfg.broadcast_row_threshold
         )
     counted = {
         "_n_sc_star": "_sc_star",
@@ -375,7 +354,7 @@ def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataF
 
     sc_star = state.get("_sc_star")
     if sc_star is None:
-        sc_star = _sc_star_of(state["sc_tc"], state["classes"])
+        sc_star = star_closure(state["sc_tc"], state["classes"])
     if state.get("_has_bot") is False:
         unsat = sc_star.where(F.lit(False)).select(F.col("sub").alias("c"))
     else:
@@ -521,17 +500,6 @@ def derive_delta_passes(
         passes.append(derive_relations(sc_star, full_some, sp_star, broadcast_row_threshold, **kw))
     packable = max_token is not None and 0 <= max_token < (1 << _PACK_BITS)
     return _distinct3(_union(passes), "s", "p", "o", packable)
-
-
-def _fire(rel_rows: DataFrame, defs: DataFrame) -> DataFrame:
-    """R4: x subClassOf F whenever x satisfies F's definition (p some y).
-    int casts pin the token dtype so feedback-derived sc facts never widen
-    the persisted sc/sc_tc frames."""
-    return (
-        rel_rows.join(defs, ["p", "o"])
-        .selectExpr("CAST(s AS INT) AS sub", "CAST(f AS INT) AS sup")
-        .where("sub != sup")
-    )
 
 
 def _settle(
@@ -742,17 +710,8 @@ def apply_delta(
     if sp_changed:
         # property edges arrived: re-close the (tiny, vocabulary-sized)
         # property hierarchy
-        sp_star_new = (
-            transitive_closure(
-                sp_new,
-                child="sub",
-                parent="sup",
-                max_iterations=cfg.max_iterations,
-                broadcast_row_threshold=cfg.broadcast_row_threshold,
-            )
-            .unionByName(reflexive(props_new, "p", "sub", "sup"))
-            .dropDuplicates()
-            .localCheckpoint(eager=False)
+        sp_star_new = property_star(
+            sp_new, props_new, cfg.max_iterations, cfg.broadcast_row_threshold
         )
         n_sp_new = sp_star_new.count()
         d_sp_star = sp_star_new.join(state["_sp_star"], on=["sub", "sup"], how="left_anti")

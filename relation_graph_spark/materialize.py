@@ -37,7 +37,8 @@ from pyspark.sql import DataFrame
 from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
     FixpointDidNotConverge,
-    reflexive,
+    property_star,
+    star_closure,
     transitive_closure,
 )
 from relation_graph_spark.config import OutputMode, RGConfig
@@ -83,14 +84,8 @@ def _distinct3(df: DataFrame, c1: str, c2: str, c3: str, packable: bool) -> Data
 
 
 def _sc_star(sc: DataFrame, classes: DataFrame, cfg: RGConfig):
-    """(transitive closure, reflexive-transitive closure + implicit (c, TOP)).
-
-    The star union is built DISJOINT instead of deduplicated: tc overlaps
-    the reflexive rows only on cycle self-pairs and the top rows only on
-    told (x, TOP) pairs — both vocabulary-rare, broadcast-anti-joined away —
-    and refl/top overlap each other only at (TOP, TOP), excluded from the
-    top side. Saves the O(closure) dropDuplicates exchange per call (this
-    runs once per R4 round on the full-recompute path)."""
+    """(transitive closure, closure.star_closure of it). The star runs once
+    per R4 round on the full-recompute path, so it is checkpointed."""
     tc = transitive_closure(
         sc,
         child="sub",
@@ -98,22 +93,7 @@ def _sc_star(sc: DataFrame, classes: DataFrame, cfg: RGConfig):
         max_iterations=cfg.max_iterations,
         broadcast_row_threshold=cfg.broadcast_row_threshold,
     )
-    refl = reflexive(classes, "c", "sub", "sup")
-    top = classes.where(F.col("c") != T.TOP).select(
-        F.col("c").alias("sub"), F.lit(T.TOP).cast("int").alias("sup")
-    )
-    self_pairs = tc.where(F.col("sub") == F.col("sup"))
-    top_pairs = tc.where((F.col("sup") == T.TOP) & (F.col("sub") != T.TOP))
-    star = (
-        tc.unionByName(
-            refl.join(F.broadcast(self_pairs), on=["sub", "sup"], how="left_anti")
-        )
-        .unionByName(
-            top.join(F.broadcast(top_pairs), on=["sub", "sup"], how="left_anti")
-        )
-        .localCheckpoint(eager=False)
-    )
-    return tc, star
+    return tc, star_closure(tc, classes).localCheckpoint(eager=False)
 
 
 def derive_relations(
@@ -152,10 +132,11 @@ def derive_relations(
     staged=False fuses the three expansions into one join chain with a
     single final distinct — no intermediate dedups or checkpoints. The
     staged plan wins when the intermediates are large (the 1.7x measurement
-    above); below the cost crossover (delta-sized incremental passes, tiny
-    told sets) the ~6 extra jobs of the staged plan dominate the work they
-    save, so the streaming engine and small-input callers pass staged=False
-    (guide §1.2: fixed per-job cost is part of the algorithm's cost model).
+    above); below the cost crossover (tiny told sets) the ~6 extra jobs of
+    the staged plan dominate the work they save, so materialize_edges and
+    the stream's derive_delta_passes pass staged=False while the told
+    existentials number at most incremental_feedback_threshold (the stream's
+    usual R3 plan is derive_delta_relations, a fused chain of its own).
     Result is identical either way — the stage distincts only dedup
     intermediates the final distinct removes anyway.
 
@@ -262,6 +243,17 @@ def derive_relations(
     return _distinct3(s3, "s", "p", "o", packable)
 
 
+def _fire(rel_rows: DataFrame, defs: DataFrame) -> DataFrame:
+    """R4: x subClassOf F whenever x satisfies F's definition (p some y).
+    int casts pin the token dtype so feedback-derived sc facts never widen
+    the persisted sc/sc_tc frames."""
+    return (
+        rel_rows.join(defs, ["p", "o"])
+        .selectExpr("CAST(s AS INT) AS sub", "CAST(f AS INT) AS sup")
+        .where("sub != sup")
+    )
+
+
 def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
     """Run the R1-R4 fixpoint; return {'rel','sc_closure','sc_star','unsat',
     'classes','assertions'} frames (pre-output-config, already TOP/BOT-free
@@ -273,17 +265,8 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
     props = told["props"]
 
     # R2 once: property closure is independent of the class feedback loop.
-    sp_star = (
-        transitive_closure(
-            told["sp"],
-            child="sub",
-            parent="sup",
-            max_iterations=cfg.max_iterations,
-            broadcast_row_threshold=cfg.broadcast_row_threshold,
-        )
-        .unionByName(reflexive(props, "p", "sub", "sup"))
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
+    sp_star = property_star(
+        told["sp"], props, cfg.max_iterations, cfg.broadcast_row_threshold
     )
 
     some = told["some"].dropDuplicates().localCheckpoint(eager=False)
@@ -346,15 +329,8 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         incremental_rounds = n_some > cfg.incremental_feedback_threshold
 
         def _r4_new_sc(rel_df, sc_df):
-            # x subClassOf F whenever x satisfies F's definition (p some y)
             return (
-                rel_df.alias("r")
-                .join(
-                    F.broadcast(def_some).alias("d"),
-                    (F.col("r.p") == F.col("d.p")) & (F.col("r.o") == F.col("d.o")),
-                )
-                .select(F.col("r.s").alias("sub"), F.col("d.f").alias("sup"))
-                .where(F.col("sub") != F.col("sup"))
+                _fire(rel_df, F.broadcast(def_some))
                 .dropDuplicates()
                 .join(sc_df, on=["sub", "sup"], how="left_anti")
                 .localCheckpoint(eager=False)

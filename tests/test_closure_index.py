@@ -12,6 +12,7 @@ import random
 import numpy as np
 import pytest
 
+from relation_graph_spark import closure as C
 from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import ClosureIndex, incremental_tc, transitive_closure
 
@@ -80,13 +81,28 @@ def test_extend_equals_set_closure():
             closed = want
 
 
-def test_extend_refuses_past_max_pairs():
+def test_extend_refuses_past_max_pairs(monkeypatch):
     chain = _closure([(i, i + 1) for i in range(11, 30)])
     index = ClosureIndex.of_pairs(*_arrays(chain))
     # closing the chain into a cycle makes every pair reachable
     cycle = np.array([30], np.int32), np.array([11], np.int32)
     assert index.extend(*cycle, max_pairs=len(chain) + 10) is None
     assert len(index.extend(*cycle, max_pairs=20 * 20)) == 20 * 20
+
+    # a long chain of new edges in one delta: the closure over the chained
+    # edges (~k^2/2 pairs) is itself bounded and refuses first
+    closes = []
+    real = C._close_packed
+
+    def spy(*args):
+        closes.append(real(*args))
+        return closes[-1]
+
+    monkeypatch.setattr(C, "_close_packed", spy)
+    tails = np.arange(1000, 1200, dtype=np.int32)
+    assert index.extend(tails, tails + 1, max_pairs=5_000) is None
+    assert closes == [None]
+    assert len(index.extend(tails, tails + 1, max_pairs=10**6)) == len(chain) + 200 * 201 // 2
 
 
 def _rows(df):

@@ -2,7 +2,9 @@
 result-identical to the path it replaced.
 
 - driver-side transitive closure (closure._driver_tc fast path) vs the
-  distributed semi-naive loop, on a graph with cycles, diamonds and chains;
+  distributed semi-naive loop vs a plain set closure, on a graph with
+  cycles, diamonds and chains and on seeded random graphs; the fallback on
+  null, non-integer and non-int32 tokens and past the pair bound;
 - index-served incremental_tc (closure.ClosureIndex) vs the distributed
   two-sided delta composition;
 - fused (staged=False) vs staged derive_relations;
@@ -11,8 +13,11 @@ result-identical to the path it replaced.
 
 from __future__ import annotations
 
+import random
+
 import pyspark.sql.functions as F
 import pytest
+from test_closure_index import _closure
 
 import relation_graph_spark.closure as C
 from relation_graph_spark.closure import ClosureIndex, incremental_tc, transitive_closure
@@ -20,12 +25,34 @@ from relation_graph_spark.closure import ClosureIndex, incremental_tc, transitiv
 
 @pytest.fixture()
 def force_paths(monkeypatch):
-    """Helper to flip the driver-TC threshold per test."""
+    """Flip the driver-TC row threshold per test, and record whether each
+    _driver_tc call served its closure (True) or fell back (False)."""
+    served = []
+    real = C._driver_tc
+
+    def spy(*args):
+        out = real(*args)
+        served.append(out is not None)
+        return out
+
+    monkeypatch.setattr(C, "_driver_tc", spy)
 
     def _set(edges_threshold: int):
         monkeypatch.setattr(C, "_DRIVER_TC_EDGES", edges_threshold)
+        return served
 
     return _set
+
+
+def _both_paths(force_paths, edges, **kw):
+    """(driver-side closure, distributed closure, whether the driver served)
+    of one edge frame; both keep the input's column types."""
+    served = force_paths(10_000)
+    driver = transitive_closure(edges, **kw)
+    force_paths(0)
+    dist = transitive_closure(edges, **kw)
+    assert dict(driver.dtypes) == dict(dist.dtypes) == dict(edges.dtypes)
+    return {tuple(r) for r in driver.collect()}, {tuple(r) for r in dist.collect()}, served
 
 
 GRAPH = [
@@ -37,28 +64,69 @@ GRAPH = [
 ]
 
 
+def _random_graph(seed):
+    """Edges with cycles, self-loops and (every third seed) negative tokens."""
+    rng = random.Random(seed)
+    nodes = list(range(-6 if seed % 3 == 0 else 0, rng.randint(4, 30)))
+    edges = {(rng.choice(nodes), rng.choice(nodes)) for _ in range(rng.randint(1, 45))}
+    edges.add((n := rng.choice(nodes), n))
+    return sorted(edges)
+
+
 def test_driver_tc_equals_distributed(spark, force_paths):
-    edges = spark.createDataFrame(GRAPH, "child: bigint, parent: bigint")
-    force_paths(10_000)
-    driver = {tuple(r) for r in transitive_closure(edges).collect()}
-    force_paths(0)
-    dist = {tuple(r) for r in transitive_closure(edges).collect()}
-    assert driver == dist
-    # cycle nodes must contain their self-pairs; chain must reach the end
-    assert (1, 1) in driver and (8, 11) in driver
+    # the fixed graph, then seeded random ones
+    for seed in [None, *range(8)]:
+        graph = GRAPH if seed is None else _random_graph(seed)
+        edges = spark.createDataFrame(graph, "child: int, parent: int")
+        driver, dist, calls = _both_paths(force_paths, edges)
+        assert calls == [True], seed
+        assert driver == dist == _closure(graph), seed
+        calls.clear()
+        if seed is None:
+            # cycle nodes must contain their self-pairs; chain must reach the end
+            assert (1, 1) in driver and (8, 11) in driver
+
+
+@pytest.mark.parametrize(
+    "graph, schema, served",
+    [
+        ([(1, 2), (2, -(1 << 31)), (-(1 << 31), (1 << 31) - 1)], "bigint", True),
+        # a bigint token past int32 would be truncated by packing
+        ([(1, 2), (2, 1 << 31), (1 << 31, 3)], "bigint", False),
+        ([("a", "b"), ("b", "c"), ("c", "a")], "string", False),
+    ],
+    ids=["bigint_in_int32", "bigint_past_int32", "string"],
+)
+def test_driver_tc_token_types(spark, force_paths, graph, schema, served):
+    edges = spark.createDataFrame(graph, f"child: {schema}, parent: {schema}")
+    driver, dist, calls = _both_paths(force_paths, edges)
+    assert calls == [served]
+    assert driver == dist == _closure(graph)
 
 
 def test_driver_tc_falls_back_on_nulls(spark, force_paths):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (None, 4)], "child: bigint, parent: bigint"
-    )
-    force_paths(10_000)
-    got = {tuple(r) for r in transitive_closure(edges).collect()}
-    force_paths(0)
-    want = {tuple(r) for r in transitive_closure(edges).collect()}
+    graph = [(1, 2), (2, 3), (None, 4)]
+    edges = spark.createDataFrame(graph, "child: bigint, parent: bigint")
+    got, want, calls = _both_paths(force_paths, edges)
+    assert calls == [False]
     # SQL join semantics: the null edge appears as a base pair but never
     # composes — both paths must agree
-    assert got == want
+    assert got == want == _closure(graph)
+
+
+def test_driver_tc_pair_bound(spark, force_paths):
+    """A closure of exactly broadcast_row_threshold pairs is served on the
+    driver; one pair more falls back to the distributed path."""
+    # 4 tails -> hub -> 6 heads: 10 edges, 24 composed pairs, 34 in all
+    graph = [(10 + i, 100) for i in range(4)] + [(100, 200 + j) for j in range(6)]
+    edges = spark.createDataFrame(graph, "child: int, parent: int")
+    want = _closure(graph)
+    assert len(want) == 34
+    for bound, served in ((34, True), (33, False)):
+        driver, dist, calls = _both_paths(force_paths, edges, broadcast_row_threshold=bound)
+        assert calls == [served], bound
+        assert driver == dist == want
+        calls.clear()
 
 
 def test_driver_incremental_tc_equals_distributed(spark):
