@@ -34,8 +34,8 @@ def main():
     ap.add_argument(
         "--tail-batches", type=int, default=2,
         help="tiny trailing batches (a few told rows each): their rel "
-        "deltas touch few buckets, demonstrating the bucket-pruned "
-        "history anti-join scanning a fraction of the persisted state",
+        "deltas touch few buckets, so the bucket-pruned history anti-join "
+        "scans a fraction of the persisted state",
     )
     ap.add_argument(
         "--equiv", type=int, default=0,
@@ -67,7 +67,6 @@ def main():
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
-    os.environ["RGS_PRUNE_EVIDENCE"] = "1"
     from relation_graph_spark import incremental
     from relation_graph_spark.config import RGConfig
     from relation_graph_spark.fixtures import gen_ontology_rows, _rows_to_df
@@ -277,20 +276,6 @@ def main():
     ]
     n_major_merges = sum(a.count("'merge'") for a in maint_actions)
     n_maint_passes = len(maint_log)
-    # bucket-pruned history-join evidence: per fast-path batch, the bytes the
-    # rel-history anti-join scans (delta-touched bucket dirs) vs the total
-    # persisted rel state at that moment
-    prune = [
-        {
-            **s,
-            "scan_fraction": (
-                round(s["touched_bytes"] / s["total_bytes"], 4)
-                if s["total_bytes"]
-                else None
-            ),
-        }
-        for s in incremental.PRUNE_STATS
-    ]
     # sink layout after compaction policy: bounded dir/file counts are the
     # long-stream maintenance evidence (round-3 VERDICT item 3)
     sink = job.sink
@@ -363,7 +348,6 @@ def main():
                 "equiv_islands": args.equiv_islands,
                 "cpus": args.cpus,
                 "rel_buckets": incremental.REL_BUCKETS,
-                "history_join_pruning": prune,
                 "sink_layout": layout,
                 "state_layout": state_layout,
             }

@@ -219,24 +219,52 @@ def _expand(keys: np.ndarray, nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray
     return owner, np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
 
 
+def _expand_within(
+    keys: np.ndarray, nodes: np.ndarray, max_pairs: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """_expand, or None, without expanding, if it would yield more than
+    `max_pairs` pairs."""
+    if int(_ranges(keys, nodes)[1].sum()) > max_pairs:
+        return None
+    return _expand(keys, nodes)
+
+
+def _slices(n: np.ndarray, size: int):
+    """Consecutive slices of the indices of `n`, each summing to at most
+    `size` (or a single index past it)."""
+    cum = np.cumsum(n)
+    start = 0
+    while start < len(n):
+        base = cum[start - 1] if start else 0
+        end = max(int(np.searchsorted(cum, base + size, "right")), start + 1)
+        yield slice(start, end)
+        start = end
+
+
 def _close_packed(keys: np.ndarray, max_pairs: int, max_iterations: int) -> np.ndarray | None:
     """Transitive closure of packed edges (sorted, unique): each round
     composes the delta with the accumulated closure, as transitive_closure
     does, so `max_iterations` bounds the same O(log diameter) rounds. None,
-    to fall back, once the closure plus the pairs a round generates (before
-    deduplication) would pass `max_pairs`, so no round's arrays outgrow the
-    bound."""
+    to fall back, once the closure passes `max_pairs`. A round composes its
+    delta in slices of at most `max_pairs` generated pairs, each
+    deduplicated against the closure and the round's earlier slices, so no
+    array outgrows the bound while a closure that fits it is served."""
+    if len(keys) > max_pairs:
+        return None
     closure = delta = keys
     for _ in range(max_iterations):
         x, y = _unpack(delta)
-        if len(closure) + int(_ranges(closure, y)[1].sum()) > max_pairs:
-            return None
-        owner, pos = _expand(closure, y)
-        grown = np.unique(_pack(x[owner], _low(closure[pos])))
-        delta = grown[~_member(closure, grown)]
-        if not len(delta):
+        fresh = delta[:0]
+        for part in _slices(_ranges(closure, y)[1], max_pairs):
+            owner, pos = _expand(closure, y[part])
+            grown = np.unique(_pack(x[part][owner], _low(closure[pos])))
+            fresh = np.union1d(fresh, grown[~_member(closure, grown)])
+            if len(closure) + len(fresh) > max_pairs:
+                return None
+        if not len(fresh):
             return closure
-        closure = np.union1d(closure, delta)
+        closure = np.union1d(closure, fresh)
+        delta = fresh
     raise FixpointDidNotConverge(
         f"driver transitive closure did not converge in {max_iterations} iterations"
     )
@@ -288,8 +316,9 @@ class ClosureIndex:
         tail u and last head v of each chain span the pairs above. The pairs
         already present are dropped.
 
-        None, to fall back, if the generated pairs or the grown closure
-        would pass `max_pairs`."""
+        None, to fall back, if an expansion would generate, or the grown
+        closure hold, more than `max_pairs` pairs: each expansion is sized
+        before it runs."""
         keys = np.unique(_pack(sub, sup))
         keys = keys[~_member(self.fwd, keys)]  # entailed edges add nothing
         if not len(keys):
@@ -297,9 +326,14 @@ class ClosureIndex:
         u, v = _unpack(keys)
         # chains of new edges: i -> j when u_j is v_i or an ancestor of v_i
         # (keys sort by tail, so the edges of one tail are one range of keys)
-        owner, pos = _expand(self.fwd, v)
-        via = np.concatenate([np.arange(len(v)), owner])
-        step, nxt = _expand(keys, np.concatenate([v, _low(self.fwd[pos])]))
+        anc = _expand_within(self.fwd, v, max_pairs)
+        if anc is None:
+            return None
+        via = np.concatenate([np.arange(len(v)), anc[0]])
+        steps = _expand_within(keys, np.concatenate([v, _low(self.fwd[anc[1]])]), max_pairs)
+        if steps is None:
+            return None
+        step, nxt = steps
         # chains over k edges close within ceil(log2 k) + 1 rounds
         chains = _close_packed(
             np.unique(_pack(via[step], nxt)), max_pairs, len(keys).bit_length() + 1
@@ -312,14 +346,16 @@ class ClosureIndex:
         # (first tail, last head or an ancestor of it) ...
         spans = np.unique(_pack(u[first], v[last]))
         t, h = _unpack(spans)
-        owner, pos = _expand(self.fwd, h)
-        spans = np.union1d(spans, _pack(t[owner], _low(self.fwd[pos])))
+        up = _expand_within(self.fwd, h, max_pairs - len(spans))
+        if up is None:
+            return None
+        spans = np.union1d(spans, _pack(t[up[0]], _low(self.fwd[up[1]])))
         # ... with the tail or any of its descendants in front
         t, y = _unpack(spans)
-        if len(spans) + int(_ranges(self.bwd, t)[1].sum()) > max_pairs:
+        down = _expand_within(self.bwd, t, max_pairs - len(spans))
+        if down is None:
             return None
-        owner, pos = _expand(self.bwd, t)
-        new = np.union1d(spans, _pack(_low(self.bwd[pos]), y[owner]))
+        new = np.union1d(spans, _pack(_low(self.bwd[down[1]]), y[down[0]]))
         new = new[~_member(self.fwd, new)]
         if len(self) + len(new) > max_pairs:
             return None

@@ -44,12 +44,11 @@ class RGConfig:
     # localCheckpoint the accumulated closure every k iterations to truncate
     # lineage (SURVEY.md section 4.1: plan-lineage truncation).
     checkpoint_every: int = 1
-    # R4 feedback rounds run the incremental path (incremental_tc +
-    # delta-restricted R3) only when the told-existential table exceeds
-    # this row count; below it the handful of extra per-round Spark jobs
-    # costs more than the data they save, so tiny ontologies take the
-    # full-recompute rounds (same cost-based shape as
-    # broadcast_row_threshold).
+    # R3 derives through the staged plan (a dedup between closure
+    # expansions) only when the told-existential table exceeds this row
+    # count; below it the staged plan's extra Spark jobs cost more than the
+    # intermediate rows they save, so tiny ontologies take the fused chain
+    # (same cost-based shape as broadcast_row_threshold).
     incremental_feedback_threshold: int = 20_000
 
     def with_properties(self, tokens) -> "RGConfig":

@@ -20,14 +20,15 @@ ClosureState and extend it with just the batch's delta:
   against the accumulated rel keeps only genuinely new rows.
 
 - delta-sized R4 equivalence feedback: sc facts derived from rel rows
-  matching an AX_EQUIV_SOME definition re-enter R1/R3 as incremental rounds
-  (the same machinery materialize_edges uses for its feedback loop,
-  reference RelationGraph.scala:217-230). Steady-state batches under
-  existing definitions pay delta-sized work — only NEW rel rows can fire a
-  definition they have not fired before. A batch that introduces a NEW
-  definition additionally pays one broadcast-join scan (never a shuffle)
-  over the accumulated rel to activate the definition against history — a
-  vocabulary-rare event, not a per-batch cost.
+  matching an AX_EQUIV_SOME definition re-enter R1/R3 as semi-naive rounds
+  (feedback_rounds over a ClassFixpoint, reference
+  RelationGraph.scala:217-230) — the one round body materialize_edges runs
+  too, whose first round is this engine's late-definition case. Steady-state
+  batches under existing definitions pay delta-sized work — only NEW rel
+  rows can fire a definition they have not fired before. A batch that
+  introduces a NEW definition additionally pays one broadcast-join scan
+  (never a shuffle) over the accumulated rel to activate the definition
+  against history — a vocabulary-rare event, not a per-batch cost.
 
 Output effects that RETRACT rows (late unsatisfiability suppressing rows
 whose object turned unsat; late mutual subsumption upgrading an emitted
@@ -66,7 +67,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from collections.abc import Callable
+from dataclasses import dataclass, field
 from functools import reduce
 
 import pyspark.sql.functions as F
@@ -227,34 +228,27 @@ def _read_tagged(spark: SparkSession, roots: list[str]) -> DataFrame:
     return _union(reads or [_no_state(spark)])
 
 
-# per-batch pruning evidence, populated when RGS_PRUNE_EVIDENCE is set:
-# {"touched_buckets": n, "touched_bytes": b, "total_bytes": B} per fast-path
-# batch — bench_stream reports touched/total to show the history-side scan
-# is bounded by the delta's bucket footprint, not total history
-PRUNE_STATS: list[dict] = []
+def _touched_bytes(roots: list[str], touched: list[int]) -> int:
+    """Bytes of stored rel rows the pruned history anti-join reads: the
+    touched buckets of a snapshot's rel, and all of a delta's (unbucketed)
+    rel."""
+    size = 0
+    for root in roots:
+        rel_dir = os.path.join(root, "frame=rel")
+        for d in [rel_dir, *(os.path.join(rel_dir, f"bucket={b}") for b in touched)]:
+            if os.path.isdir(d):
+                with os.scandir(d) as entries:
+                    size += sum(e.stat().st_size for e in entries if e.name.endswith(".parquet"))
+    return size
 
 
-def _prune_evidence(roots: list[str], touched: list[int]) -> dict:
-    tset = {f"bucket={b}" for b in touched}
-    touched_bytes = total_bytes = 0
-    for root_path in roots:
-        rel_dir = os.path.join(root_path, "frame=rel")
-        for droot, _dirs, files in os.walk(rel_dir):
-            sz = sum(
-                os.path.getsize(os.path.join(droot, f))
-                for f in files
-                if f.endswith(".parquet")
-            )
-            total_bytes += sz
-            # a delta's rel is not bucketed: always read
-            name = os.path.basename(droot)
-            if name in tset or not name.startswith("bucket="):
-                touched_bytes += sz
-    return {
-        "touched_buckets": len(touched),
-        "touched_bytes": touched_bytes,
-        "total_bytes": total_bytes,
-    }
+def _fits(cfg: RGConfig, rows: int) -> bool:
+    """Whether `rows` rows fit the broadcast row bound."""
+    return 0 < cfg.broadcast_row_threshold and rows <= cfg.broadcast_row_threshold
+
+
+def _bounded_broadcast(cfg: RGConfig, df: DataFrame, rows: int) -> DataFrame:
+    return F.broadcast(df) if _fits(cfg, rows) else df
 
 
 def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
@@ -275,6 +269,9 @@ def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFr
         "_n_some": m["_n_some"],
         "_n_def": m["_n_def"],
         "_has_bot": m["_has_bot"],
+        # the class closure's index, when the bootstrap's R4 rounds built
+        # one: the first delta batch then needs no pull
+        **({"_sc_index": m["_sc_index"]} if m["_sc_index"] is not None else {}),
     }
 
 
@@ -376,8 +373,8 @@ def incremental_tc(
     old_tc_rows: int | None = None,
     index: ClosureIndex | None = None,
 ) -> tuple[DataFrame, DataFrame, ClosureIndex | None]:
-    """cfg-shaped wrapper over closure.incremental_tc (shared with the R4
-    feedback loop in materialize_edges). `index` (old_tc's ClosureIndex)
+    """cfg-shaped wrapper over closure.incremental_tc (ClassFixpoint.close,
+    the TC step of both engines' R4 rounds). `index` (old_tc's ClosureIndex)
     serves the call on the driver; `old_tc_rows` (or an upper bound, e.g.
     the running _n_sc_star stat) makes the distributed path's broadcast
     decision count-free."""
@@ -504,29 +501,30 @@ def derive_delta_passes(
 
 def _settle(
     cand: DataFrame | None,
-    state: dict[str, DataFrame],
+    history: dict[str, DataFrame],
     prior: DataFrame | None,
-    fire: Callable[[DataFrame], DataFrame] | None,
+    defs: DataFrame | None,
     sc_known: DataFrame,
     activated: DataFrame | None = None,
     narrow: bool = False,
 ) -> tuple[DataFrame, DataFrame | None, dict[str, int]]:
-    """Deduplicate candidate rel rows against the ACCUMULATED rel (the one
-    join against history in the per-batch path) and against `prior` (rows
-    already added this batch), and derive the R4 subclass facts the
-    survivors fire. Returns (new_rel, new_sc, {"rel": rows, "sc": rows});
-    the counts are empty without definitions.
+    """Deduplicate candidate rel rows against the ACCUMULATED rel of
+    `history` (the one join against history in the per-batch path) and
+    against `prior` (rows already added this batch), and derive the R4
+    subclass facts the survivors fire. Returns (new_rel, new_sc,
+    {"rel": rows, "sc": rows}); the counts are empty without definitions.
 
     With a persisted bucket layout the history side is pruned at the
     parquet scan to the buckets the candidates touch (input bytes bounded by
     the delta's bucket footprint, not total history), and broadcast while
-    those bytes fit the session's broadcast threshold. Without one (direct
-    apply_delta callers) the anti-join runs against the in-memory frame.
-    `fire` (rel rows -> R4 subclass candidates) is None without
-    definitions; otherwise the survivors' candidates, plus the `activated`
-    ones of a late definition, are anti-joined against `sc_known`, and the
-    new rel rows and new sc facts leave as ONE tagged checkpoint plus ONE
-    stats job — the R4 round's emptiness probe costs no job of its own.
+    those bytes fit the session's broadcast threshold. Without one (the
+    batch engine, direct apply_delta callers) the anti-join runs against
+    the in-memory frame. `defs` (the definitions, R4's rule) is None
+    without definitions; otherwise the survivors' subclass candidates, plus
+    the `activated` ones of definitions new to the history, are anti-joined
+    against `sc_known`, and the new rel rows and new sc facts leave as ONE
+    tagged checkpoint plus ONE stats job — the R4 round's emptiness probe
+    costs no job of its own.
 
     `narrow`: the caller vouches that `cand` is delta-sized, `prior` and
     `sc_known` are broadcast and nothing is `activated`. If the history
@@ -535,36 +533,34 @@ def _settle(
     (one job each, no exchange). Otherwise they keep a parallel plan, one
     job more each: a single partition would pull a history-sized stage
     into one task."""
-    stored: DataFrame | None = state.get("_state_tagged")  # type: ignore[assignment]
+    stored: DataFrame | None = history.get("_state_tagged")  # type: ignore[assignment]
     if cand is None:
-        rel_r = state["rel"].where("false").select("s", "p", "o")
+        rel_r = history["rel"].where("false").select("s", "p", "o")
     elif stored is not None:
         cand_b = cand.selectExpr("*", f"{_rel_bucket()} AS bucket").localCheckpoint(
             eager=False
         )
         probe = cand_b.coalesce(1) if narrow else cand_b
         touched = [r["bucket"] for r in probe.select("bucket").distinct().collect()]
-        evidence = _prune_evidence(state["_state_roots"], touched)
-        if touched and os.environ.get("RGS_PRUNE_EVIDENCE"):
-            PRUNE_STATS.append(evidence)
         in_touched = ", ".join(str(b) for b in touched or [-1])
         hist = _untag(
             stored.where(f"bucket IN ({in_touched}) OR bucket IS NULL"), "rel"
         )
         spark = cand.sparkSession
-        if evidence["touched_bytes"] <= _conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold"):
+        hist_bytes = _touched_bytes(history["_state_roots"], touched)
+        if hist_bytes <= _conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold"):
             hist = F.broadcast(hist)
         else:
             narrow = False
         rel_r = cand_b.drop("bucket").join(hist, on=["s", "p", "o"], how="left_anti")
     else:
-        rel_r = cand.join(state["rel"], on=["s", "p", "o"], how="left_anti")
+        rel_r = cand.join(history["rel"], on=["s", "p", "o"], how="left_anti")
         narrow = False
     if prior is not None:
         rel_r = rel_r.join(prior, on=["s", "p", "o"], how="left_anti")
-    if fire is None:
+    if defs is None:
         return rel_r.localCheckpoint(eager=False), None, {}
-    sc_c = fire(rel_r)
+    sc_c = _fire(rel_r, defs)
     if activated is not None:
         sc_c = sc_c.unionByName(activated)
     sc_c = sc_c.join(sc_known, on=["sub", "sup"], how="left_anti")
@@ -595,6 +591,139 @@ def _star_stats(d_star: DataFrame, index: ClosureIndex | None) -> tuple[int, int
     return r["n"], int(r["bot"] or 0)
 
 
+@dataclass
+class ClassFixpoint:
+    """The class side of the R1-R4 fixpoint, as the R4 feedback rounds grow
+    it in the batch (materialize_edges) and the stream (apply_delta) alike.
+
+    `sc` holds the told plus R4-derived subclass edges, `tc` their
+    transitive closure and `star` its star closure; `rows` upper-bounds
+    |star| (so |tc| too); `index` is tc's ClosureIndex, None once a TC call
+    it did not serve dropped it. The R3 inputs — told existentials `some`,
+    property closure `sp_star` of `n_sp` rows, packability bound
+    `max_token`, the `staged` plan choice — and the definitions `defs` (None
+    without any) stay fixed. `history` holds the rel that new rel rows are
+    deduplicated against (_settle). What the rounds add is recorded: rel
+    rows disjoint from the history's (`rel`, `n_rel` of them), and per call
+    the R4 facts, tc and star deltas; `bot` counts new star pairs into
+    owl:Nothing."""
+
+    cfg: RGConfig
+    history: dict[str, DataFrame]
+    sc: DataFrame
+    tc: DataFrame
+    star: DataFrame
+    rows: int
+    index: ClosureIndex | None
+    some: DataFrame
+    sp_star: DataFrame
+    n_sp: int
+    max_token: int | None
+    staged: bool
+    defs: DataFrame | None
+    rel: DataFrame | None = None
+    n_rel: int = 0
+    bot: int = 0
+    sc_parts: list[DataFrame] = field(default_factory=list)
+    tc_parts: list[DataFrame] = field(default_factory=list)
+    star_parts: list[DataFrame] = field(default_factory=list)
+
+    def close(self, edges: DataFrame) -> tuple[DataFrame, int]:
+        """Incremental TC of `edges` onto `tc`, served by `index` while
+        `rows` fits the broadcast bound (the regime in which the derive
+        broadcasts the whole closure anyway). Returns the star delta — the
+        tc delta minus its self and TOP pairs, which every class's
+        reflexive and top rows already hold, so it is disjoint from `star` —
+        and its row count; `grow` adds it."""
+        self.tc, d_tc, self.index = incremental_tc(
+            self.tc, edges, self.cfg, old_tc_rows=self.rows,
+            index=self.index if _fits(self.cfg, self.rows) else None,
+        )
+        self.tc_parts.append(d_tc)
+        d_star = d_tc.where(f"sub != sup AND sup != {T.TOP}")
+        n, bot = _star_stats(d_star, self.index)
+        self.bot += bot
+        return d_star, n
+
+    def grow(self, d_star: DataFrame, n: int) -> None:
+        """Add `n` star rows disjoint from `star`: a plain union, no
+        O(closure) dedup."""
+        self.star = self.star.unionByName(d_star)
+        self.star_parts.append(d_star)
+        self.rows += n
+
+    def derive(self, d_star: DataFrame | None, full: DataFrame | None) -> DataFrame:
+        """R3 rows with >= 1 new input: a star pair of `d_star` on either
+        side, or a told existential of `full` against the whole closures.
+
+        The shared-scan chain while every side broadcasts (its tagged
+        closure holds each star pair twice): measured end to end faster
+        than the one-sided passes at 600 and at 21,000 told existentials,
+        below and above the staged-plan crossover. Closures past the
+        broadcast bound were not measured and keep the staged / hub-salted
+        passes. So does a grown property hierarchy past the crossover:
+        re-deriving every told existential is the full-size derive that the
+        staged plan's 1.7x measurement covers."""
+        if _fits(self.cfg, 2 * self.rows + self.n_sp) and not (
+            self.staged and full is self.some
+        ):
+            return derive_delta_relations(
+                self.star, self.some, self.sp_star, d_star, full, self.max_token
+            )
+        return derive_delta_passes(
+            self.star, self.some, self.sp_star, d_star, full, self.cfg.broadcast_row_threshold,
+            sides_broadcast=_fits(self.cfg, self.rows + self.n_sp), staged=self.staged,
+            max_token=self.max_token,
+        )
+
+    def known_sc(self) -> DataFrame:
+        # |sc| <= |tc| <= rows
+        return _bounded_broadcast(self.cfg, self.sc, self.rows)
+
+
+def feedback_rounds(
+    fx: ClassFixpoint, cand: DataFrame | None, activated: DataFrame | None, narrow: bool
+) -> None:
+    """R4 equivalence feedback to fixpoint (reference
+    RelationGraph.scala:217-230): the one round body the batch and the
+    stream share, semi-naive over the class closure.
+
+    First the candidate rel rows `cand` settle against the history, and the
+    R4 facts they fire join the `activated` ones (definitions new to the
+    history, fired against it; `narrow` as in _settle). Then each round
+    adds the new facts to `sc`, extends the closure with them (close),
+    derives the rel rows that use a new star pair (derive) and settles
+    those, until a round fires no new fact. Only new rel rows can fire a
+    definition they have not fired before, so each round's work is the size
+    of its delta, not of the fixpoint."""
+    rel, new_sc, n = _settle(
+        cand, fx.history, None, fx.defs, fx.known_sc(), activated, narrow=narrow
+    )
+    fx.rel, fx.n_rel = rel, n.get("rel", 0)
+    for _round in range(fx.cfg.max_iterations):
+        if not n.get("sc"):
+            return
+        fx.sc_parts.append(new_sc)
+        fx.sc = fx.sc.unionByName(new_sc)
+        d_star, n_star = fx.close(new_sc)
+        if n_star == 0:
+            return  # facts were already entailed; no new rel can arise
+        fx.grow(d_star, n_star)
+        rel, new_sc, n = _settle(
+            fx.derive(d_star, None),
+            fx.history,
+            _bounded_broadcast(fx.cfg, fx.rel, fx.n_rel),
+            fx.defs,
+            fx.known_sc(),
+            narrow=_fits(fx.cfg, fx.n_rel) and _fits(fx.cfg, fx.rows),
+        )
+        fx.rel = fx.rel.unionByName(rel)
+        fx.n_rel += n["rel"]
+    raise FixpointDidNotConverge(
+        f"R4 feedback did not converge in {fx.cfg.max_iterations} rounds"
+    )
+
+
 def apply_delta(
     state: dict[str, DataFrame],
     delta_told: dict[str, DataFrame],
@@ -606,7 +735,7 @@ def apply_delta(
     frame to the rows ADDED this batch (disjoint from the old frame) — the
     basis for delta-sized emission and delta-sized state persistence.
     Equivalence feedback (AX_EQUIV_SOME) stays on this delta-sized path: R4
-    rounds run incrementally after the monotone fold (see module doc).
+    rounds (feedback_rounds) run after the monotone fold.
     """
     # ------- monotone fold (everything except R4 feedback) --------------
     #
@@ -618,13 +747,6 @@ def apply_delta(
     # cache keys ("_sc_star", "_sp_star", "_n_*", "_max_token") instead of
     # being recomputed from the full state each batch.
     _ensure_derived(state, cfg)
-    thr = cfg.broadcast_row_threshold
-
-    def fits(rows: int) -> bool:
-        return 0 < thr and rows <= thr
-
-    def bounded_broadcast(df: DataFrame, rows: int) -> DataFrame:
-        return F.broadcast(df) if fits(rows) else df
 
     # ONE tagged anti-join folds every told frame: the delta frames as one
     # (frame, t0, t1, t2) union against the same union of the state frames,
@@ -646,7 +768,7 @@ def apply_delta(
         + state["_n_def"]
         + state["_n_assertions"]
     )
-    state_told = bounded_broadcast(state_told, told_rows)
+    state_told = _bounded_broadcast(cfg, state_told, told_rows)
     # (an outer join + null filter, not a left_anti: Catalyst pushes an
     # anti-join through the union into one join — and one broadcast job —
     # per frame)
@@ -678,32 +800,6 @@ def apply_delta(
 
     classes_new = state["classes"].unionByName(d["classes"])
     props_new = state["props"].unionByName(d["props"])
-    sc_new = state["sc"].unionByName(d["sc"])
-    index = state["_sc_index"]
-
-    def close(
-        sc_tc: DataFrame, edges: DataFrame, rows: int
-    ) -> tuple[DataFrame, DataFrame, DataFrame, tuple[int, int]]:
-        """Incremental TC of `edges` onto `sc_tc`, served by the class
-        closure's index while the star closure (`rows`, which upper-bounds
-        |sc_tc|) fits the broadcast bound; a call the index did not serve
-        drops it. Returns (new tc, tc delta, its star rows, their stats)."""
-        nonlocal index
-        tc_new, d_tc, index = incremental_tc(
-            sc_tc, edges, cfg, old_tc_rows=rows, index=index if fits(rows) else None
-        )
-        d_star = d_tc.where(f"sub != sup AND sup != {T.TOP}")
-        return tc_new, d_tc, d_star, _star_stats(d_star, index)
-
-    if n_d["sc"]:
-        sc_tc_new, d_tc, d_star_tc, (n_star_total, bot_new) = close(
-            state["sc_tc"], d["sc"], state["_n_sc_star"]
-        )
-    else:
-        # no new edge, no new pair
-        sc_tc_new, d_tc, d_star_tc, n_star_total, bot_new = (
-            state["sc_tc"], d["sc"], d["sc"], 0, 0
-        )
 
     sp_new = state["sp"].unionByName(d["sp"])
     sp_changed = n_d["sp"] > 0
@@ -722,157 +818,80 @@ def apply_delta(
         n_sp_new = state["_n_sp_star"] + n_d["props"]
 
     some_new = state["some"].unionByName(d["some"])
-
-    # delta closure pairs incl. reflexive/top pairs of newly-seen classes.
-    # The pieces are pairwise disjoint by construction (d_tc minus its
-    # self-pairs and TOP-pairs — both already covered by the reflexive/top
-    # rows of whichever batch introduced the class), so sc_star extends by
-    # plain union, no O(closure) dedup. The class rows' stats come from the
-    # told fold's: one (c, c) row per new class but TOP, one (c, TOP) row
-    # per new class.
-    d_classes = d["classes"]
-    d_star = d_star_tc.unionByName(
-        d_classes.where(f"c != {T.TOP}").selectExpr("c AS sub", "c AS sup")
-    ).unionByName(d_classes.selectExpr("c AS sub", f"CAST({T.TOP} AS INT) AS sup"))
-    if n_d["classes"]:
-        new_classes = stats["classes"]
-        n_star_total += 2 * new_classes["n"] - new_classes["top"]
-        bot_new += new_classes["bot"]
-    sc_star_new = state["_sc_star"].unionByName(d_star)
+    def_new = state["def_some"].unionByName(d["def_some"])
 
     # running side stats: broadcast decision + packability without a
     # per-batch O(closure) count/max scan
     n_some = state["_n_some"] + n_d["some"]
+    n_def = state["_n_def"] + n_d["def_some"]
     max_tok = max(state["_max_token"] or -1, d_max if d_max is not None else -1)
     if max_tok < 0:
         max_tok = None
 
-    staged = n_some > cfg.incremental_feedback_threshold
+    fx = ClassFixpoint(
+        cfg, state, sc=state["sc"].unionByName(d["sc"]), tc=state["sc_tc"],
+        star=state["_sc_star"], rows=state["_n_sc_star"], index=state["_sc_index"],
+        some=some_new, sp_star=sp_star_new, n_sp=n_sp_new, max_token=max_tok,
+        staged=n_some > cfg.incremental_feedback_threshold,
+        defs=_bounded_broadcast(cfg, def_new, n_def) if n_def else None,
+    )
+    if n_d["sc"]:
+        d_star, n_star = fx.close(d["sc"])
+    else:
+        # no new edge, no new pair
+        d_star, n_star = d["sc"], 0
+        fx.tc_parts.append(d["sc"])
 
-    def derive(
-        sc_star: DataFrame, n_closure: int, d_star_r: DataFrame | None, full: DataFrame | None
-    ) -> DataFrame:
-        # The shared-scan chain while every side broadcasts (its tagged
-        # closure holds each sc_star pair twice): measured end to end
-        # faster than the one-sided passes at 600 and at 21,000 told
-        # existentials, below and above the staged-plan crossover. Closures
-        # past the broadcast bound were not measured and keep the staged /
-        # hub-salted passes. So does a grown property hierarchy past the
-        # crossover: re-deriving every told existential is the full-size
-        # derive that the staged plan's 1.7x measurement covers.
-        if fits(2 * n_closure + n_sp_new) and not (staged and full is some_new):
-            return derive_delta_relations(sc_star, some_new, sp_star_new, d_star_r, full, max_tok)
-        return derive_delta_passes(
-            sc_star,
-            some_new,
-            sp_star_new,
-            d_star_r,
-            full,
-            thr,
-            sides_broadcast=fits(n_closure + n_sp_new),
-            staged=staged,
-            max_token=max_tok,
-        )
+    # the star delta also holds the reflexive/top pairs of newly-seen
+    # classes, disjoint from the tc delta's star pairs. Their stats come
+    # from the told fold's: one (c, c) row per new class but TOP, one
+    # (c, TOP) row per new class.
+    d_classes = d["classes"]
+    d_star = d_star.unionByName(
+        d_classes.where(f"c != {T.TOP}").selectExpr("c AS sub", "c AS sup")
+    ).unionByName(d_classes.selectExpr("c AS sub", f"CAST({T.TOP} AS INT) AS sup"))
+    if n_d["classes"]:
+        new_classes = stats["classes"]
+        n_star += 2 * new_classes["n"] - new_classes["top"]
+        fx.bot += new_classes["bot"]
+    fx.grow(d_star, n_star)
 
     # R3 over every new input at once: new closure pairs on either side, new
     # told existentials, or — when the property hierarchy grew — every told
     # existential against the full (tiny) property closure
     full_some = some_new if sp_changed else (d["some"] if n_d["some"] else None)
     cand = (
-        derive(
-            sc_star_new,
-            state["_n_sc_star"] + n_star_total,
-            d_star if n_star_total else None,
-            full_some,
-        )
-        if n_star_total or full_some is not None
+        fx.derive(d_star if n_star else None, full_some)
+        if n_star or full_some is not None
         else None
     )
 
     # ------- R4 equivalence feedback, delta-sized -----------------------
-    # sc facts derived from rel x def_some re-enter R1/R3 (reference
-    # RelationGraph.scala:217-230; the batch engine's incremental feedback
-    # rounds, materialize.py). Candidates come from the batch's NEW rel rows
-    # against all definitions, plus — only when a NEW definition arrived —
-    # one broadcast-join scan of the accumulated rel to activate it against
-    # history. Each round: new sc facts -> incremental TC -> delta-restricted
-    # R3 -> new rel rows -> new candidates, until dry.
-    def_new = state["def_some"].unionByName(d["def_some"])
-    n_def = state["_n_def"] + n_d["def_some"]
-    fire = late = None
-    if n_def > 0:
-        defs = bounded_broadcast(def_new, n_def)
-
-        def fire(rel_rows: DataFrame) -> DataFrame:
-            return _fire(rel_rows, defs)
-
-        if n_d["def_some"]:
-            # late definition: one-time activation against committed
-            # history (broadcast join over the rel scan — no shuffle)
-            late = _fire(state["rel"], F.broadcast(d["def_some"]))
-
-    # |sc| <= |sc_tc| <= running sc_star rows. Only a steady batch's
-    # candidates are delta-sized: a grown property hierarchy re-derives
-    # every told existential, and a late definition scans the history.
-    sc_rows = state["_n_sc_star"] + n_star_total
-    rel_delta, new_sc, n = _settle(
-        cand,
-        state,
-        None,
-        fire,
-        bounded_broadcast(sc_new, sc_rows),
-        late,
-        narrow=not sp_changed and not n_d["def_some"] and fits(sc_rows),
+    # Candidates come from the batch's NEW rel rows against all definitions,
+    # plus — only when a NEW definition arrived — one broadcast-join scan of
+    # the accumulated rel to activate it against history. Only a steady
+    # batch's candidates are delta-sized: a grown property hierarchy
+    # re-derives every told existential, and a late definition scans the
+    # history.
+    late = _fire(state["rel"], F.broadcast(d["def_some"])) if n_d["def_some"] else None
+    feedback_rounds(
+        fx, cand, late, narrow=not sp_changed and not n_d["def_some"] and _fits(cfg, fx.rows)
     )
-    n_rel = n.get("rel", 0)
-    sc_feedback, d_tc_parts, d_star_parts = [], [d_tc], [d_star]
-    for _round in range(cfg.max_iterations):
-        if not n.get("sc"):
-            break
-        sc_feedback.append(new_sc)
-        sc_new = sc_new.unionByName(new_sc)
-        # classes are fixed during feedback, so the closure delta minus
-        # self/TOP pairs is disjoint from sc_star — plain union
-        sc_tc_new, d_tc_r, d_star_r, (n_star_r, bot_r) = close(
-            sc_tc_new, new_sc, state["_n_sc_star"] + n_star_total
-        )
-        d_tc_parts.append(d_tc_r)
-        if n_star_r == 0:
-            break  # facts were already entailed; no new rel can arise
-        bot_new += bot_r
-        n_star_total += n_star_r
-        sc_rows = state["_n_sc_star"] + n_star_total
-        sc_star_new = sc_star_new.unionByName(d_star_r)
-        d_star_parts.append(d_star_r)
-        rel_r, new_sc, n = _settle(
-            derive(sc_star_new, sc_rows, d_star_r, None),
-            state,
-            bounded_broadcast(rel_delta, n_rel),
-            fire,
-            bounded_broadcast(sc_new, sc_rows),
-            narrow=fits(n_rel) and fits(sc_rows),
-        )
-        rel_delta = rel_delta.unionByName(rel_r)
-        n_rel += n["rel"]
-    else:
-        raise FixpointDidNotConverge(
-            f"streaming R4 feedback did not converge in {cfg.max_iterations} rounds"
-        )
 
     new_state = {
-        "sc": sc_new,
+        "sc": fx.sc,
         "some": some_new,
         "def_some": def_new,
         "sp": sp_new,
         "classes": classes_new,
         "props": props_new,
         "assertions": state["assertions"].unionByName(d["assertions"]),
-        "sc_tc": sc_tc_new,
-        "rel": state["rel"].unionByName(rel_delta),
+        "sc_tc": fx.tc,
+        "rel": state["rel"].unionByName(fx.rel),
         # derived carry-forward (in-memory only; rebuilt lazily on restart)
-        "_sc_star": sc_star_new,
+        "_sc_star": fx.star,
         "_sp_star": sp_star_new,
-        "_n_sc_star": state["_n_sc_star"] + n_star_total,
+        "_n_sc_star": fx.rows,
         "_n_sp_star": n_sp_new,
         "_n_some": n_some,
         "_n_def": n_def,
@@ -880,9 +899,9 @@ def apply_delta(
         # True once any (x, owl:Nothing) closure pair is seen; False only
         # when provably never seen; None = unknown -> callers fall back to
         # computing unsat
-        "_has_bot": True if bot_new > 0 else state.get("_has_bot"),
+        "_has_bot": True if fx.bot > 0 else state.get("_has_bot"),
         "_max_token": max_tok,
-        "_sc_index": index,
+        "_sc_index": fx.index,
     }
     for key in ("_state_roots", "_state_tagged"):
         if key in state:
@@ -891,18 +910,18 @@ def apply_delta(
     deltas = {
         # told delta + R4-derived feedback facts: the persisted sc frame must
         # reconstruct the same told-plus-derived set initial_state seeds
-        "sc": _union([d["sc"], *sc_feedback]),
+        "sc": _union([d["sc"], *fx.sc_parts]),
         "some": d["some"],
         "def_some": d["def_some"],
         "sp": d["sp"],
         "classes": d_classes,
         "props": d["props"],
         "assertions": d["assertions"],
-        "sc_tc": _union(d_tc_parts),
-        "rel": rel_delta,
+        "sc_tc": _union(fx.tc_parts),
+        "rel": fx.rel,
         # derived-frame deltas, persisted so repoint_state can re-anchor the
         # carried-forward closures at the on-disk store each batch
-        "sc_star": _union(d_star_parts),
+        "sc_star": _union(fx.star_parts),
         "sp_star": d_sp_star,
     }
     return new_state, deltas

@@ -10,11 +10,14 @@ fixpoint of (SURVEY.md section 7.0)
     R4  sc(x,f)    <- rel(x,p,y), def_some(f,p,y)   equivalence feedback
 
 over the told tables produced by decode.told_tables. R4 feeds back into
-R1/R3, so the outer loop is itself a (small) fixpoint: each round recomputes
-the class closure with the newly derived subclass facts until no new fact
-appears. The golden `E subClassOf F` entailment of the reference's
-materialize_test.ofn requires exactly one feedback round
-(TestRelationGraph.scala:41-46).
+R1/R3, so the outer loop is itself a (small) fixpoint. Round 0 closes the
+told hierarchy and derives R3 in full; the feedback rounds after it are
+semi-naive, and the same ones the streaming engine runs
+(incremental.feedback_rounds): each extends the class closure with just the
+newly derived subclass facts and derives just the relation rows that use a
+new closure pair, until no new fact appears. The golden `E subClassOf F`
+entailment of the reference's materialize_test.ofn requires exactly one
+feedback round (TestRelationGraph.scala:41-46).
 
 Physical shape (the 100-TB story):
 - `some` (told existentials) is the fact table: it scales with the input
@@ -23,7 +26,7 @@ Physical shape (the 100-TB story):
   broadcast hash joins over one pass of the fact table, no fact-table
   shuffle at all. Above the threshold Catalyst/AQE picks shuffled joins and
   splits skewed partitions (hub classes with huge fan-in).
-- every loop iteration localCheckpoints its delta (lineage truncation).
+- every round localCheckpoints its delta (lineage truncation).
 - the property-hierarchy closure is computed once outside the loop — R4 only
   ever adds *class* subsumptions (mirrors the reference's separate tiny
   property saturation, RelationGraph.scala:184-200).
@@ -81,19 +84,6 @@ def _distinct3(df: DataFrame, c1: str, c2: str, c3: str, packable: bool) -> Data
     if packable:
         return _packed_distinct(df, c1, c2, c3)
     return df.select(c1, c2, c3).dropDuplicates()
-
-
-def _sc_star(sc: DataFrame, classes: DataFrame, cfg: RGConfig):
-    """(transitive closure, closure.star_closure of it). The star runs once
-    per R4 round on the full-recompute path, so it is checkpointed."""
-    tc = transitive_closure(
-        sc,
-        child="sub",
-        parent="sup",
-        max_iterations=cfg.max_iterations,
-        broadcast_row_threshold=cfg.broadcast_row_threshold,
-    )
-    return tc, star_closure(tc, classes).localCheckpoint(eager=False)
 
 
 def derive_relations(
@@ -300,7 +290,6 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
     )
     st = {r["f"]: r for r in stats}
     n_some, n_def = st["some"]["n"], st["def"]["n"]
-    has_feedback = n_def > 0
     max_token = max(
         [m for m in (st["classes"]["m"], st["props"]["m"], T.TOP, T.BOT) if m is not None],
         default=None,
@@ -308,85 +297,58 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
 
     thr = cfg.broadcast_row_threshold
     staged = n_some > cfg.incremental_feedback_threshold
-    dr_kw = {"staged": staged, "max_token": max_token}
     # round 0: full class closure + full R3
-    sc_tc, sc_star = _sc_star(sc, classes, cfg)
-    rel = derive_relations(sc_star, some, sp_star, thr, **dr_kw).localCheckpoint(
-        eager=False
+    sc_tc = transitive_closure(
+        sc, child="sub", parent="sup", max_iterations=cfg.max_iterations,
+        broadcast_row_threshold=thr,
     )
+    sc_star = star_closure(sc_tc, classes).localCheckpoint(eager=False)
+    rel = derive_relations(
+        sc_star, some, sp_star, thr, staged=staged, max_token=max_token
+    ).localCheckpoint(eager=False)
 
-    if has_feedback:
-        # R4 feedback rounds are INCREMENTAL: each round extends the closure
-        # with just the newly derived subclass facts (closure.incremental_tc)
-        # and re-derives only the relation rows that involve a new closure
-        # pair (delta-restricted R3, same discipline as the streaming
-        # engine) — per-round work is proportional to the round's delta, not
-        # a full recompute of the most expensive stage. Below the
-        # cost-crossover (tiny told tables, where per-job fixed cost
-        # dominates) rounds fall back to the plain full recompute.
-        from relation_graph_spark.closure import incremental_tc
+    index = None
+    if n_def:
+        # R4 feedback: the stream's semi-naive rounds (feedback_rounds),
+        # whose first round is the stream's late-definition case — every
+        # definition fires against the round-0 rel. One job counts the
+        # closure sides for the broadcast decisions; the class closure's
+        # ClosureIndex is pulled only while the star closure fits the
+        # broadcast bound, as in the stream, and the rounds run the
+        # distributed TC otherwise.
+        from relation_graph_spark.closure import ClosureIndex
+        from relation_graph_spark.incremental import (
+            ClassFixpoint,
+            _bounded_broadcast,
+            _fits,
+            feedback_rounds,
+        )
 
-        incremental_rounds = n_some > cfg.incremental_feedback_threshold
-
-        def _r4_new_sc(rel_df, sc_df):
-            return (
-                _fire(rel_df, F.broadcast(def_some))
-                .dropDuplicates()
-                .join(sc_df, on=["sub", "sup"], how="left_anti")
-                .localCheckpoint(eager=False)
-            )
-
-        rel_dirty = False  # rel may carry duplicates across round deltas
-        for _round in range(cfg.max_iterations):
-            new_sc = _r4_new_sc(rel, sc)
-            if new_sc.isEmpty():
-                break
-            sc = sc.unionByName(new_sc).localCheckpoint(eager=False)
-            if not incremental_rounds:
-                sc_tc, sc_star = _sc_star(sc, classes, cfg)
-                rel = derive_relations(
-                    sc_star, some, sp_star, thr, **dr_kw
-                ).localCheckpoint(eager=False)
-                continue
-            sc_tc, d_tc, _ = incremental_tc(
-                sc_tc, new_sc, max_iterations=cfg.max_iterations,
-                broadcast_row_threshold=thr,
-            )
-            # classes are fixed during feedback, so the closure delta minus
-            # its self/TOP pairs (already present as reflexive/top rows) is
-            # disjoint from sc_star — plain union, no O(closure) dedup
-            d_star = d_tc.where(
-                (F.col("sub") != F.col("sup")) & (F.col("sup") != T.TOP)
-            ).localCheckpoint(eager=False)
-            if d_star.isEmpty():
-                continue  # told edge was already entailed; rel unchanged
-            sc_star = sc_star.unionByName(d_star).localCheckpoint(eager=False)
-            rel_d = derive_relations(
-                sc_star, some, sp_star, thr, subject_star=d_star, **dr_kw
-            ).unionByName(
-                derive_relations(
-                    sc_star, some, sp_star, thr, filler_star=d_star, **dr_kw
-                )
-            )
-            rel = rel.unionByName(rel_d.dropDuplicates()).localCheckpoint(eager=False)
-            rel_dirty = True
-        else:
-            raise FixpointDidNotConverge(
-                f"R4 feedback loop did not converge in {cfg.max_iterations} rounds"
-            )
-        if rel_dirty:
-            # round deltas may re-derive rows reachable through older pairs;
-            # one final dedup instead of an O(rel) anti-join per round
-            rel = rel.dropDuplicates().localCheckpoint(eager=False)
+        n = dict(
+            sc_star.selectExpr("'star' AS f")
+            .unionByName(sp_star.selectExpr("'sp' AS f"))
+            .groupBy("f")
+            .count()
+            .collect()
+        )
+        rows = n.get("star", 0)
+        defs = _bounded_broadcast(cfg, def_some, n_def)
+        fx = ClassFixpoint(
+            cfg, {"rel": rel}, sc=sc, tc=sc_tc, star=sc_star, rows=rows,
+            index=ClosureIndex.pull(sc_tc) if _fits(cfg, rows) else None,
+            some=some, sp_star=sp_star, n_sp=n.get("sp", 0), max_token=max_token,
+            staged=staged, defs=defs,
+        )
+        feedback_rounds(fx, None, _fire(rel, defs), narrow=False)
+        # the rounds' rel rows are disjoint from the round-0 rel
+        rel = rel.unionByName(fx.rel)
+        sc, sc_tc, sc_star, index = fx.sc, fx.tc, fx.star, fx.index
 
     unsat = compute_unsat(sc_star, some, cfg)
-
-    # the loop's final TC already closes the post-R4 subclass graph — no
-    # extra closure pass needed
-    sc_closure = sc_tc
     return {
         "rel": rel,
-        "sc_closure": sc_closure,
+        # the rounds' TC already closes the post-R4 subclass graph
+        "sc_closure": sc_tc,
         "sc_star": sc_star,
         "sp_star": sp_star,
         "unsat": unsat,
@@ -396,9 +358,11 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         # told subclass edges including R4-derived feedback facts — the
         # incremental engine's state seed
         "sc_final": sc,
-        # scalar stats carried to the incremental engine (avoid re-counts)
+        # scalar stats and the class closure's index (None if not built or
+        # dropped) carried to the incremental engine (avoid re-counts)
         "_n_some": n_some,
         "_n_def": n_def,
+        "_sc_index": index,
         # unsat is empty iff no (x, owl:Nothing) pair is in the closure (or
         # bottom handling is disabled — in which case downstream unsat
         # computation is a no-op too, so the stat stays truthful)

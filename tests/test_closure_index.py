@@ -155,3 +155,43 @@ def test_index_falls_back_on_nulls_and_past_the_bound(spark):
 
     nulls = spark.createDataFrame([(11, None)], "sub int, sup int")
     assert ClosureIndex.pull(nulls) is None
+
+
+def test_packed_closure_bound_counts_distinct_pairs():
+    """The bound is on the deduplicated closure, not on the pairs a round
+    generates: a 1000-node chain closes to 499,500 pairs, and its rounds
+    generate far more before deduplication."""
+    keys = np.unique(C._pack(*_arrays([(i, i + 1) for i in range(999)])))
+    closed = C._close_packed(keys, 499_500, 200)
+    assert closed is not None and len(closed) == 499_500
+    assert C._close_packed(keys, 499_499, 200) is None
+
+    # a 300-edge chain of new edges: ~45,000 chained pairs, served at 1M
+    index = ClosureIndex.of_pairs(*_arrays(_closure([(i, i + 1) for i in range(11, 30)])))
+    tails = np.arange(1000, 1300, dtype=np.int32)
+    extended = index.extend(tails, tails + 1, max_pairs=10**6)
+    assert extended is not None and len(extended) == len(index) + 300 * 301 // 2
+
+
+def test_extend_sizes_ancestor_expansions_before_running_them(monkeypatch):
+    """New edges under a deep ancestry: the ancestor expansion would
+    generate (edges x ancestors) pairs past the bound, so extend refuses
+    before it runs any expansion."""
+    chain = _closure([(i, i + 1) for i in range(11, 61)])  # 11 has 50 ancestors
+    index = ClosureIndex.of_pairs(*_arrays(chain))
+    tails = np.arange(1000, 1100, dtype=np.int32)
+    heads = np.full(100, 11, np.int32)
+    expanded = []
+    real = C._expand
+
+    def spy(keys, nodes):
+        expanded.append(len(nodes))
+        return real(keys, nodes)
+
+    monkeypatch.setattr(C, "_expand", spy)
+    assert index.extend(tails, heads, max_pairs=4_000) is None
+    assert expanded == []
+    # with room for it, the same delta is served
+    extended = index.extend(tails, heads, max_pairs=10**6)
+    assert extended is not None and len(extended) == len(chain) + 100 * 51
+    assert expanded

@@ -46,11 +46,12 @@ def test_mutual_pairs_via_cycle_nodes_no_closure_self_join(spark):
     assert got == eq | sub
 
 
-def test_deep_feedback_chain_incremental_rounds(spark):
+def test_deep_feedback_chain_semi_naive_rounds(spark):
     """An equivalence-definition chain forcing k=4 R4 feedback rounds
     (A subClassOf E1 unlocks E1's told existential, which entails E2, ...):
-    the incremental feedback loop (incremental_tc + delta-restricted R3 per
-    round) must reach the same fixpoint as the naive full recompute."""
+    the semi-naive feedback rounds (feedback_rounds: incremental TC and a
+    delta-restricted R3 per round) must reach the same fixpoint as the
+    naive full recompute of the Python oracle."""
     from pyoracle import materialize_py
 
     A, p = 11, 21

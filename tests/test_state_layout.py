@@ -74,17 +74,22 @@ def _sink(job):
 
 def _tc_paths(monkeypatch):
     """{batch id: [served by the class closure's index?] per incremental TC
-    call}, recorded from every stream job run while the patch holds."""
+    call}, recorded from every stream job run while the patch holds (a
+    batch materialize's R4 rounds outside a stream batch are not)."""
     paths, batch = {}, []
     process, tc = IncrementalClosureJob.process_batch, inc.incremental_tc
 
     def tracked(self, df, batch_id):
         batch[:] = [batch_id]
-        return process(self, df, batch_id)
+        try:
+            return process(self, df, batch_id)
+        finally:
+            batch.clear()
 
     def recorded(*args, **kw):
         out = tc(*args, **kw)
-        paths.setdefault(batch[0], []).append(out[2] is not None)
+        if batch:
+            paths.setdefault(batch[0], []).append(out[2] is not None)
         return out
 
     monkeypatch.setattr(IncrementalClosureJob, "process_batch", tracked)
@@ -155,8 +160,9 @@ def test_every_persisted_frame_reads_back_pinned(spark, tmp_path, monkeypatch, t
         df = loaded[inc.DERIVED_FRAMES.get(name, name)]
         assert set(dict(df.dtypes).values()) == {"int"}, (name, df.dtypes)
     assert _sink(job) == _golden(spark, batches)
-    # every delta batch ran incremental TC, all of it on the forced path
-    assert sorted(paths) == [1, 2, 3], paths
+    # the bootstrap's R4 rounds and every delta batch ran incremental TC,
+    # all of it on the forced path
+    assert sorted(paths) == [0, 1, 2, 3], paths
     assert {p for calls in paths.values() for p in calls} == {tc_path == "driver"}, paths
 
 
@@ -286,18 +292,6 @@ def test_delta_derive_matches_passes_inside_apply_delta(spark, monkeypatch, regi
 
         return derive
 
-    for name in ("derive_delta_relations", "derive_delta_passes"):
-        monkeypatch.setattr(inc, name, checked(name))
-    # the first settle of each batch: (batch, narrow) — a history-sized
-    # candidate set must not be read through a single partition
-    first_settles = {}
-    real_settle = inc._settle
-
-    def settle(*args, narrow=False, **kw):
-        first_settles.setdefault(batch, narrow)
-        return real_settle(*args, narrow=narrow, **kw)
-
-    monkeypatch.setattr(inc, "_settle", settle)
     rng = random.Random(7)
     rows = FX.gen_ontology_rows(40, 3, 80)
     rng.shuffle(rows)
@@ -306,18 +300,35 @@ def test_delta_derive_matches_passes_inside_apply_delta(spark, monkeypatch, regi
     subprop = [[T.AX_DECL_PROP, 143], [T.AX_SUBPROP, 141, 143]]
     k = len(rows) // 3
     splits = [rows[:k] + defs[:1], rows[k : 2 * k] + subprop, rows[2 * k :] + defs[1:]]
+    # the batch output, before the derives are recorded
+    want = _golden(spark, [[r for s in splits for r in s]])
+    for name in ("derive_delta_relations", "derive_delta_passes"):
+        monkeypatch.setattr(inc, name, checked(name))
+    # the first settle of each batch, the bootstrap's (batch 0) included:
+    # (batch, narrow) — a history-sized candidate set must not be read
+    # through a single partition
+    first_settles = {}
+    real_settle = inc._settle
+
+    def settle(*args, narrow=False, **kw):
+        first_settles.setdefault(batch, narrow)
+        return real_settle(*args, narrow=narrow, **kw)
+
+    monkeypatch.setattr(inc, "_settle", settle)
     told = lambda part, i: told_tables(decode_axioms(FX._rows_to_df(spark, part, f"s{i}")))  # noqa: E731
+    batch = 0
     state = inc.initial_state(told(splits[0], 0), cfg)
     for batch, part in enumerate(splits[1:], 1):
         state, _ = inc.apply_delta(state, told(part, batch), cfg)
-    assert triples(inc.assemble_from_state(state, cfg)) == _golden(spark, [[r for s in splits for r in s]])
+    assert triples(inc.assemble_from_state(state, cfg)) == want
     assert any(full for _n, _d, full in calls)  # property hierarchy grew
     assert len(calls) > len(splits) - 1  # R4 rounds derived too
     for name, _d, full in calls:
         passes = regime == "no_broadcast" or (regime == "staged" and full)
         assert name == ("derive_delta_passes" if passes else "derive_delta_relations"), calls
-    # batch 1 grew the property hierarchy, batch 2 added late definitions
-    assert first_settles == {1: False, 2: False}
+    # the bootstrap fired its definitions against the round-0 rel, batch 1
+    # grew the property hierarchy, batch 2 added late definitions
+    assert first_settles == {0: False, 1: False, 2: False}
 
 
 def test_stream_without_broadcasts_equals_batch(spark, tmp_path):
@@ -362,7 +373,10 @@ def test_index_dropped_past_bound_mid_stream(spark, tmp_path, monkeypatch):
 
     job.process_batch = bounded
     job.run_available(max_files_per_trigger=1)
-    assert paths == {1: [True, True], 2: [True, False], 3: [False, False], 4: [False, False]}
+    # the bootstrap's two R4 rounds are index-served too
+    assert paths == {
+        0: [True, True], 1: [True, True], 2: [True, False], 3: [False, False], 4: [False, False]
+    }
     assert job._state["_sc_index"] is None
     assert _sink(job) == _golden(spark, batches)
 
@@ -385,20 +399,24 @@ def test_steady_batch_job_budget(spark, tmp_path, monkeypatch):
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     jobs = {}
     process = job.process_batch
+    batch = []
 
     def counted(df, batch_id):
+        batch[:] = [batch_id]
         j0 = dag.nextJobId()
         process(df, batch_id)
         jobs[batch_id] = dag.nextJobId() - j0
 
     job.process_batch = counted
     # a steady batch's history anti-join and R4 dedup take the
-    # single-partition probes the budget counts on
+    # single-partition probes the budget counts on (the bootstrap's rounds
+    # settle against the in-memory rel, never narrow)
     narrow = []
     real_settle = inc._settle
 
     def settle(*args, **kw):
-        narrow.append(kw.get("narrow", False))
+        if batch[0] > 0:
+            narrow.append(kw.get("narrow", False))
         return real_settle(*args, **kw)
 
     monkeypatch.setattr(inc, "_settle", settle)

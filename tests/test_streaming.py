@@ -982,9 +982,33 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
         shutil.copy2(os.path.join(inp_stage, f), os.path.join(inp, f))
     cfg = RGConfig(output_subclasses=True, reflexive_subclasses=False)
     work = str(tmp_path / "work")
+    # every pull of the class closure's index, with the closure it pulled
+    from relation_graph_spark.closure import ClosureIndex
+
+    pulls = []
+    pull = ClosureIndex.pull.__func__
+
+    def recorded_pull(cls, tc):
+        index = pull(cls, tc)
+        pulls.append((index, {tuple(r) for r in tc.collect()}))
+        return index
+
+    monkeypatch.setattr(ClosureIndex, "pull", classmethod(recorded_pull))
+
+    def pairs(index):
+        sub, sup = index.pairs()
+        return set(zip(sub.tolist(), sup.tolist()))
+
     job1 = IncrementalClosureJob(spark, inp, work, cfg)
     job1.run_available(max_files_per_trigger=1)
     assert len(job1.metrics()) == 2
+    # the bootstrap's R4 rounds pull the index once and hand it to the
+    # stream: the first delta batch pulls nothing
+    assert len(pulls) == 1 and pulls[0][0] is not None
+    assert pairs(pulls[0][0]) == pulls[0][1]
+    assert pairs(job1._state["_sc_index"]) == {
+        tuple(r) for r in job1._state["sc_tc"].collect()
+    }
     # phase 2: fresh job object (simulated restart), remaining batches
     for f in files[2:]:
         shutil.copy2(os.path.join(inp_stage, f), os.path.join(inp, f))
@@ -997,35 +1021,19 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
         has_bot.append(job2._state["_has_bot"])
 
     job2.process_batch = recording
+    job2.run_available(max_files_per_trigger=1)
     # the restarted job rebuilds the class closure's index once, from the
     # stored sc_tc
-    from relation_graph_spark.closure import ClosureIndex
-
-    pulls = []
-    pull = ClosureIndex.pull.__func__
-
-    def recorded_pull(cls, tc):
-        index = pull(cls, tc)
-        pulls.append((index, {tuple(r) for r in tc.collect()}))
-        return index
-
-    monkeypatch.setattr(ClosureIndex, "pull", classmethod(recorded_pull))
-    job2.run_available(max_files_per_trigger=1)
-    assert _sink_triples(job2) == _equiv_golden(spark)
-    # the restart seeds the owl:Nothing stat instead of leaving it unknown
-    # (unknown = every later batch recomputes unsat in full)
-    assert has_bot and has_bot[0] is False
-
-    def pairs(index):
-        sub, sup = index.pairs()
-        return set(zip(sub.tolist(), sup.tolist()))
-
-    assert len(pulls) == 1 and pulls[0][0] is not None
-    assert pairs(pulls[0][0]) == pulls[0][1]
+    assert len(pulls) == 2 and pulls[1][0] is not None
+    assert pairs(pulls[1][0]) == pulls[1][1]
     # ... and keeps it equal to the stored closure through later batches
     assert pairs(job2._state["_sc_index"]) == {
         tuple(r) for r in job2._state["sc_tc"].collect()
     }
+    assert _sink_triples(job2) == _equiv_golden(spark)
+    # the restart seeds the owl:Nothing stat instead of leaving it unknown
+    # (unknown = every later batch recomputes unsat in full)
+    assert has_bot and has_bot[0] is False
 
 
 def test_lineage_running_totals(spark, tmp_path):
