@@ -203,20 +203,27 @@ def _member(keys: np.ndarray, q: np.ndarray) -> np.ndarray:
     return keys[np.minimum(pos, len(keys) - 1)] == q if len(keys) else np.zeros(len(q), bool)
 
 
-def _ranges(keys: np.ndarray, nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(start, length) of the range of sorted `keys` whose high half is each
-    of `nodes`."""
-    base = nodes.astype(np.int64) << 32
+def _ranges(
+    keys: np.ndarray, nodes: np.ndarray, shift: int = 32
+) -> tuple[np.ndarray, np.ndarray]:
+    """(start, length) of the range of sorted `keys` whose bits above the
+    low `shift` (the high half, by default) are each of `nodes`."""
+    base = nodes.astype(np.int64) << shift
     lo = np.searchsorted(keys, base, "left")
-    return lo, np.searchsorted(keys, base | _LOW32, "right") - lo
+    return lo, np.searchsorted(keys, base | ((1 << shift) - 1), "right") - lo
+
+
+def _spread(lo: np.ndarray, n: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(index into the ranges, position) of every position of the ranges
+    [lo, lo + n)."""
+    owner = np.repeat(np.arange(len(n)), n)
+    return owner, np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
 
 
 def _expand(keys: np.ndarray, nodes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(index into nodes, position in keys) of every key of sorted `keys`
     whose high half is one of `nodes`: one range lookup per node."""
-    lo, n = _ranges(keys, nodes)
-    owner = np.repeat(np.arange(len(nodes)), n)
-    return owner, np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
+    return _spread(*_ranges(keys, nodes))
 
 
 def _expand_within(
@@ -359,6 +366,11 @@ class ClosureIndex:
         new = new[~_member(self.fwd, new)]
         if len(self) + len(new) > max_pairs:
             return None
+        return self.union(new)
+
+    def union(self, new: np.ndarray) -> ClosureIndex:
+        """This relation plus the packed pairs `new` (sorted, unique and
+        absent from it), which become `added`. Not closed again."""
         s, p = _unpack(new)
         rev = np.sort(_pack(p, s))
         return ClosureIndex(
@@ -489,26 +501,29 @@ def reflexive(nodes: DataFrame, node_col: str, child: str, parent: str) -> DataF
     ).dropDuplicates()
 
 
-def star_closure(tc: DataFrame, classes: DataFrame) -> DataFrame:
+def star_closure(tc: DataFrame, classes: DataFrame, broadcast: bool = False) -> DataFrame:
     """The class star closure: tc (sub, sup) plus every class's reflexive
     pair plus its implicit (c, TOP) pair.
 
     Built as a DISJOINT union instead of deduplicated: tc overlaps the
     reflexive rows only on cycle self-pairs and the top rows only on told
-    (x, TOP) pairs, both vocabulary-rare and broadcast-anti-joined away, and
-    the reflexive and top rows overlap each other only at (TOP, TOP),
-    excluded from the top side. No O(closure) dropDuplicates exchange."""
+    (x, TOP) pairs, both vocabulary-rare and anti-joined away, and the
+    reflexive and top rows overlap each other only at (TOP, TOP), excluded
+    from the top side. No O(closure) dropDuplicates exchange. Each overlap
+    side holds at most one pair per class: `broadcast` (the caller's class
+    count fits its broadcast bound) hints both; otherwise the session's
+    byte threshold decides."""
     refl = reflexive(classes, "c", "sub", "sup")
     top = classes.where(F.col("c") != T.TOP).select(
         F.col("c").alias("sub"), F.lit(T.TOP).cast("int").alias("sup")
     )
     self_pairs = tc.where(F.col("sub") == F.col("sup"))
     top_pairs = tc.where((F.col("sup") == T.TOP) & (F.col("sub") != T.TOP))
+    if broadcast:
+        self_pairs, top_pairs = F.broadcast(self_pairs), F.broadcast(top_pairs)
     return tc.unionByName(
-        refl.join(F.broadcast(self_pairs), on=["sub", "sup"], how="left_anti")
-    ).unionByName(
-        top.join(F.broadcast(top_pairs), on=["sub", "sup"], how="left_anti")
-    )
+        refl.join(self_pairs, on=["sub", "sup"], how="left_anti")
+    ).unionByName(top.join(top_pairs, on=["sub", "sup"], how="left_anti"))
 
 
 def property_star(

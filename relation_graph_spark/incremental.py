@@ -13,11 +13,13 @@ ClosureState and extend it with just the batch's delta:
   discipline as closure.transitive_closure);
 - delta-restricted R3: a new relation row needs >= 1 new input among
   {subject-closure pair, told existential, filler-closure pair, property-
-  closure pair}; one shared-scan join chain over side-tagged closures
-  covers all of them (derive_delta_relations; overlaps removed by its one
-  distinct) while the state fits its broadcast regime, the staged
-  one-sided passes above it (derive_delta_passes), then an anti-join
-  against the accumulated rel keeps only genuinely new rows.
+  closure pair}. While the class closure is index-served and the rule
+  inputs fit broadcast_row_threshold, each round derives those rows on the
+  driver (DriverRules: packed int64 arrays next to the ClosureIndex), and
+  Spark only checks them against the accumulated rel, in one probe per
+  batch; otherwise the one-sided passes run in Spark (derive_delta_passes)
+  and an anti-join against the accumulated rel keeps only genuinely new
+  rows (_settle).
 
 - delta-sized R4 equivalence feedback: sc facts derived from rel rows
   matching an AX_EQUIV_SOME definition re-enter R1/R3 as semi-naive rounds
@@ -52,8 +54,9 @@ job of its own, even behind a lazy `localCheckpoint` (the checkpoint
 materializes every shuffle and broadcast stage of its plan up front), and
 each job costs a driver round trip whatever its size. So each phase of
 `apply_delta` folds its frames into one tagged plan (the told fold, the
-shared-scan derive, the history anti-join plus the R4 probe) followed by ONE
-stats job, instead of one plan and one probe per frame. A probe whose
+history anti-join plus the R4 probe) followed by ONE stats job, instead of
+one plan and one probe per frame, and the driver rounds start no job but
+one pull of the told fold and one history probe. A probe whose
 whole input stage is known to be delta-sized (the told fold, the closure
 delta, a steady batch's candidates against a broadcast history) reads it
 through `coalesce(1)`: a single partition satisfies the aggregate's
@@ -67,9 +70,10 @@ from __future__ import annotations
 import json
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,12 +81,19 @@ from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
     ClosureIndex,
     FixpointDidNotConverge,
+    _low,
+    _member,
+    _pack,
+    _ranges,
+    _spread,
+    _unpack,
     property_star,
     star_closure,
 )
 from relation_graph_spark.config import RGConfig
 from relation_graph_spark.materialize import (
     _PACK_BITS,
+    _PACK_MASK,
     _distinct3,
     _fire,
     derive_relations,
@@ -177,12 +188,13 @@ def _union(frames: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
 
 
-def _tagged(df: DataFrame, name: str) -> DataFrame:
+def _tagged(df: DataFrame, name: str, tag: str | None = None) -> DataFrame:
     """(frame, t0, t1, t2) view of one frame: its token columns in
-    FRAME_COLUMNS order as int32, padded with _NO_TOKEN."""
+    FRAME_COLUMNS order as int32, padded with _NO_TOKEN, tagged `tag`
+    (default: the frame's name)."""
     cols = FRAME_COLUMNS[name]
     return df.selectExpr(
-        f"'{name}' AS frame",
+        f"'{tag or name}' AS frame",
         *[
             f"CAST({cols[i] if i < len(cols) else _NO_TOKEN} AS INT) AS {t}"
             for i, t in enumerate(_TAG_COLS)
@@ -269,9 +281,11 @@ def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFr
         "_n_some": m["_n_some"],
         "_n_def": m["_n_def"],
         "_has_bot": m["_has_bot"],
-        # the class closure's index, when the bootstrap's R4 rounds built
-        # one: the first delta batch then needs no pull
-        **({"_sc_index": m["_sc_index"]} if m["_sc_index"] is not None else {}),
+        "_r3_plans": m["_r3_plans"],
+        # the class closure's index and the driver rules, when the
+        # bootstrap's R4 rounds seeded them: the first delta batch then
+        # needs no pull
+        **m["_driver_state"],
     }
 
 
@@ -279,8 +293,11 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
     """Populate the in-memory derived-frame/stat cache if absent (fresh
     restart or the first batch after the bootstrap). One-time O(closure)
     cost per process, not per batch: every missing running stat comes from
-    ONE union-aggregate job, and the class closure's ClosureIndex from one
-    pull."""
+    ONE union-aggregate job. The class closure's ClosureIndex and the
+    driver rules are seeded by the first round that needs them
+    (ClassFixpoint.pull). A star closure rebuilt here (only for a state
+    without its stored star) leaves its broadcasts to the session's byte
+    threshold: no class count is known yet."""
     if "_sc_star" not in state:
         state["_sc_star"] = star_closure(state["sc_tc"], state["classes"]).localCheckpoint(
             eager=False
@@ -325,16 +342,6 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
                 (r["m"] for r in rows if r["key"] == "_max_token" and r["m"] is not None),
                 default=None,
             )
-    if "_sc_index" not in state:
-        # the driver-resident class closure (one pull) while the star
-        # closure fits the broadcast bound, the regime in which the derive
-        # broadcasts the whole closure anyway; None = none for this process
-        # (the closure only grows, so a closure past the bound never fits
-        # again)
-        thr = cfg.broadcast_row_threshold
-        state["_sc_index"] = (
-            ClosureIndex.pull(state["sc_tc"]) if 0 < thr and state["_n_sc_star"] <= thr else None
-        )
 
 
 def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
@@ -390,74 +397,6 @@ def incremental_tc(
     )
 
 
-def derive_delta_relations(
-    sc_star: DataFrame,
-    some: DataFrame,
-    sp_star: DataFrame,
-    d_star: DataFrame | None,
-    full_some: DataFrame | None = None,
-    max_token: int | None = None,
-) -> DataFrame:
-    """R3 rows with >= 1 new input, as ONE shared-scan join chain.
-
-    Equals the union of the one-sided derive_relations passes: subject side
-    over the closure delta `d_star`, filler side over `d_star`, and a full
-    pass over `full_some` (the batch's new told existentials, or every told
-    existential when the property hierarchy grew). Every told row carries
-    the tag of the closure that expands its subject (`ks`) and its filler
-    (`kf`): the full `sc_star` or the delta `d_star`. Both closures go in as
-    ONE broadcast relation of (key, val, tag) rows — keyed by `sup` for the
-    subject expansion and by `sub` for the filler expansion — so both
-    expansions of every pass probe the same broadcast, and one property
-    expansion and ONE final distinct serve every pass (shared scan,
-    AJoin-style), instead of a join chain, a set of broadcasts and a
-    distinct per pass.
-
-    The filler-delta rows first semi-join `some` on the delta's fillers: a
-    told existential whose filler gained no closure pair cannot derive a
-    new row through its filler, so its subject closure is not expanded.
-
-    Every side is broadcast: the caller takes this plan only while the
-    tagged closure (every sc_star pair twice) and sp_star fit the broadcast
-    row bound, the regime it was measured in. Outside it
-    derive_delta_passes runs the staged, hub-salted passes instead."""
-    SUB_ALL, SUB_NEW, FILL_ALL, FILL_NEW = 0, 1, 2, 3
-    pairs = [
-        sc_star.selectExpr("sup AS key", "sub AS val", f"{SUB_ALL} AS tag"),
-        sc_star.selectExpr("sub AS key", "sup AS val", f"{FILL_ALL} AS tag"),
-    ]
-    told = []
-    if d_star is not None:
-        pairs += [
-            d_star.selectExpr("sup AS key", "sub AS val", f"{SUB_NEW} AS tag"),
-            d_star.selectExpr("sub AS key", "sup AS val", f"{FILL_NEW} AS tag"),
-        ]
-        told.append(some.selectExpr("s", "p", "f", f"{SUB_NEW} AS ks", f"{FILL_ALL} AS kf"))
-        told.append(
-            some.join(F.broadcast(d_star.selectExpr("sub AS f")), "f", "left_semi").selectExpr(
-                "s", "p", "f", f"{SUB_ALL} AS ks", f"{FILL_NEW} AS kf"
-            )
-        )
-    if full_some is not None:
-        told.append(
-            full_some.selectExpr("s", "p", "f", f"{SUB_ALL} AS ks", f"{FILL_ALL} AS kf")
-        )
-    closure = F.broadcast(_union(pairs))
-    rows = (
-        _union(told)
-        .alias("t")
-        .join(closure.alias("xs"), F.expr("t.s = xs.key AND t.ks = xs.tag"))
-        .selectExpr("xs.val AS x", "t.p AS q", "t.f AS f", "t.kf AS kf")
-        .alias("u")
-        .join(closure.alias("fo"), F.expr("u.f = fo.key AND u.kf = fo.tag"))
-        .selectExpr("u.x AS x", "u.q AS q", "fo.val AS o")
-        .join(F.broadcast(sp_star.selectExpr("sub AS q", "sup AS p")), "q")
-        .selectExpr("x AS s", "p", "o")
-    )
-    packable = max_token is not None and 0 <= max_token < (1 << _PACK_BITS)
-    return _distinct3(rows, "s", "p", "o", packable)
-
-
 def derive_delta_passes(
     sc_star: DataFrame,
     some: DataFrame,
@@ -469,14 +408,16 @@ def derive_delta_passes(
     staged: bool,
     max_token: int | None = None,
 ) -> DataFrame:
-    """The same rows as derive_delta_relations, as one-sided
-    derive_relations passes (subject delta, filler delta, full) unioned
-    under one distinct: the plan for a state above the shared-scan chain's
-    regime. `staged` keeps the intermediate dedups (measured 1.7x faster
-    than a fused chain at 44M edges, see derive_relations); sides that do
-    not fit the broadcast bound join through the hub-salted path. As in the
-    shared-scan chain, the filler-delta pass only expands the told
-    existentials whose filler gained a closure pair."""
+    """R3 rows with >= 1 new input, as one-sided derive_relations passes
+    unioned under one distinct: subject side over the closure delta
+    `d_star`, filler side over `d_star`, and a full pass over `full_some`
+    (the batch's new told existentials, or every told existential when the
+    property hierarchy grew). The Spark plan of a round the driver does
+    not serve (DriverRules.derive returns the same rows). `staged` keeps
+    the intermediate dedups (measured 1.7x faster than a fused chain at 44M
+    edges, see derive_relations); sides that do not fit the broadcast bound
+    join through the hub-salted path. The filler-delta pass only expands
+    the told existentials whose filler gained a closure pair."""
     kw = {
         "sides_broadcast": sides_broadcast,
         # a known bound skips derive_relations' own max-token scan
@@ -591,53 +532,401 @@ def _star_stats(d_star: DataFrame, index: ClosureIndex | None) -> tuple[int, int
     return r["n"], int(r["bot"] or 0)
 
 
+# ------------------------------------------------------------ driver rounds
+#
+# While the class closure is index-served and the told existentials and
+# the property closure fit broadcast_row_threshold, the R4 rounds run on
+# the driver (the reference's in-memory maps, packed): the R3 and R4 rule
+# inputs are sorted int64 arrays next to the closure's ClosureIndex, and a
+# rel row (s, p, o) is one key s<<42 | p<<21 | o, so every token must lie
+# in [0, 2^21). Spark only checks the rows against the accumulated rel, in
+# one probe per batch (ClassFixpoint.finish).
+
+_KEY_BITS = 2 * _PACK_BITS
+_PO_MASK = (1 << _KEY_BITS) - 1
+
+
+def _key3(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
+    return (
+        (a.astype(np.int64) << _KEY_BITS) | (b.astype(np.int64) << _PACK_BITS) | c.astype(np.int64)
+    )
+
+
+def _cols3(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    return keys >> _KEY_BITS, (keys >> _PACK_BITS) & _PACK_MASK, keys & _PACK_MASK
+
+
+def _packable(*cols: np.ndarray) -> bool:
+    return all(not len(c) or (c.min() >= 0 and c.max() <= _PACK_MASK) for c in cols)
+
+
+def _merged(keys: np.ndarray, new: np.ndarray) -> np.ndarray:
+    """Sorted unique `keys` plus `new`."""
+    new = np.unique(new)
+    new = new[~_member(keys, new)]
+    return np.insert(keys, np.searchsorted(keys, new), new)
+
+
+def _lookup(
+    keys: np.ndarray, nodes: np.ndarray, shift: int, budget: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """(index into nodes, position in keys) of every key of sorted `keys`
+    whose bits above the low `shift` are one of `nodes`; None, without
+    expanding, past `budget` keys."""
+    lo, n = _ranges(keys, nodes, shift)
+    return None if int(n.sum()) > budget else _spread(lo, n)
+
+
+def _via(t: np.ndarray, col: int, keys: np.ndarray, shift: int, budget: int) -> np.ndarray | None:
+    """Triple keys `t` with column `col` replaced by every value the sorted
+    `keys` map it to (a key's bits above `shift` are the column's token, its
+    low `shift` bits the value), deduplicated. None, without expanding, past
+    `budget` rows."""
+    cols = list(_cols3(t))
+    got = _lookup(keys, cols[col], shift, budget)
+    if got is None:
+        return None
+    owner, pos = got
+    cols = [c[owner] for c in cols]
+    cols[col] = keys[pos] & ((1 << shift) - 1)
+    return np.unique(_key3(*cols))
+
+
+@dataclass(frozen=True)
+class DriverRules:
+    """The R3 and R4 rule inputs of the class fixpoint on the driver, as
+    sorted packed int64 arrays: the star closure `star` (a ClosureIndex of
+    sc_tc plus every class's reflexive and TOP pair), the told existentials
+    by subject (`some_s`: s<<42|q<<21|f) and by filler (`some_f`:
+    f<<42|q<<21|s), the property closure `sp` (q<<21|p), the definitions
+    `defs` (p<<42|o<<21|f, for `f ≡ p some o`) and the told plus
+    R4-derived subclass edges `sc` (closure packing). Immutable."""
+
+    star: ClosureIndex
+    some_s: np.ndarray
+    some_f: np.ndarray
+    sp: np.ndarray
+    defs: np.ndarray
+    sc: np.ndarray
+
+    @classmethod
+    def of(cls, tc: ClosureIndex, classes, some, sp_star, sc, defs) -> DriverRules | None:
+        """The rules over the pulled token columns of each frame. None if a
+        token does not pack."""
+        (c,) = classes
+        sub, sup = tc.pairs()
+        if not _packable(c, sub, sup):
+            return None
+        top = c[c != T.TOP]
+        star = ClosureIndex.of_pairs(
+            np.concatenate([sub, c, top]), np.concatenate([sup, c, np.full(len(top), T.TOP)])
+        )
+        empty = np.empty(0, np.int64)
+        return cls(star, empty, empty, empty, empty, empty).grown(some, defs, sc, sp_star=sp_star)
+
+    def grown(self, some, defs, sc, sp_star=None, props=()) -> DriverRules | None:
+        """These rules plus told rows (each a tuple of token columns): the
+        property closure replaced by `sp_star`, or grown by the reflexive
+        pairs of new `props`. None if a token does not pack."""
+        if not _packable(*some, *defs, *sc, *(sp_star or ()), *props):
+            return None
+        sp = self.sp if sp_star is None else np.unique((sp_star[0] << _PACK_BITS) | sp_star[1])
+        if len(props):
+            (p,) = props
+            sp = _merged(sp, (p << _PACK_BITS) | p)
+        s, q, f = some if len(some) else (np.empty(0, np.int64),) * 3
+        return replace(
+            self,
+            some_s=_merged(self.some_s, _key3(s, q, f)),
+            some_f=_merged(self.some_f, _key3(f, q, s)),
+            sp=sp,
+            defs=_merged(self.defs, _key3(defs[1], defs[2], defs[0])) if len(defs) else self.defs,
+            sc=_merged(self.sc, _pack(*sc)) if len(sc) else self.sc,
+        )
+
+    def derive(self, d: np.ndarray, full: np.ndarray | None, budget: int) -> np.ndarray | None:
+        """Packed keys of every R3 row with >= 1 new input: a new star pair
+        of `d` (closure packing) on the subject or the filler side, or a
+        told existential of `full` (s<<42|q<<21|f) — the rows
+        derive_delta_passes returns, deduplicated. Each expansion is sized
+        before it runs: None past `budget` rows."""
+        fwd, bwd, q_p = (self.star.fwd, 32), (self.star.bwd, 32), (self.sp, _PACK_BITS)
+        starts = []
+        if len(d):
+            x, y = (a.astype(np.int64) for a in _unpack(d))
+            # subject side: x under a told subject y, then f -> o, q -> p
+            got = _lookup(self.some_s, y, _KEY_BITS, budget)
+            if got is None:
+                return None
+            owner, pos = got
+            starts.append(((x[owner] << _KEY_BITS) | (self.some_s[pos] & _PO_MASK), [(2, *fwd), (1, *q_p)]))
+            # filler side: y above a told filler x, then s -> x, q -> p
+            got = _lookup(self.some_f, x, _KEY_BITS, budget)
+            if got is None:
+                return None
+            owner, pos = got
+            _, q, s = _cols3(self.some_f[pos])
+            starts.append((_key3(s, q, y[owner]), [(0, *bwd), (1, *q_p)]))
+        if full is not None:
+            starts.append((full, [(0, *bwd), (2, *fwd), (1, *q_p)]))
+        rows = [np.empty(0, np.int64)]
+        for t, steps in starts:
+            t = np.unique(t)
+            for col, keys, shift in steps:
+                t = _via(t, col, keys, shift, budget)
+                if t is None:
+                    return None
+            rows.append(t)
+        return np.unique(np.concatenate(rows))
+
+    def fire(self, rel: np.ndarray, budget: int) -> np.ndarray | None:
+        """R4 on packed rel keys: the facts `x subClassOf f` (closure
+        packing) for each row (x, p, o) and definition `f ≡ p some o`, x !=
+        f, that `sc` does not hold. None past `budget` facts."""
+        got = _lookup(self.defs, rel & _PO_MASK, _PACK_BITS, budget)
+        if got is None:
+            return None
+        owner, pos = got
+        x, f = rel[owner] >> _KEY_BITS, self.defs[pos] & _PACK_MASK
+        facts = np.unique(_pack(x[x != f], f[x != f]))
+        return facts[~_member(self.sc, facts)]
+
+
+# Spark's xxhash64 (seed 42) of int columns, as _rel_bucket computes it:
+# XXH64.hashInt chained over the columns, in wrapping uint64 arithmetic
+_XX = [np.uint64(v) for v in (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9)]
+_XX5 = np.uint64(0x27D4EB2F165667C5 + 4)
+
+
+def _rel_buckets(keys: np.ndarray) -> np.ndarray:
+    """The rel hash bucket (_rel_bucket) of each packed rel key."""
+    p1, p2, p3 = _XX
+    h = np.full(len(keys), 42, np.uint64)
+    for c in _cols3(keys):
+        h = h + _XX5
+        h ^= c.astype(np.uint64) * p1
+        h = ((h << np.uint64(23)) | (h >> np.uint64(41))) * p2 + p3
+        h ^= h >> np.uint64(33)
+        h *= p2
+        h ^= h >> np.uint64(29)
+        h *= p3
+        h ^= h >> np.uint64(32)
+    return h.view(np.int64) % REL_BUCKETS
+
+
+def _local(spark: SparkSession, schema: str, *cols: np.ndarray) -> DataFrame:
+    """Token columns as a local relation of int columns: built from an
+    Arrow table, so no Python row objects and no job."""
+    import pyarrow as pa
+
+    names = [f.split()[0] for f in schema.split(",")]
+    table = pa.table({n: pa.array(c.astype(np.int32)) for n, c in zip(names, cols)})
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _pull_tagged(tagged: DataFrame, widths: dict[str, int]) -> dict[str, tuple | None]:
+    """Tagged rows on the driver, through Arrow (one job): each tag of
+    `widths` -> its first `width` token columns as int64 arrays (empty if
+    absent), or None if one holds a null."""
+    import pyarrow as pa
+
+    t = tagged.toArrow()
+    frame = t.column("frame").to_numpy(zero_copy_only=False)
+    out: dict[str, tuple | None] = {}
+    for tag, width in widths.items():
+        rows = t.filter(pa.array(frame == tag))
+        cols = [rows.column(c) for c in _TAG_COLS[:width]]
+        out[tag] = (
+            None
+            if any(c.null_count for c in cols)
+            else tuple(c.to_numpy().astype(np.int64) for c in cols)
+        )
+    return out
+
+
 @dataclass
 class ClassFixpoint:
     """The class side of the R1-R4 fixpoint, as the R4 feedback rounds grow
     it in the batch (materialize_edges) and the stream (apply_delta) alike.
 
     `sc` holds the told plus R4-derived subclass edges, `tc` their
-    transitive closure and `star` its star closure; `rows` upper-bounds
-    |star| (so |tc| too); `index` is tc's ClosureIndex, None once a TC call
-    it did not serve dropped it. The R3 inputs — told existentials `some`,
-    property closure `sp_star` of `n_sp` rows, packability bound
-    `max_token`, the `staged` plan choice — and the definitions `defs` (None
-    without any) stay fixed. `history` holds the rel that new rel rows are
-    deduplicated against (_settle). What the rounds add is recorded: rel
-    rows disjoint from the history's (`rel`, `n_rel` of them), and per call
-    the R4 facts, tc and star deltas; `bot` counts new star pairs into
-    owl:Nothing."""
+    transitive closure and `star` its star closure over `classes`; `rows`
+    upper-bounds |star| (so |tc| too). The R3 inputs — told existentials
+    `some` (`n_some` rows), property closure `sp_star` (`n_sp` rows),
+    packability bound `max_token`, the `staged` plan choice — and the
+    definitions `defs` (None without any) stay fixed. `history` holds the
+    rel that new rel rows are deduplicated against (_settle, finish).
+
+    On the driver: `index` is tc's ClosureIndex and `rules` the
+    DriverRules, each None once unavailable (past the bound, a dropped
+    index, an unpackable or null token) and seeded by the first round that
+    needs them (pull) unless handed in. What the rounds add is recorded:
+    rel rows disjoint from the history's (`rel`, `n_rel` of them), per call
+    the R4 facts, tc and star deltas, and the R3 plan of each round
+    (`plans`: driver / passes); `bot` counts new star pairs into
+    owl:Nothing. Driver rounds keep their additions as arrays until
+    _flush ships them, and their rel rows unchecked against the history
+    until finish."""
 
     cfg: RGConfig
     history: dict[str, DataFrame]
     sc: DataFrame
     tc: DataFrame
     star: DataFrame
+    classes: DataFrame
     rows: int
-    index: ClosureIndex | None
     some: DataFrame
+    n_some: int
     sp_star: DataFrame
     n_sp: int
     max_token: int | None
     staged: bool
     defs: DataFrame | None
+    index: ClosureIndex | None = None
+    rules: DriverRules | None = None
+    index_seeded: bool = False
+    rules_seeded: bool = False
     rel: DataFrame | None = None
     n_rel: int = 0
     bot: int = 0
+    plans: list[str] = field(default_factory=list)
     sc_parts: list[DataFrame] = field(default_factory=list)
     tc_parts: list[DataFrame] = field(default_factory=list)
     star_parts: list[DataFrame] = field(default_factory=list)
+    _sc_new: list[np.ndarray] = field(default_factory=list)
+    _tc_new: list[np.ndarray] = field(default_factory=list)
+    _star_new: list[np.ndarray] = field(default_factory=list)
+    _rel_new: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
+    _n_facts: int = 0  # rows of the last facts frame _settle returned
+
+    # ------------------------------------------------------- driver state
+
+    def driven(self) -> bool:
+        """Whether the next round can run on the driver. The index and rules
+        are dropped for good once their inputs pass the bound (the closure,
+        the told existentials and the property closure only grow)."""
+        if not _fits(self.cfg, self.rows):
+            self.index, self.index_seeded = None, True
+        if not (_fits(self.cfg, self.n_some) and _fits(self.cfg, self.n_sp)) or (
+            self.index_seeded and self.index is None
+        ):
+            self.rules, self.rules_seeded = None, True
+        return not self.rules_seeded or self.rules is not None
+
+    def pull(self, extra: DataFrame, widths: dict[str, int]) -> dict[str, tuple | None]:
+        """The tagged rows `extra` on the driver, in one job with whatever of
+        the driver state is not seeded yet (sc_tc for the index; the rule
+        inputs for the rules)."""
+        frames = {"sc_tc": self.tc} if not self.index_seeded else {}
+        if not self.rules_seeded:
+            frames.update(classes=self.classes, some=self.some, sp_star=self.sp_star, sc=self.sc)
+            if self.defs is not None:
+                frames["def_some"] = self.defs
+        got = _pull_tagged(
+            _union([extra, *(_tagged(df, n) for n, df in frames.items())]),
+            {**widths, **{n: len(FRAME_COLUMNS[n]) for n in frames}},
+        )
+        if not self.index_seeded:
+            self.index = None if got["sc_tc"] is None else ClosureIndex.of_pairs(*got["sc_tc"])
+            self.index_seeded = True
+        if not self.rules_seeded:
+            parts = [got.get(n, ()) for n in ("classes", "some", "sp_star", "sc", "def_some")]
+            self.rules = (
+                DriverRules.of(self.index, *parts)
+                if self.index is not None and all(p is not None for p in parts)
+                else None
+            )
+            self.rules_seeded = True
+        return got
+
+    def extend(self, edges: np.ndarray, classes: np.ndarray | None = None) -> np.ndarray | None:
+        """Close the packed subclass edges `edges` into the index (no pull)
+        and grow the star closure by its new pairs plus the reflexive and
+        TOP pairs of new `classes`. Returns the new star pairs, or None when
+        the closure passes the bound (index and rules are then dropped)."""
+        index = self.index.extend(*_unpack(edges), self.cfg.broadcast_row_threshold)
+        if index is None:
+            self.index = self.rules = None
+            return None
+        new = [index.added]
+        if classes is not None:
+            top = classes[classes != T.TOP]
+            new += [_pack(classes, classes), _pack(top, np.full(len(top), T.TOP))]
+        d = np.unique(np.concatenate(new))
+        d = d[~_member(self.rules.star.fwd, d)]
+        self.index, self.rules = index, replace(self.rules, star=self.rules.star.union(d))
+        self._tc_new.append(index.added)
+        self._star_new.append(d)
+        self.rows += len(d)
+        self.bot += int((_low(d) == T.BOT).sum())
+        return d
+
+    def candidates(
+        self, d: np.ndarray, full: np.ndarray | None = None, full_df: DataFrame | None = None
+    ) -> np.ndarray | DataFrame | None:
+        """A round's rel candidates from the new star pairs `d` and the told
+        existentials `full` (packed keys; `full_df` as a frame): packed keys
+        derived on the driver, or — when they would pass the bound — the
+        derive_delta_passes frame; None when nothing is new."""
+        if not len(d) and full is None:
+            return None
+        cand = self.rules.derive(d, full, self.cfg.broadcast_row_threshold)
+        if cand is not None:
+            self.plans.append("driver")
+            return cand
+        self._flush()
+        if full is not None and full_df is None:
+            full_df = _local(self._spark, "s int, p int, f int", *_cols3(full))
+        return self.derive(self._pairs(d) if len(d) else None, full_df)
+
+    @property
+    def _spark(self) -> SparkSession:
+        return self.tc.sparkSession
+
+    def _pairs(self, keys: np.ndarray) -> DataFrame:
+        return _local(self._spark, "sub int, sup int", *_unpack(keys))
+
+    def _flush(self) -> None:
+        """Ship the driver rounds' R4 facts, tc and star additions to Spark,
+        one local relation each."""
+        for new, parts, name in (
+            (self._sc_new, self.sc_parts, "sc"),
+            (self._tc_new, self.tc_parts, "tc"),
+            (self._star_new, self.star_parts, "star"),
+        ):
+            keys = np.concatenate([np.empty(0, np.int64), *new])
+            new.clear()
+            if len(keys):
+                df = self._pairs(keys)
+                parts.append(df)
+                setattr(self, name, getattr(self, name).unionByName(df))
+
+    def driver_state(self) -> dict:
+        """The index and rules to carry into the next batch: only those
+        seeded (an absent key is seeded by the next round that needs it)."""
+        return {
+            **({"_sc_index": self.index} if self.index_seeded else {}),
+            **({"_sc_rules": self.rules} if self.rules_seeded else {}),
+        }
+
+    # -------------------------------------------------------- Spark rounds
 
     def close(self, edges: DataFrame) -> tuple[DataFrame, int]:
-        """Incremental TC of `edges` onto `tc`, served by `index` while
-        `rows` fits the broadcast bound (the regime in which the derive
-        broadcasts the whole closure anyway). Returns the star delta — the
-        tc delta minus its self and TOP pairs, which every class's
-        reflexive and top rows already hold, so it is disjoint from `star` —
-        and its row count; `grow` adds it."""
+        """Incremental TC of `edges` onto `tc` in Spark, served by `index`
+        (seeded here by ClosureIndex.pull) while `rows` fits the broadcast
+        bound. The rules miss these pairs: they are reseeded by the next
+        round that runs on the driver. Returns the star delta — the tc delta
+        minus its self and TOP pairs, which every class's reflexive and top
+        rows already hold, so it is disjoint from `star` — and its row
+        count; `grow` adds it."""
+        fits = _fits(self.cfg, self.rows)
+        if not self.index_seeded:
+            self.index = ClosureIndex.pull(self.tc) if fits else None
+            self.index_seeded = True
+        if self.rules is not None:
+            self.rules, self.rules_seeded = None, False
         self.tc, d_tc, self.index = incremental_tc(
-            self.tc, edges, self.cfg, old_tc_rows=self.rows,
-            index=self.index if _fits(self.cfg, self.rows) else None,
+            self.tc, edges, self.cfg, old_tc_rows=self.rows, index=self.index if fits else None
         )
         self.tc_parts.append(d_tc)
         d_star = d_tc.where(f"sub != sup AND sup != {T.TOP}")
@@ -653,23 +942,9 @@ class ClassFixpoint:
         self.rows += n
 
     def derive(self, d_star: DataFrame | None, full: DataFrame | None) -> DataFrame:
-        """R3 rows with >= 1 new input: a star pair of `d_star` on either
-        side, or a told existential of `full` against the whole closures.
-
-        The shared-scan chain while every side broadcasts (its tagged
-        closure holds each star pair twice): measured end to end faster
-        than the one-sided passes at 600 and at 21,000 told existentials,
-        below and above the staged-plan crossover. Closures past the
-        broadcast bound were not measured and keep the staged / hub-salted
-        passes. So does a grown property hierarchy past the crossover:
-        re-deriving every told existential is the full-size derive that the
-        staged plan's 1.7x measurement covers."""
-        if _fits(self.cfg, 2 * self.rows + self.n_sp) and not (
-            self.staged and full is self.some
-        ):
-            return derive_delta_relations(
-                self.star, self.some, self.sp_star, d_star, full, self.max_token
-            )
+        """R3 rows with >= 1 new input in Spark: the one-sided passes, hub
+        salted past the broadcast bound."""
+        self.plans.append("passes")
         return derive_delta_passes(
             self.star, self.some, self.sp_star, d_star, full, self.cfg.broadcast_row_threshold,
             sides_broadcast=_fits(self.cfg, self.rows + self.n_sp), staged=self.staged,
@@ -680,48 +955,179 @@ class ClassFixpoint:
         # |sc| <= |tc| <= rows
         return _bounded_broadcast(self.cfg, self.sc, self.rows)
 
+    # ----------------------------------------------------------- a round
+
+    def settle(
+        self, cand: np.ndarray | DataFrame | None, activated: DataFrame | None, narrow: bool
+    ) -> np.ndarray | DataFrame | None:
+        """Keep the rel candidates `cand` this batch has not added yet and
+        return the new R4 facts they fire (None if none). Driver keys
+        without `activated` facts settle on the driver: their history check
+        waits for finish, since a row of the history fired its facts when it
+        was added (so sc already holds them). Otherwise _settle runs."""
+        if cand is None and activated is None:
+            return None
+        if isinstance(cand, np.ndarray) and activated is None:
+            cand = cand[~_member(self._rel_new, cand)]
+            facts = self.rules.fire(cand, self.cfg.broadcast_row_threshold)
+            if facts is not None:
+                self._rel_new = _merged(self._rel_new, cand)
+                if not len(facts):
+                    return None
+                self.rules = replace(self.rules, sc=_merged(self.rules.sc, facts))
+                self._sc_new.append(facts)
+                return facts
+        if isinstance(cand, np.ndarray):
+            self._flush()
+            cand = _local(self._spark, "s int, p int, o int", *_cols3(cand))
+        prior = ([self.rel] if self.rel is not None else []) + (
+            [_local(self._spark, "s int, p int, o int", *_cols3(self._rel_new))]
+            if len(self._rel_new)
+            else []
+        )
+        rel, new_sc, n = _settle(
+            cand, self.history,
+            _bounded_broadcast(self.cfg, _union(prior), self.n_rel + len(self._rel_new))
+            if prior else None,
+            self.defs, self.known_sc(), activated, narrow=narrow,
+        )
+        self.rel = rel if self.rel is None else self.rel.unionByName(rel)
+        self.n_rel += n.get("rel", 0)
+        self._n_facts = n.get("sc", 0)
+        return new_sc if self._n_facts else None
+
+    def step(self, facts: np.ndarray | DataFrame) -> np.ndarray | DataFrame | None:
+        """Add the R4 facts `facts` to sc, close them into the class closure
+        and derive the rel candidates that use a new star pair: on the
+        driver while it serves the round (a frame of facts that fits the
+        bound is pulled, in one job with any unseeded driver state), else in
+        Spark. None when no star pair is new."""
+        keys = facts if isinstance(facts, np.ndarray) else None
+        if keys is None:
+            self.sc_parts.append(facts)
+            self.sc = self.sc.unionByName(facts)
+            if self.driven() and _fits(self.cfg, self._n_facts):
+                got = self.pull(_tagged(facts, "sc", "facts"), {"facts": 2})["facts"]
+                if got is not None and self.rules is not None:
+                    keys = _pack(*got)
+                    self.rules = replace(self.rules, sc=_merged(self.rules.sc, keys))
+        if keys is not None and self.driven() and self.rules is not None:
+            d = self.extend(keys)
+            if d is not None:
+                return self.candidates(d)
+        if isinstance(facts, np.ndarray):
+            self._flush()
+            facts = self._pairs(facts)
+        d_star, n = self.close(facts)
+        if n == 0:
+            return None  # facts were already entailed; no new rel can arise
+        self.grow(d_star, n)
+        return self.derive(d_star, None)
+
+    def finish(self) -> None:
+        """Ship the driver rounds' additions, checking their rel rows
+        against the history in ONE Spark probe: the stored rel pruned to
+        the rows' buckets (or the in-memory history rel), plus the rows
+        _settle added, left-semi-joined with the rows as a local relation;
+        the hits come back through Arrow and are dropped."""
+        self._flush()
+        keys, self._rel_new = self._rel_new, self._rel_new[:0]
+        if len(keys):
+            stored: DataFrame | None = self.history.get("_state_tagged")  # type: ignore[assignment]
+            if stored is not None:
+                touched = ", ".join(str(b) for b in np.unique(_rel_buckets(keys)))
+                hist = _untag(stored.where(f"bucket IN ({touched}) OR bucket IS NULL"), "rel")
+            else:
+                hist = self.history["rel"].select("s", "p", "o")
+            if self.rel is not None:
+                hist = hist.unionByName(self.rel)
+            rows = _local(self._spark, "s int, p int, o int", *_cols3(keys))
+            hits = (
+                hist.join(_bounded_broadcast(self.cfg, rows, len(keys)), ["s", "p", "o"], "left_semi")
+                .toArrow()
+            )
+            keys = keys[~_member(np.unique(_key3(*(hits.column(c).to_numpy() for c in "spo"))), keys)]
+        if len(keys):
+            rel = _local(self._spark, "s int, p int, o int", *_cols3(keys))
+            self.rel = rel if self.rel is None else self.rel.unionByName(rel)
+            self.n_rel += len(keys)
+        elif self.rel is None:
+            self.rel = self.history["rel"].where("false").select("s", "p", "o")
+
 
 def feedback_rounds(
-    fx: ClassFixpoint, cand: DataFrame | None, activated: DataFrame | None, narrow: bool
+    fx: ClassFixpoint,
+    cand: np.ndarray | DataFrame | None,
+    activated: DataFrame | None,
+    narrow: bool,
 ) -> None:
     """R4 equivalence feedback to fixpoint (reference
     RelationGraph.scala:217-230): the one round body the batch and the
     stream share, semi-naive over the class closure.
 
-    First the candidate rel rows `cand` settle against the history, and the
-    R4 facts they fire join the `activated` ones (definitions new to the
-    history, fired against it; `narrow` as in _settle). Then each round
-    adds the new facts to `sc`, extends the closure with them (close),
-    derives the rel rows that use a new star pair (derive) and settles
-    those, until a round fires no new fact. Only new rel rows can fire a
-    definition they have not fired before, so each round's work is the size
-    of its delta, not of the fixpoint."""
-    rel, new_sc, n = _settle(
-        cand, fx.history, None, fx.defs, fx.known_sc(), activated, narrow=narrow
-    )
-    fx.rel, fx.n_rel = rel, n.get("rel", 0)
+    First the candidate rel rows `cand` (packed keys from a driver round,
+    or a frame) settle, and the R4 facts they fire join the `activated`
+    ones (definitions new to the history, fired against it; `narrow` as in
+    _settle). Then each round adds the new facts to `sc`, extends the
+    closure with them, derives the rel rows that use a new star pair and
+    settles those, until a round fires no new fact (ClassFixpoint.step and
+    settle: on the driver while it serves the round, else in Spark). Only
+    new rel rows can fire a definition they have not fired before, so each
+    round's work is the size of its delta, not of the fixpoint."""
+    facts = fx.settle(cand, activated, narrow)
     for _round in range(fx.cfg.max_iterations):
-        if not n.get("sc"):
+        if facts is None:
+            fx.finish()
             return
-        fx.sc_parts.append(new_sc)
-        fx.sc = fx.sc.unionByName(new_sc)
-        d_star, n_star = fx.close(new_sc)
-        if n_star == 0:
-            return  # facts were already entailed; no new rel can arise
-        fx.grow(d_star, n_star)
-        rel, new_sc, n = _settle(
-            fx.derive(d_star, None),
-            fx.history,
-            _bounded_broadcast(fx.cfg, fx.rel, fx.n_rel),
-            fx.defs,
-            fx.known_sc(),
-            narrow=_fits(fx.cfg, fx.n_rel) and _fits(fx.cfg, fx.rows),
+        cand = fx.step(facts)
+        facts = (
+            None
+            if cand is None
+            else fx.settle(
+                cand, None,
+                _fits(fx.cfg, fx.n_rel + len(fx._rel_new)) and _fits(fx.cfg, fx.rows),
+            )
         )
-        fx.rel = fx.rel.unionByName(rel)
-        fx.n_rel += n["rel"]
     raise FixpointDidNotConverge(
         f"R4 feedback did not converge in {fx.cfg.max_iterations} rounds"
     )
+
+
+def _driver_round0(
+    fx: ClassFixpoint,
+    fold: DataFrame,
+    n_d: dict[str, int],
+    full_some: DataFrame | None,
+    sp_star: DataFrame | None,
+) -> tuple[bool, np.ndarray | DataFrame | None]:
+    """apply_delta's first round on the driver: the batch's told delta
+    arrives through one pull of the checkpointed fold (with the grown
+    property closure `sp_star`, if any, and any unseeded driver state),
+    extends the rules and the index, and derives the rel candidates (as
+    ClassFixpoint.candidates). (False, None) when the round runs in
+    Spark."""
+    told = ("sc", "some", "def_some", "classes", "props")
+    if not (fx.driven() and _fits(fx.cfg, sum(n_d[n] for n in told))):
+        return False, None
+    tagged = fold.where("frame IN (" + ", ".join(f"'{n}'" for n in told) + ")").selectExpr(
+        "concat('d_', frame) AS frame", *_TAG_COLS
+    )
+    widths = {f"d_{n}": len(FRAME_COLUMNS[n]) for n in told}
+    if sp_star is not None:
+        tagged = tagged.unionByName(_tagged(sp_star, "sp_star", "d_sp_star"))
+        widths["d_sp_star"] = 2
+    got = fx.pull(tagged, widths)
+    if fx.rules is not None and all(got[n] is not None for n in widths):
+        fx.rules = fx.rules.grown(
+            got["d_some"], got["d_def_some"], got["d_sc"], got.get("d_sp_star"), got["d_props"]
+        )
+    else:
+        fx.rules = None
+    d = None if fx.rules is None else fx.extend(_pack(*got["d_sc"]), got["d_classes"][0])
+    if d is None:
+        return False, None
+    full = fx.rules.some_s if sp_star is not None else (_key3(*got["d_some"]) if n_d["some"] else None)
+    return True, fx.candidates(d, full, full_some)
 
 
 def apply_delta(
@@ -830,41 +1236,48 @@ def apply_delta(
 
     fx = ClassFixpoint(
         cfg, state, sc=state["sc"].unionByName(d["sc"]), tc=state["sc_tc"],
-        star=state["_sc_star"], rows=state["_n_sc_star"], index=state["_sc_index"],
-        some=some_new, sp_star=sp_star_new, n_sp=n_sp_new, max_token=max_tok,
+        star=state["_sc_star"], classes=state["classes"], rows=state["_n_sc_star"],
+        some=some_new, n_some=n_some, sp_star=sp_star_new, n_sp=n_sp_new, max_token=max_tok,
         staged=n_some > cfg.incremental_feedback_threshold,
         defs=_bounded_broadcast(cfg, def_new, n_def) if n_def else None,
+        index=state.get("_sc_index"), rules=state.get("_sc_rules"),
+        index_seeded="_sc_index" in state, rules_seeded="_sc_rules" in state,
     )
-    if n_d["sc"]:
-        d_star, n_star = fx.close(d["sc"])
-    else:
-        # no new edge, no new pair
-        d_star, n_star = d["sc"], 0
-        fx.tc_parts.append(d["sc"])
-
-    # the star delta also holds the reflexive/top pairs of newly-seen
-    # classes, disjoint from the tc delta's star pairs. Their stats come
-    # from the told fold's: one (c, c) row per new class but TOP, one
-    # (c, TOP) row per new class.
-    d_classes = d["classes"]
-    d_star = d_star.unionByName(
-        d_classes.where(f"c != {T.TOP}").selectExpr("c AS sub", "c AS sup")
-    ).unionByName(d_classes.selectExpr("c AS sub", f"CAST({T.TOP} AS INT) AS sup"))
-    if n_d["classes"]:
-        new_classes = stats["classes"]
-        n_star += 2 * new_classes["n"] - new_classes["top"]
-        fx.bot += new_classes["bot"]
-    fx.grow(d_star, n_star)
-
     # R3 over every new input at once: new closure pairs on either side, new
     # told existentials, or — when the property hierarchy grew — every told
     # existential against the full (tiny) property closure
     full_some = some_new if sp_changed else (d["some"] if n_d["some"] else None)
-    cand = (
-        fx.derive(d_star if n_star else None, full_some)
-        if n_star or full_some is not None
-        else None
-    )
+    d_classes = d["classes"]
+    served, cand = _driver_round0(fx, fold, n_d, full_some, sp_star_new if sp_changed else None)
+    if not served:
+        if fx.rules is not None:
+            # they miss this batch's told rows: the next driver round reseeds
+            fx.rules, fx.rules_seeded = None, False
+        if n_d["sc"]:
+            d_star, n_star = fx.close(d["sc"])
+        else:
+            # no new edge, no new pair
+            d_star, n_star = d["sc"], 0
+            fx.tc_parts.append(d["sc"])
+
+        # the star delta also holds the reflexive/top pairs of newly-seen
+        # classes, disjoint from the tc delta's star pairs. Their stats come
+        # from the told fold's: one (c, c) row per new class but TOP, one
+        # (c, TOP) row per new class.
+        d_star = d_star.unionByName(
+            d_classes.where(f"c != {T.TOP}").selectExpr("c AS sub", "c AS sup")
+        ).unionByName(d_classes.selectExpr("c AS sub", f"CAST({T.TOP} AS INT) AS sup"))
+        if n_d["classes"]:
+            new_classes = stats["classes"]
+            n_star += 2 * new_classes["n"] - new_classes["top"]
+            fx.bot += new_classes["bot"]
+        fx.grow(d_star, n_star)
+        cand = (
+            fx.derive(d_star if n_star else None, full_some)
+            if n_star or full_some is not None
+            else None
+        )
+    fx.classes = classes_new
 
     # ------- R4 equivalence feedback, delta-sized -----------------------
     # Candidates come from the batch's NEW rel rows against all definitions,
@@ -873,7 +1286,11 @@ def apply_delta(
     # batch's candidates are delta-sized: a grown property hierarchy
     # re-derives every told existential, and a late definition scans the
     # history.
-    late = _fire(state["rel"], F.broadcast(d["def_some"])) if n_d["def_some"] else None
+    late = (
+        _fire(state["rel"], _bounded_broadcast(cfg, d["def_some"], n_d["def_some"]))
+        if n_d["def_some"]
+        else None
+    )
     feedback_rounds(
         fx, cand, late, narrow=not sp_changed and not n_d["def_some"] and _fits(cfg, fx.rows)
     )
@@ -901,7 +1318,8 @@ def apply_delta(
         # computing unsat
         "_has_bot": True if fx.bot > 0 else state.get("_has_bot"),
         "_max_token": max_tok,
-        "_sc_index": fx.index,
+        "_r3_plans": fx.plans,
+        **fx.driver_state(),
     }
     for key in ("_state_roots", "_state_tagged"):
         if key in state:
@@ -917,11 +1335,11 @@ def apply_delta(
         "classes": d_classes,
         "props": d["props"],
         "assertions": d["assertions"],
-        "sc_tc": _union(fx.tc_parts),
+        "sc_tc": _union(fx.tc_parts or [d["sc"].where("false")]),
         "rel": fx.rel,
         # derived-frame deltas, persisted so repoint_state can re-anchor the
         # carried-forward closures at the on-disk store each batch
-        "sc_star": _union(fx.star_parts),
+        "sc_star": _union(fx.star_parts or [d["sc"].where("false")]),
         "sp_star": d_sp_star,
     }
     return new_state, deltas

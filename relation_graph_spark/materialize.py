@@ -126,7 +126,7 @@ def derive_relations(
     the staged plan dominate the work they save, so materialize_edges and
     the stream's derive_delta_passes pass staged=False while the told
     existentials number at most incremental_feedback_threshold (the stream's
-    usual R3 plan is derive_delta_relations, a fused chain of its own).
+    usual R3 rounds run on the driver instead, incremental.DriverRules).
     Result is identical either way — the stage distincts only dedup
     intermediates the final distinct removes anyway.
 
@@ -302,25 +302,25 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         sc, child="sub", parent="sup", max_iterations=cfg.max_iterations,
         broadcast_row_threshold=thr,
     )
-    sc_star = star_closure(sc_tc, classes).localCheckpoint(eager=False)
+    sc_star = star_closure(
+        sc_tc, classes, broadcast=0 < thr and st["classes"]["n"] <= thr
+    ).localCheckpoint(eager=False)
     rel = derive_relations(
         sc_star, some, sp_star, thr, staged=staged, max_token=max_token
     ).localCheckpoint(eager=False)
 
-    index = None
+    driver_state, plans = {}, []
     if n_def:
         # R4 feedback: the stream's semi-naive rounds (feedback_rounds),
         # whose first round is the stream's late-definition case — every
         # definition fires against the round-0 rel. One job counts the
-        # closure sides for the broadcast decisions; the class closure's
-        # ClosureIndex is pulled only while the star closure fits the
-        # broadcast bound, as in the stream, and the rounds run the
-        # distributed TC otherwise.
-        from relation_graph_spark.closure import ClosureIndex
+        # closure sides for the broadcast decisions. The class closure's
+        # ClosureIndex and the driver rules are pulled by the first round
+        # that fires a fact, only while they fit the broadcast bound, as in
+        # the stream; the rounds run in Spark otherwise.
         from relation_graph_spark.incremental import (
             ClassFixpoint,
             _bounded_broadcast,
-            _fits,
             feedback_rounds,
         )
 
@@ -331,18 +331,17 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
             .count()
             .collect()
         )
-        rows = n.get("star", 0)
         defs = _bounded_broadcast(cfg, def_some, n_def)
         fx = ClassFixpoint(
-            cfg, {"rel": rel}, sc=sc, tc=sc_tc, star=sc_star, rows=rows,
-            index=ClosureIndex.pull(sc_tc) if _fits(cfg, rows) else None,
-            some=some, sp_star=sp_star, n_sp=n.get("sp", 0), max_token=max_token,
-            staged=staged, defs=defs,
+            cfg, {"rel": rel}, sc=sc, tc=sc_tc, star=sc_star, classes=classes,
+            rows=n.get("star", 0), some=some, n_some=n_some, sp_star=sp_star,
+            n_sp=n.get("sp", 0), max_token=max_token, staged=staged, defs=defs,
         )
         feedback_rounds(fx, None, _fire(rel, defs), narrow=False)
         # the rounds' rel rows are disjoint from the round-0 rel
         rel = rel.unionByName(fx.rel)
-        sc, sc_tc, sc_star, index = fx.sc, fx.tc, fx.star, fx.index
+        sc, sc_tc, sc_star = fx.sc, fx.tc, fx.star
+        driver_state, plans = fx.driver_state(), fx.plans
 
     unsat = compute_unsat(sc_star, some, cfg)
     return {
@@ -358,11 +357,13 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         # told subclass edges including R4-derived feedback facts — the
         # incremental engine's state seed
         "sc_final": sc,
-        # scalar stats and the class closure's index (None if not built or
-        # dropped) carried to the incremental engine (avoid re-counts)
+        # scalar stats, the R3 plan of each feedback round, and the class
+        # closure's index and driver rules if the rounds seeded them,
+        # carried to the incremental engine (avoid re-counts and re-pulls)
         "_n_some": n_some,
         "_n_def": n_def,
-        "_sc_index": index,
+        "_r3_plans": plans,
+        "_driver_state": driver_state,
         # unsat is empty iff no (x, owl:Nothing) pair is in the closure (or
         # bottom handling is disabled — in which case downstream unsat
         # computation is a no-op too, so the stat stays truthful)

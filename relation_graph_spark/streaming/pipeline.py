@@ -352,7 +352,7 @@ class IncrementalClosureJob:
                 # nothing retracted: no tombstone write job
                 tombstones=tomb if n_tomb_rows else None,
                 extra_metrics=self._metrics(
-                    prev_m, batch_per_source, n_late, hwm, total, None
+                    prev_m, batch_per_source, n_late, hwm, total, None, state
                 ),
                 # counts already taken for the running total — the sink can
                 # skip its re-read count jobs
@@ -383,7 +383,7 @@ class IncrementalClosureJob:
                 int(batch_id),
                 tombstones=tomb,
                 extra_metrics=self._metrics(
-                    prev_m, batch_per_source, n_late, hwm, n_edges, None
+                    prev_m, batch_per_source, n_late, hwm, n_edges, None, state
                 ),
                 n_rows_hint=n_edges if committed is None else None,
             )
@@ -417,11 +417,14 @@ class IncrementalClosureJob:
         else:
             self._prev_unsat = output_frames(state, self.cfg)["unsat"].localCheckpoint()
 
-    def _metrics(self, prev_m, batch_per_source, n_late, hwm, total, full_edges):
+    def _metrics(self, prev_m, batch_per_source, n_late, hwm, total, full_edges, state):
         """Manifest metrics: running per-source lineage totals + edge counts
-        (no told-history rescan). The running closure total is always known
-        BEFORE the manifest commit — delta counts on the fast path, a full
-        count on the fallback — so the manifest is written exactly once."""
+        (no told-history rescan), and the batch's R4 feedback rounds with
+        the R3 plan each took (`driver` or `passes`). The running closure
+        total is always known BEFORE the manifest commit — delta counts on
+        the fast path, a full count on the fallback — so the manifest is
+        written exactly once."""
+        plans = list(state.get("_r3_plans", []))
         totals = dict(prev_m.get("told_rows_by_source", {}))
         for src, n in batch_per_source.items():
             totals[src] = totals.get(src, 0) + n
@@ -433,6 +436,8 @@ class IncrementalClosureJob:
                 full_edges.count() if full_edges is not None else total
             ),
             "state_bytes": self._state_bytes(),
+            "r3_rounds": len(plans),
+            "r3_plans": plans,
         }
 
     def _state_bytes(self) -> int | None:

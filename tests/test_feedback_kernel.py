@@ -1,10 +1,11 @@
 """The R4 feedback kernel (incremental.feedback_rounds) that the batch and
 the stream share, on seeded random ontologies with definitions, named-class
 cycles, a named equivalence and an owl:Nothing edge: batch materialize
-equals the Python oracle under every fork of the kernel — the class
-closure's index or the distributed TC, the shared-scan derive or the
-one-sided passes, fused or staged — and a 3-batch stream's live sink
-equals the batch output."""
+equals the Python oracle under every fork of the kernel — driver rounds
+over the class closure's index, or Spark rounds (distributed TC and the
+one-sided passes, fused or staged) — and a 3-batch stream's live sink
+equals the batch output. The class closure's driver state is pulled only
+by a round that needs it."""
 
 import os
 import random
@@ -59,61 +60,92 @@ def _ontology(seed):
     return rows
 
 
-# fork -> (config overrides, TC calls served by the index?, derive taken)
+# fork -> (config overrides, R3 plan of every round, staged Spark derive)
 FORKS = {
-    "index_shared_scan": ({}, True, ("derive_delta_relations", None)),
-    "index_shared_scan_staged_r0": (
-        {"incremental_feedback_threshold": 0},
-        True,
-        ("derive_delta_relations", None),
-    ),
-    "distributed_fused_passes": (
-        {"broadcast_row_threshold": 0},
-        False,
-        ("derive_delta_passes", False),
-    ),
+    "index_driver_rounds": ({}, "driver", None),
+    "index_driver_rounds_staged_r0": ({"incremental_feedback_threshold": 0}, "driver", None),
+    "distributed_fused_passes": ({"broadcast_row_threshold": 0}, "passes", False),
     "distributed_staged_passes": (
         {"broadcast_row_threshold": 0, "incremental_feedback_threshold": 0},
-        False,
-        ("derive_delta_passes", True),
+        "passes",
+        True,
     ),
 }
 
 
 @pytest.fixture()
 def kernel_paths(monkeypatch):
-    """Record each TC call of the kernel (served by the index?) and each
-    derive it takes (name, staged)."""
-    paths = {"tc": [], "derive": []}
-    real_tc = inc.incremental_tc
+    """Record the R3 plan of each kernel round, each incremental TC call
+    (served by the index?) and the staged flag of each Spark derive."""
+    paths = {"plans": [], "tc": [], "staged": []}
+    real_rounds, real_tc, real_passes = (
+        inc.feedback_rounds,
+        inc.incremental_tc,
+        inc.derive_delta_passes,
+    )
+
+    def rounds(fx, *args, **kw):
+        try:
+            return real_rounds(fx, *args, **kw)
+        finally:
+            paths["plans"] += fx.plans
 
     def tc(*args, **kw):
         out = real_tc(*args, **kw)
         paths["tc"].append(out[2] is not None)
         return out
 
+    def passes(*args, **kw):
+        paths["staged"].append(kw["staged"])
+        return real_passes(*args, **kw)
+
+    monkeypatch.setattr(inc, "feedback_rounds", rounds)
     monkeypatch.setattr(inc, "incremental_tc", tc)
-    for name in ("derive_delta_relations", "derive_delta_passes"):
-
-        def derive(*args, _real=getattr(inc, name), _name=name, **kw):
-            paths["derive"].append((_name, kw.get("staged")))
-            return _real(*args, **kw)
-
-        monkeypatch.setattr(inc, name, derive)
+    monkeypatch.setattr(inc, "derive_delta_passes", passes)
     return paths
 
 
 @pytest.mark.parametrize("fork", list(FORKS))
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_batch_feedback_forks_equal_oracle(spark, kernel_paths, seed, fork):
-    overrides, served, derive = FORKS[fork]
+    overrides, plan, staged = FORKS[fork]
     rows = _ontology(seed)
     got = triples(materialize(FX._rows_to_df(spark, rows, "k"), replace(CFG, **overrides)))
     assert got == materialize_py(rows), (seed, fork)
     # R4 fired, the rounds ran, and every one of them took this fork
-    assert kernel_paths["tc"] and kernel_paths["derive"], kernel_paths
-    assert all(s == served for s in kernel_paths["tc"]), kernel_paths
-    assert set(kernel_paths["derive"]) == {derive}, kernel_paths
+    assert kernel_paths["plans"] and set(kernel_paths["plans"]) == {plan}, kernel_paths
+    if plan == "driver":
+        # the rounds extend the index directly: no TC call, no Spark derive
+        assert not kernel_paths["tc"] and not kernel_paths["staged"], kernel_paths
+    else:
+        assert kernel_paths["tc"] and not any(kernel_paths["tc"]), kernel_paths
+        assert set(kernel_paths["staged"]) == {staged}, kernel_paths
+
+
+def test_no_driver_pull_without_a_round(spark, monkeypatch):
+    """A definition no class satisfies fires nothing: the batch runs no
+    feedback round, so it pulls neither the class closure's index nor the
+    driver rules."""
+    from relation_graph_spark.closure import ClosureIndex
+
+    pulls = []
+    real_pull, real_index_pull = inc.ClassFixpoint.pull, ClosureIndex.pull.__func__
+    monkeypatch.setattr(
+        inc.ClassFixpoint, "pull", lambda *a, **kw: pulls.append("state") or real_pull(*a, **kw)
+    )
+    monkeypatch.setattr(
+        ClosureIndex,
+        "pull",
+        classmethod(lambda cls, tc: pulls.append("index") or real_index_pull(cls, tc)),
+    )
+    rows = [
+        [T.AX_SUBCLASS, 11, 12],
+        [T.AX_SOME, 11, 201, 13],
+        [T.AX_EQUIV_SOME, 300, 202, 13],
+    ]
+    got = triples(materialize(FX._rows_to_df(spark, rows, "k"), CFG))
+    assert got == materialize_py(rows)
+    assert pulls == []
 
 
 def test_stream_on_random_ontology_equals_batch(spark, tmp_path):

@@ -982,18 +982,29 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
         shutil.copy2(os.path.join(inp_stage, f), os.path.join(inp, f))
     cfg = RGConfig(output_subclasses=True, reflexive_subclasses=False)
     work = str(tmp_path / "work")
-    # every pull of the class closure's index, with the closure it pulled
+    # every seeding of the driver state (the class closure's index and the
+    # driver rules), with the closure it seeded the index from
+    from relation_graph_spark import incremental as inc
     from relation_graph_spark.closure import ClosureIndex
 
-    pulls = []
-    pull = ClosureIndex.pull.__func__
+    seeds, index_pulls = [], []
+    pull = inc.ClassFixpoint.pull
 
-    def recorded_pull(cls, tc):
-        index = pull(cls, tc)
-        pulls.append((index, {tuple(r) for r in tc.collect()}))
-        return index
+    def recorded_pull(fx, *args):
+        seeding = not fx.index_seeded
+        tc = {tuple(r) for r in fx.tc.collect()} if seeding else None
+        got = pull(fx, *args)
+        if seeding:
+            seeds.append((fx.index, fx.rules, tc))
+        return got
 
-    monkeypatch.setattr(ClosureIndex, "pull", classmethod(recorded_pull))
+    monkeypatch.setattr(inc.ClassFixpoint, "pull", recorded_pull)
+    real_index_pull = ClosureIndex.pull.__func__
+    monkeypatch.setattr(
+        ClosureIndex,
+        "pull",
+        classmethod(lambda cls, tc: index_pulls.append(tc) or real_index_pull(cls, tc)),
+    )
 
     def pairs(index):
         sub, sup = index.pairs()
@@ -1002,10 +1013,10 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
     job1 = IncrementalClosureJob(spark, inp, work, cfg)
     job1.run_available(max_files_per_trigger=1)
     assert len(job1.metrics()) == 2
-    # the bootstrap's R4 rounds pull the index once and hand it to the
-    # stream: the first delta batch pulls nothing
-    assert len(pulls) == 1 and pulls[0][0] is not None
-    assert pairs(pulls[0][0]) == pulls[0][1]
+    # the bootstrap's R4 rounds seed the driver state once, in one pull,
+    # and hand it to the stream: the first delta batch seeds nothing
+    assert len(seeds) == 1 and seeds[0][0] is not None and seeds[0][1] is not None
+    assert pairs(seeds[0][0]) == seeds[0][2]
     assert pairs(job1._state["_sc_index"]) == {
         tuple(r) for r in job1._state["sc_tc"].collect()
     }
@@ -1022,11 +1033,12 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
 
     job2.process_batch = recording
     job2.run_available(max_files_per_trigger=1)
-    # the restarted job rebuilds the class closure's index once, from the
-    # stored sc_tc
-    assert len(pulls) == 2 and pulls[1][0] is not None
-    assert pairs(pulls[1][0]) == pulls[1][1]
-    # ... and keeps it equal to the stored closure through later batches
+    # the restarted job seeds the driver state once, from the stored sc_tc
+    assert len(seeds) == 2 and seeds[1][0] is not None and seeds[1][1] is not None
+    assert pairs(seeds[1][0]) == seeds[1][2]
+    assert not index_pulls
+    # ... and keeps the index equal to the stored closure through later
+    # batches
     assert pairs(job2._state["_sc_index"]) == {
         tuple(r) for r in job2._state["sc_tc"].collect()
     }
