@@ -26,10 +26,14 @@ Properties that matter at 100 TB:
 
 A vocabulary-sized closure is computed on the driver instead, over sorted
 packed int64 arrays (the reference's in-memory maps, packed): a batch
-``transitive_closure`` of a small edge set closes there in one pass, and a
-stream that extends one closure batch after batch keeps it as a
-``ClosureIndex``, which ``incremental_tc`` extends instead of running
-distributed rounds. Both are bounded by ``broadcast_row_threshold`` pairs.
+``transitive_closure`` of a small edge set closes there in one pass, and
+the stream keeps its class closure as a ``ClosureIndex``, which only its
+driver R4 rounds extend (``incremental.DriverRules``); a stream round the
+driver cannot serve runs the distributed ``incremental_tc``. Both are
+bounded by ``broadcast_row_threshold`` pairs. ``incremental_tc`` keeps
+its ``index`` argument (served by ``_driver_incremental_tc``, which
+perfbench's tracer wraps by name), though the engine no longer passes
+one.
 The star closures both engines build (``star_closure``, ``property_star``)
 live here too.
 """
@@ -307,10 +311,6 @@ class ClosureIndex:
     def pairs(self) -> tuple[np.ndarray, np.ndarray]:
         """(sub, sup) token arrays of every pair."""
         return _unpack(self.fwd)
-
-    def added_pairs(self) -> tuple[np.ndarray, np.ndarray]:
-        """(sub, sup) token arrays of the pairs in `added`."""
-        return _unpack(self.added)
 
     def extend(self, sub: np.ndarray, sup: np.ndarray, max_pairs: int) -> ClosureIndex | None:
         """The closure of this relation plus the edges (sub[i], sup[i]).

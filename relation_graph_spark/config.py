@@ -41,9 +41,6 @@ class RGConfig:
     broadcast_row_threshold: int = 5_000_000
     # semi-naive safety valve: abort if the closure hasn't converged.
     max_iterations: int = 200
-    # localCheckpoint the accumulated closure every k iterations to truncate
-    # lineage (SURVEY.md section 4.1: plan-lineage truncation).
-    checkpoint_every: int = 1
     # R3 derives through the staged plan (a dedup between closure
     # expansions) only when the told-existential table exceeds this row
     # count; below it the staged plan's extra Spark jobs cost more than the

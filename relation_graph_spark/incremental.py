@@ -5,21 +5,21 @@ fixpoint over all accumulated told axioms per micro-batch, maintain a
 ClosureState and extend it with just the batch's delta:
 
 - incremental transitive closure: new pairs are exactly those with >= 1 new
-  edge on some path. While the star closure fits broadcast_row_threshold, a
-  driver-resident closure.ClosureIndex serves each call at one job (it
-  extends sorted packed int64 arrays by range lookups); past the bound, the
-  distributed path composes the delta against the accumulated closure from
-  BOTH sides until fixpoint (O(log diameter) rounds, same 'smart'
-  discipline as closure.transitive_closure);
+  edge on some path. While the class closure and the rule inputs fit
+  broadcast_row_threshold, the closure is a closure.ClosureIndex inside the
+  driver rules (DriverRules), and only the driver rounds extend it (range
+  lookups over sorted packed int64 arrays, no Spark job); a round the
+  driver cannot serve runs the distributed path, which composes the delta
+  against the accumulated closure from BOTH sides until fixpoint
+  (O(log diameter) rounds, same 'smart' discipline as
+  closure.transitive_closure);
 - delta-restricted R3: a new relation row needs >= 1 new input among
   {subject-closure pair, told existential, filler-closure pair, property-
-  closure pair}. While the class closure is index-served and the rule
-  inputs fit broadcast_row_threshold, each round derives those rows on the
-  driver (DriverRules: packed int64 arrays next to the ClosureIndex), and
-  Spark only checks them against the accumulated rel, in one probe per
-  batch; otherwise the one-sided passes run in Spark (derive_delta_passes)
-  and an anti-join against the accumulated rel keeps only genuinely new
-  rows (_settle).
+  closure pair}. A driver round derives those rows from the driver rules,
+  and Spark only checks them against the accumulated rel, in one probe per
+  batch; a Spark round runs the one-sided passes (derive_delta_passes) and
+  an anti-join against the accumulated rel keeps only genuinely new rows
+  (_settle).
 
 - delta-sized R4 equivalence feedback: sc facts derived from rel rows
   matching an AX_EQUIV_SOME definition re-enter R1/R3 as semi-naive rounds
@@ -58,11 +58,10 @@ history anti-join plus the R4 probe) followed by ONE stats job, instead of
 one plan and one probe per frame, and the driver rounds start no job but
 one pull of the told fold and one history probe. A probe whose
 whole input stage is known to be delta-sized (the told fold, the closure
-delta, a steady batch's candidates against a broadcast history) reads it
-through `coalesce(1)`: a single partition satisfies the aggregate's
-required distribution, so the probe is one job, not a shuffle job plus a
-result job. Anywhere a history-sized stage could feed the probe, it keeps
-the parallel plan.
+delta) reads it through `coalesce(1)`: a single partition satisfies the
+aggregate's required distribution, so the probe is one job, not a shuffle
+job plus a result job. Anywhere a history-sized stage could feed the probe
+(a Spark round's candidates and fired facts), it keeps the parallel plan.
 """
 
 from __future__ import annotations
@@ -88,7 +87,6 @@ from relation_graph_spark.closure import (
     _spread,
     _unpack,
     property_star,
-    star_closure,
 )
 from relation_graph_spark.config import RGConfig
 from relation_graph_spark.materialize import (
@@ -96,6 +94,8 @@ from relation_graph_spark.materialize import (
     _PACK_MASK,
     _distinct3,
     _fire,
+    _packs,
+    _span,
     derive_relations,
     materialize_edges,
 )
@@ -289,23 +289,12 @@ def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFr
     }
 
 
-def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
-    """Populate the in-memory derived-frame/stat cache if absent (fresh
-    restart or the first batch after the bootstrap). One-time O(closure)
-    cost per process, not per batch: every missing running stat comes from
-    ONE union-aggregate job. The class closure's ClosureIndex and the
-    driver rules are seeded by the first round that needs them
-    (ClassFixpoint.pull). A star closure rebuilt here (only for a state
-    without its stored star) leaves its broadcasts to the session's byte
-    threshold: no class count is known yet."""
-    if "_sc_star" not in state:
-        state["_sc_star"] = star_closure(state["sc_tc"], state["classes"]).localCheckpoint(
-            eager=False
-        )
-    if "_sp_star" not in state:
-        state["_sp_star"] = property_star(
-            state["sp"], state["props"], cfg.max_iterations, cfg.broadcast_row_threshold
-        )
+def _ensure_derived(state: dict[str, DataFrame]) -> None:
+    """Populate the in-memory running stats if absent (fresh restart or the
+    first batch after the bootstrap). One-time O(closure) cost per process,
+    not per batch: every missing stat comes from ONE union-aggregate job.
+    The driver rules are seeded by the first round that needs them
+    (ClassFixpoint.pull)."""
     counted = {
         "_n_sc_star": "_sc_star",
         "_n_sp_star": "_sp_star",
@@ -314,18 +303,14 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
         "_n_assertions": "assertions",
     }
     probes = [
-        state[frame]
-        .agg(F.count(F.lit(1)).alias("n"), F.lit(None).cast("bigint").alias("m"))
-        .select(F.lit(key).alias("key"), "n", "m")
+        state[frame].selectExpr(f"'{key}' AS key", "count(1) AS n", "NULL AS lo", "NULL AS hi")
         for key, frame in counted.items()
         if key not in state
     ]
-    if "_max_token" not in state:
-        # packability bound: every token a closure side or `some` carries
+    if "_packable" not in state:
+        # every token a closure side or `some` carries
         probes += [
-            state[frame]
-            .agg(F.max(F.greatest(*cols)).cast("bigint").alias("m"))
-            .select(F.lit("_max_token").alias("key"), F.lit(0).cast("bigint").alias("n"), "m")
+            state[frame].selectExpr("'_packable' AS key", "0L AS n", *_span(*cols))
             for frame, cols in (
                 ("_sc_star", ("sub", "sup")),
                 ("_sp_star", ("sub", "sup")),
@@ -334,13 +319,10 @@ def _ensure_derived(state: dict[str, DataFrame], cfg: RGConfig) -> None:
         ]
     if probes:
         rows = _union(probes).collect()
-        for r in rows:
-            if r["key"] != "_max_token":
-                state[r["key"]] = r["n"]
-        if "_max_token" not in state:
-            state["_max_token"] = max(
-                (r["m"] for r in rows if r["key"] == "_max_token" and r["m"] is not None),
-                default=None,
+        state.update((r["key"], r["n"]) for r in rows if r["key"] != "_packable")
+        if "_packable" not in state:
+            state["_packable"] = _packs(
+                r[b] for r in rows if r["key"] == "_packable" for b in ("lo", "hi")
             )
 
 
@@ -356,9 +338,7 @@ def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataF
     full computation."""
     from relation_graph_spark.materialize import compute_unsat
 
-    sc_star = state.get("_sc_star")
-    if sc_star is None:
-        sc_star = star_closure(state["sc_tc"], state["classes"])
+    sc_star = state["_sc_star"]
     if state.get("_has_bot") is False:
         unsat = sc_star.where(F.lit(False)).select(F.col("sub").alias("c"))
     else:
@@ -374,27 +354,22 @@ def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataF
 
 
 def incremental_tc(
-    old_tc: DataFrame,
-    delta_edges: DataFrame,
-    cfg: RGConfig,
-    old_tc_rows: int | None = None,
-    index: ClosureIndex | None = None,
-) -> tuple[DataFrame, DataFrame, ClosureIndex | None]:
-    """cfg-shaped wrapper over closure.incremental_tc (ClassFixpoint.close,
-    the TC step of both engines' R4 rounds). `index` (old_tc's ClosureIndex)
-    serves the call on the driver; `old_tc_rows` (or an upper bound, e.g.
-    the running _n_sc_star stat) makes the distributed path's broadcast
-    decision count-free."""
+    old_tc: DataFrame, delta_edges: DataFrame, cfg: RGConfig, old_tc_rows: int
+) -> tuple[DataFrame, DataFrame]:
+    """(new_tc, delta_pairs): cfg-shaped wrapper over the distributed
+    closure.incremental_tc (ClassFixpoint.close, the TC step of a Spark
+    round). `old_tc_rows` (an upper bound, e.g. the running _n_sc_star
+    stat) makes its broadcast decision count-free."""
     from relation_graph_spark.closure import incremental_tc as _itc
 
-    return _itc(
+    tc, delta, _ = _itc(
         old_tc,
         delta_edges,
         max_iterations=cfg.max_iterations,
         broadcast_row_threshold=cfg.broadcast_row_threshold,
         old_tc_rows=old_tc_rows,
-        index=index,
     )
+    return tc, delta
 
 
 def derive_delta_passes(
@@ -406,7 +381,7 @@ def derive_delta_passes(
     broadcast_row_threshold: int,
     sides_broadcast: bool,
     staged: bool,
-    max_token: int | None = None,
+    packable: bool,
 ) -> DataFrame:
     """R3 rows with >= 1 new input, as one-sided derive_relations passes
     unioned under one distinct: subject side over the closure delta
@@ -418,12 +393,8 @@ def derive_delta_passes(
     edges, see derive_relations); sides that do not fit the broadcast bound
     join through the hub-salted path. The filler-delta pass only expands
     the told existentials whose filler gained a closure pair."""
-    kw = {
-        "sides_broadcast": sides_broadcast,
-        # a known bound skips derive_relations' own max-token scan
-        "max_token": max_token if max_token is not None else 1 << _PACK_BITS,
-        "staged": staged,
-    }
+    # a known packability skips derive_relations' own token scan
+    kw = {"sides_broadcast": sides_broadcast, "packable": packable, "staged": staged}
     passes = []
     if d_star is not None:
         passes.append(
@@ -436,7 +407,6 @@ def derive_delta_passes(
         )
     if full_some is not None:
         passes.append(derive_relations(sc_star, full_some, sp_star, broadcast_row_threshold, **kw))
-    packable = max_token is not None and 0 <= max_token < (1 << _PACK_BITS)
     return _distinct3(_union(passes), "s", "p", "o", packable)
 
 
@@ -447,7 +417,6 @@ def _settle(
     defs: DataFrame | None,
     sc_known: DataFrame,
     activated: DataFrame | None = None,
-    narrow: bool = False,
 ) -> tuple[DataFrame, DataFrame | None, dict[str, int]]:
     """Deduplicate candidate rel rows against the ACCUMULATED rel of
     `history` (the one join against history in the per-batch path) and
@@ -465,15 +434,7 @@ def _settle(
     the `activated` ones of definitions new to the history, are anti-joined
     against `sc_known`, and the new rel rows and new sc facts leave as ONE
     tagged checkpoint plus ONE stats job — the R4 round's emptiness probe
-    costs no job of its own.
-
-    `narrow`: the caller vouches that `cand` is delta-sized, `prior` and
-    `sc_known` are broadcast and nothing is `activated`. If the history
-    side is broadcast too, every stage ending in a probe here is
-    delta-sized, so the probes and the fired-fact dedup read one partition
-    (one job each, no exchange). Otherwise they keep a parallel plan, one
-    job more each: a single partition would pull a history-sized stage
-    into one task."""
+    costs no job of its own."""
     stored: DataFrame | None = history.get("_state_tagged")  # type: ignore[assignment]
     if cand is None:
         rel_r = history["rel"].where("false").select("s", "p", "o")
@@ -481,8 +442,7 @@ def _settle(
         cand_b = cand.selectExpr("*", f"{_rel_bucket()} AS bucket").localCheckpoint(
             eager=False
         )
-        probe = cand_b.coalesce(1) if narrow else cand_b
-        touched = [r["bucket"] for r in probe.select("bucket").distinct().collect()]
+        touched = [r["bucket"] for r in cand_b.select("bucket").distinct().collect()]
         in_touched = ", ".join(str(b) for b in touched or [-1])
         hist = _untag(
             stored.where(f"bucket IN ({in_touched}) OR bucket IS NULL"), "rel"
@@ -491,12 +451,9 @@ def _settle(
         hist_bytes = _touched_bytes(history["_state_roots"], touched)
         if hist_bytes <= _conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold"):
             hist = F.broadcast(hist)
-        else:
-            narrow = False
         rel_r = cand_b.drop("bucket").join(hist, on=["s", "p", "o"], how="left_anti")
     else:
         rel_r = cand.join(history["rel"], on=["s", "p", "o"], how="left_anti")
-        narrow = False
     if prior is not None:
         rel_r = rel_r.join(prior, on=["s", "p", "o"], how="left_anti")
     if defs is None:
@@ -504,43 +461,23 @@ def _settle(
     sc_c = _fire(rel_r, defs)
     if activated is not None:
         sc_c = sc_c.unionByName(activated)
-    sc_c = sc_c.join(sc_known, on=["sub", "sup"], how="left_anti")
-    sc_c = (sc_c.coalesce(1) if narrow else sc_c).dropDuplicates()
+    sc_c = sc_c.join(sc_known, on=["sub", "sup"], how="left_anti").dropDuplicates()
     out = (
         _tagged(rel_r, "rel").unionByName(_tagged(sc_c, "sc")).localCheckpoint(eager=False)
     )
-    n = {
-        r["frame"]: r["count"]
-        for r in (out.coalesce(1) if narrow else out).groupBy("frame").count().collect()
-    }
+    n = {r["frame"]: r["count"] for r in out.groupBy("frame").count().collect()}
     return _untag(out, "rel"), _untag(out, "sc"), {"rel": n.get("rel", 0), "sc": n.get("sc", 0)}
-
-
-def _star_stats(d_star: DataFrame, index: ClosureIndex | None) -> tuple[int, int]:
-    """(rows, rows reaching owl:Nothing) of a closure delta minus its self
-    and TOP pairs: from the pairs `index` added when it served the TC call
-    (no job), else one job."""
-    if index is not None:
-        sub, sup = index.added_pairs()
-        star = (sub != sup) & (sup != T.TOP)
-        return int(star.sum()), int((star & (sup == T.BOT)).sum())
-    r = (
-        d_star.coalesce(1)
-        .selectExpr("count(1) AS n", f"sum(CASE WHEN sup = {T.BOT} THEN 1 ELSE 0 END) AS bot")
-        .collect()[0]
-    )
-    return r["n"], int(r["bot"] or 0)
 
 
 # ------------------------------------------------------------ driver rounds
 #
-# While the class closure is index-served and the told existentials and
-# the property closure fit broadcast_row_threshold, the R4 rounds run on
-# the driver (the reference's in-memory maps, packed): the R3 and R4 rule
-# inputs are sorted int64 arrays next to the closure's ClosureIndex, and a
-# rel row (s, p, o) is one key s<<42 | p<<21 | o, so every token must lie
-# in [0, 2^21). Spark only checks the rows against the accumulated rel, in
-# one probe per batch (ClassFixpoint.finish).
+# While the class closure, the told existentials and the property closure
+# fit broadcast_row_threshold, the R4 rounds run on the driver (the
+# reference's in-memory maps, packed): the class closure and the R3 and R4
+# rule inputs are sorted int64 arrays (DriverRules), and a rel row (s, p, o)
+# is one key s<<42 | p<<21 | o, so every token must lie in [0, 2^21). Spark
+# only checks the rows against the accumulated rel, in one probe per batch
+# (ClassFixpoint.finish).
 
 _KEY_BITS = 2 * _PACK_BITS
 _PO_MASK = (1 << _KEY_BITS) - 1
@@ -594,14 +531,16 @@ def _via(t: np.ndarray, col: int, keys: np.ndarray, shift: int, budget: int) -> 
 
 @dataclass(frozen=True)
 class DriverRules:
-    """The R3 and R4 rule inputs of the class fixpoint on the driver, as
-    sorted packed int64 arrays: the star closure `star` (a ClosureIndex of
-    sc_tc plus every class's reflexive and TOP pair), the told existentials
-    by subject (`some_s`: s<<42|q<<21|f) and by filler (`some_f`:
-    f<<42|q<<21|s), the property closure `sp` (q<<21|p), the definitions
-    `defs` (p<<42|o<<21|f, for `f ≡ p some o`) and the told plus
-    R4-derived subclass edges `sc` (closure packing). Immutable."""
+    """The class closure and the R3 and R4 rule inputs of the class
+    fixpoint on the driver, as sorted packed int64 arrays: the transitive
+    closure `tc` (sc_tc's ClosureIndex), the star closure `star` (a
+    ClosureIndex of tc plus every class's reflexive and TOP pair), the told
+    existentials by subject (`some_s`: s<<42|q<<21|f) and by filler
+    (`some_f`: f<<42|q<<21|s), the property closure `sp` (q<<21|p), the
+    definitions `defs` (p<<42|o<<21|f, for `f ≡ p some o`) and the told
+    plus R4-derived subclass edges `sc` (closure packing). Immutable."""
 
+    tc: ClosureIndex
     star: ClosureIndex
     some_s: np.ndarray
     some_f: np.ndarray
@@ -610,11 +549,10 @@ class DriverRules:
     sc: np.ndarray
 
     @classmethod
-    def of(cls, tc: ClosureIndex, classes, some, sp_star, sc, defs) -> DriverRules | None:
+    def of(cls, tc, classes, some, sp_star, sc, defs) -> DriverRules | None:
         """The rules over the pulled token columns of each frame. None if a
         token does not pack."""
-        (c,) = classes
-        sub, sup = tc.pairs()
+        (c,), (sub, sup) = classes, tc
         if not _packable(c, sub, sup):
             return None
         top = c[c != T.TOP]
@@ -622,7 +560,9 @@ class DriverRules:
             np.concatenate([sub, c, top]), np.concatenate([sup, c, np.full(len(top), T.TOP)])
         )
         empty = np.empty(0, np.int64)
-        return cls(star, empty, empty, empty, empty, empty).grown(some, defs, sc, sp_star=sp_star)
+        return cls(ClosureIndex.of_pairs(sub, sup), star, empty, empty, empty, empty, empty).grown(
+            some, defs, sc, sp_star=sp_star
+        )
 
     def grown(self, some, defs, sc, sp_star=None, props=()) -> DriverRules | None:
         """These rules plus told rows (each a tuple of token columns): the
@@ -728,13 +668,12 @@ def _pull_tagged(tagged: DataFrame, widths: dict[str, int]) -> dict[str, tuple |
     """Tagged rows on the driver, through Arrow (one job): each tag of
     `widths` -> its first `width` token columns as int64 arrays (empty if
     absent), or None if one holds a null."""
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
     t = tagged.toArrow()
-    frame = t.column("frame").to_numpy(zero_copy_only=False)
     out: dict[str, tuple | None] = {}
     for tag, width in widths.items():
-        rows = t.filter(pa.array(frame == tag))
+        rows = t.filter(pc.equal(t.column("frame"), tag))
         cols = [rows.column(c) for c in _TAG_COLS[:width]]
         out[tag] = (
             None
@@ -753,14 +692,17 @@ class ClassFixpoint:
     transitive closure and `star` its star closure over `classes`; `rows`
     upper-bounds |star| (so |tc| too). The R3 inputs — told existentials
     `some` (`n_some` rows), property closure `sp_star` (`n_sp` rows),
-    packability bound `max_token`, the `staged` plan choice — and the
-    definitions `defs` (None without any) stay fixed. `history` holds the
-    rel that new rel rows are deduplicated against (_settle, finish).
+    whether every token `packable` into one int64 key, the `staged` plan
+    choice — and the definitions `defs` (None without any) stay fixed.
+    `history` holds the rel that new rel rows are deduplicated against
+    (_settle, finish).
 
-    On the driver: `index` is tc's ClosureIndex and `rules` the
-    DriverRules, each None once unavailable (past the bound, a dropped
-    index, an unpackable or null token) and seeded by the first round that
-    needs them (pull) unless handed in. What the rounds add is recorded:
+    On the driver: `rules` are the DriverRules, tc's ClosureIndex among
+    them, seeded by the first round that needs them (pull) unless handed
+    in; once `seeded`, None means unavailable for good (past the bound, an
+    unpackable or null token). Only driver rounds extend the index: a Spark
+    round, whose distributed TC the rules would miss, leaves them unseeded
+    for the next driver round to pull. What the rounds add is recorded:
     rel rows disjoint from the history's (`rel`, `n_rel` of them), per call
     the R4 facts, tc and star deltas, and the R3 plan of each round
     (`plans`: driver / passes); `bot` counts new star pairs into
@@ -779,13 +721,11 @@ class ClassFixpoint:
     n_some: int
     sp_star: DataFrame
     n_sp: int
-    max_token: int | None
+    packable: bool
     staged: bool
     defs: DataFrame | None
-    index: ClosureIndex | None = None
     rules: DriverRules | None = None
-    index_seeded: bool = False
-    rules_seeded: bool = False
+    seeded: bool = False
     rel: DataFrame | None = None
     n_rel: int = 0
     bot: int = 0
@@ -802,60 +742,58 @@ class ClassFixpoint:
     # ------------------------------------------------------- driver state
 
     def driven(self) -> bool:
-        """Whether the next round can run on the driver. The index and rules
-        are dropped for good once their inputs pass the bound (the closure,
-        the told existentials and the property closure only grow)."""
-        if not _fits(self.cfg, self.rows):
-            self.index, self.index_seeded = None, True
-        if not (_fits(self.cfg, self.n_some) and _fits(self.cfg, self.n_sp)) or (
-            self.index_seeded and self.index is None
-        ):
-            self.rules, self.rules_seeded = None, True
-        return not self.rules_seeded or self.rules is not None
+        """Whether the next round can run on the driver. The rules are
+        dropped for good once their inputs pass the bound (the closure, the
+        told existentials and the property closure only grow)."""
+        if not all(_fits(self.cfg, n) for n in (self.rows, self.n_some, self.n_sp)):
+            self.rules, self.seeded = None, True
+        return not self.seeded or self.rules is not None
+
+    def unseed(self) -> None:
+        """Leave rules that miss a Spark-side change for the next driver
+        round to pull again (unavailable rules stay unavailable)."""
+        if self.rules is not None:
+            self.rules, self.seeded = None, False
 
     def pull(self, extra: DataFrame, widths: dict[str, int]) -> dict[str, tuple | None]:
-        """The tagged rows `extra` on the driver, in one job with whatever of
-        the driver state is not seeded yet (sc_tc for the index; the rule
-        inputs for the rules)."""
-        frames = {"sc_tc": self.tc} if not self.index_seeded else {}
-        if not self.rules_seeded:
-            frames.update(classes=self.classes, some=self.some, sp_star=self.sp_star, sc=self.sc)
+        """The tagged rows `extra` on the driver, in one job with the rule
+        inputs if the rules are not seeded yet."""
+        frames = {}
+        if not self.seeded:
+            frames = dict(
+                sc_tc=self.tc, classes=self.classes, some=self.some, sp_star=self.sp_star,
+                sc=self.sc,
+            )
             if self.defs is not None:
                 frames["def_some"] = self.defs
         got = _pull_tagged(
             _union([extra, *(_tagged(df, n) for n, df in frames.items())]),
             {**widths, **{n: len(FRAME_COLUMNS[n]) for n in frames}},
         )
-        if not self.index_seeded:
-            self.index = None if got["sc_tc"] is None else ClosureIndex.of_pairs(*got["sc_tc"])
-            self.index_seeded = True
-        if not self.rules_seeded:
-            parts = [got.get(n, ()) for n in ("classes", "some", "sp_star", "sc", "def_some")]
-            self.rules = (
-                DriverRules.of(self.index, *parts)
-                if self.index is not None and all(p is not None for p in parts)
-                else None
-            )
-            self.rules_seeded = True
+        if not self.seeded:
+            rule_inputs = ("sc_tc", "classes", "some", "sp_star", "sc", "def_some")
+            parts = [got.get(n, ()) for n in rule_inputs]
+            self.rules = DriverRules.of(*parts) if all(p is not None for p in parts) else None
+            self.seeded = True
         return got
 
     def extend(self, edges: np.ndarray, classes: np.ndarray | None = None) -> np.ndarray | None:
         """Close the packed subclass edges `edges` into the index (no pull)
         and grow the star closure by its new pairs plus the reflexive and
         TOP pairs of new `classes`. Returns the new star pairs, or None when
-        the closure passes the bound (index and rules are then dropped)."""
-        index = self.index.extend(*_unpack(edges), self.cfg.broadcast_row_threshold)
-        if index is None:
-            self.index = self.rules = None
+        the closure passes the bound (the rules are then dropped)."""
+        tc = self.rules.tc.extend(*_unpack(edges), self.cfg.broadcast_row_threshold)
+        if tc is None:
+            self.rules = None
             return None
-        new = [index.added]
+        new = [tc.added]
         if classes is not None:
             top = classes[classes != T.TOP]
             new += [_pack(classes, classes), _pack(top, np.full(len(top), T.TOP))]
         d = np.unique(np.concatenate(new))
         d = d[~_member(self.rules.star.fwd, d)]
-        self.index, self.rules = index, replace(self.rules, star=self.rules.star.union(d))
-        self._tc_new.append(index.added)
+        self.rules = replace(self.rules, tc=tc, star=self.rules.star.union(d))
+        self._tc_new.append(tc.added)
         self._star_new.append(d)
         self.rows += len(d)
         self.bot += int((_low(d) == T.BOT).sum())
@@ -902,37 +840,29 @@ class ClassFixpoint:
                 setattr(self, name, getattr(self, name).unionByName(df))
 
     def driver_state(self) -> dict:
-        """The index and rules to carry into the next batch: only those
-        seeded (an absent key is seeded by the next round that needs it)."""
-        return {
-            **({"_sc_index": self.index} if self.index_seeded else {}),
-            **({"_sc_rules": self.rules} if self.rules_seeded else {}),
-        }
+        """The driver rules to carry into the next batch, if seeded (an
+        absent key is seeded by the next round that needs it)."""
+        return {"_sc_rules": self.rules} if self.seeded else {}
 
     # -------------------------------------------------------- Spark rounds
 
     def close(self, edges: DataFrame) -> tuple[DataFrame, int]:
-        """Incremental TC of `edges` onto `tc` in Spark, served by `index`
-        (seeded here by ClosureIndex.pull) while `rows` fits the broadcast
-        bound. The rules miss these pairs: they are reseeded by the next
-        round that runs on the driver. Returns the star delta — the tc delta
-        minus its self and TOP pairs, which every class's reflexive and top
-        rows already hold, so it is disjoint from `star` — and its row
-        count; `grow` adds it."""
-        fits = _fits(self.cfg, self.rows)
-        if not self.index_seeded:
-            self.index = ClosureIndex.pull(self.tc) if fits else None
-            self.index_seeded = True
-        if self.rules is not None:
-            self.rules, self.rules_seeded = None, False
-        self.tc, d_tc, self.index = incremental_tc(
-            self.tc, edges, self.cfg, old_tc_rows=self.rows, index=self.index if fits else None
-        )
+        """Incremental TC of `edges` onto `tc` in distributed rounds; the
+        rules miss these pairs (unseed). Returns the star delta — the tc
+        delta minus its self and TOP pairs, which every class's reflexive
+        and top rows already hold, so it is disjoint from `star` — and its
+        row count (one job); `grow` adds it."""
+        self.unseed()
+        self.tc, d_tc = incremental_tc(self.tc, edges, self.cfg, old_tc_rows=self.rows)
         self.tc_parts.append(d_tc)
         d_star = d_tc.where(f"sub != sup AND sup != {T.TOP}")
-        n, bot = _star_stats(d_star, self.index)
-        self.bot += bot
-        return d_star, n
+        r = (
+            d_star.coalesce(1)
+            .selectExpr("count(1) AS n", f"count(CASE WHEN sup = {T.BOT} THEN 1 END) AS bot")
+            .collect()[0]
+        )
+        self.bot += r["bot"]
+        return d_star, r["n"]
 
     def grow(self, d_star: DataFrame, n: int) -> None:
         """Add `n` star rows disjoint from `star`: a plain union, no
@@ -948,7 +878,7 @@ class ClassFixpoint:
         return derive_delta_passes(
             self.star, self.some, self.sp_star, d_star, full, self.cfg.broadcast_row_threshold,
             sides_broadcast=_fits(self.cfg, self.rows + self.n_sp), staged=self.staged,
-            max_token=self.max_token,
+            packable=self.packable,
         )
 
     def known_sc(self) -> DataFrame:
@@ -958,7 +888,7 @@ class ClassFixpoint:
     # ----------------------------------------------------------- a round
 
     def settle(
-        self, cand: np.ndarray | DataFrame | None, activated: DataFrame | None, narrow: bool
+        self, cand: np.ndarray | DataFrame | None, activated: DataFrame | None = None
     ) -> np.ndarray | DataFrame | None:
         """Keep the rel candidates `cand` this batch has not added yet and
         return the new R4 facts they fire (None if none). Driver keys
@@ -989,7 +919,7 @@ class ClassFixpoint:
             cand, self.history,
             _bounded_broadcast(self.cfg, _union(prior), self.n_rel + len(self._rel_new))
             if prior else None,
-            self.defs, self.known_sc(), activated, narrow=narrow,
+            self.defs, self.known_sc(), activated,
         )
         self.rel = rel if self.rel is None else self.rel.unionByName(rel)
         self.n_rel += n.get("rel", 0)
@@ -1056,10 +986,7 @@ class ClassFixpoint:
 
 
 def feedback_rounds(
-    fx: ClassFixpoint,
-    cand: np.ndarray | DataFrame | None,
-    activated: DataFrame | None,
-    narrow: bool,
+    fx: ClassFixpoint, cand: np.ndarray | DataFrame | None, activated: DataFrame | None
 ) -> None:
     """R4 equivalence feedback to fixpoint (reference
     RelationGraph.scala:217-230): the one round body the batch and the
@@ -1067,27 +994,19 @@ def feedback_rounds(
 
     First the candidate rel rows `cand` (packed keys from a driver round,
     or a frame) settle, and the R4 facts they fire join the `activated`
-    ones (definitions new to the history, fired against it; `narrow` as in
-    _settle). Then each round adds the new facts to `sc`, extends the
-    closure with them, derives the rel rows that use a new star pair and
-    settles those, until a round fires no new fact (ClassFixpoint.step and
-    settle: on the driver while it serves the round, else in Spark). Only
+    ones (definitions new to the history, fired against it). Then each
+    round adds the new facts to `sc`, extends the closure with them,
+    derives the rel rows that use a new star pair and settles those, until
+    a round fires no new fact (ClassFixpoint.step and settle: on the driver
+    while it serves the round, else wholly in Spark). Only
     new rel rows can fire a definition they have not fired before, so each
     round's work is the size of its delta, not of the fixpoint."""
-    facts = fx.settle(cand, activated, narrow)
+    facts = fx.settle(cand, activated)
     for _round in range(fx.cfg.max_iterations):
         if facts is None:
             fx.finish()
             return
-        cand = fx.step(facts)
-        facts = (
-            None
-            if cand is None
-            else fx.settle(
-                cand, None,
-                _fits(fx.cfg, fx.n_rel + len(fx._rel_new)) and _fits(fx.cfg, fx.rows),
-            )
-        )
+        facts = fx.settle(fx.step(facts))
     raise FixpointDidNotConverge(
         f"R4 feedback did not converge in {fx.cfg.max_iterations} rounds"
     )
@@ -1103,11 +1022,14 @@ def _driver_round0(
     """apply_delta's first round on the driver: the batch's told delta
     arrives through one pull of the checkpointed fold (with the grown
     property closure `sp_star`, if any, and any unseeded driver state),
-    extends the rules and the index, and derives the rel candidates (as
-    ClassFixpoint.candidates). (False, None) when the round runs in
-    Spark."""
+    extends the rules, and derives the rel candidates (as
+    ClassFixpoint.candidates). (False, None) when the round runs in Spark;
+    a told delta past the bound unseeds the rules, which would miss it."""
     told = ("sc", "some", "def_some", "classes", "props")
-    if not (fx.driven() and _fits(fx.cfg, sum(n_d[n] for n in told))):
+    if not fx.driven():
+        return False, None
+    if not _fits(fx.cfg, sum(n_d[n] for n in told)):
+        fx.unseed()
         return False, None
     tagged = fold.where("frame IN (" + ", ".join(f"'{n}'" for n in told) + ")").selectExpr(
         "concat('d_', frame) AS frame", *_TAG_COLS
@@ -1149,15 +1071,15 @@ def apply_delta(
     # its own (batch) size, anti-joined against the state frame, then
     # unioned plain — no O(state) dropDuplicates shuffle anywhere in the
     # per-batch path. Derived frames (sc_star, sp_star) and scalar stats
-    # (side row counts, max token) are carried forward incrementally via
-    # cache keys ("_sc_star", "_sp_star", "_n_*", "_max_token") instead of
+    # (side row counts, packability) are carried forward incrementally via
+    # cache keys ("_sc_star", "_sp_star", "_n_*", "_packable") instead of
     # being recomputed from the full state each batch.
-    _ensure_derived(state, cfg)
+    _ensure_derived(state)
 
     # ONE tagged anti-join folds every told frame: the delta frames as one
     # (frame, t0, t1, t2) union against the same union of the state frames,
     # then one checkpoint and one stats job (per-frame row count for the
-    # emptiness decisions and running stats, max token for packability).
+    # emptiness decisions and running stats, token span for packability).
     # The state side is vocabulary-sized; its running row bound gates the
     # broadcast hint (classes, sc <= sc_star; props, sp <= sp_star).
     stored = state.get("_state_tagged")
@@ -1192,8 +1114,9 @@ def apply_delta(
         .groupBy("frame")
         .agg(
             F.expr("count(1) AS n"),
-            # individuals never enter a closure side: no packability bound
-            F.expr("max(CASE WHEN frame != 'assertions' THEN greatest(t0, t1, t2) END) AS mx"),
+            # per column: a frame's padding (_NO_TOKEN) is no token of it
+            *(F.expr(f"min({t}) AS lo_{t}") for t in _TAG_COLS),
+            F.expr("max(greatest(t0, t1, t2)) AS hi"),
             # new classes among TOP / owl:Nothing: their star rows (below)
             F.expr(f"count(CASE WHEN t0 = {T.TOP} THEN 1 END) AS top"),
             F.expr(f"count(CASE WHEN t0 = {T.BOT} THEN 1 END) AS bot"),
@@ -1201,7 +1124,13 @@ def apply_delta(
         .collect()
     }
     n_d = {n: stats[n]["n"] if n in stats else 0 for n in _TOLD_FRAMES}
-    d_max = max((r["mx"] for r in stats.values() if r["mx"] is not None), default=None)
+    # individuals never enter a closure side: no packability bound
+    packable = state["_packable"] and _packs(
+        r[b]
+        for n, r in stats.items()
+        if n != "assertions"
+        for b in ("hi", *(f"lo_{t}" for t in _TAG_COLS[: len(FRAME_COLUMNS[n])]))
+    )
     d = {n: _untag(fold, n) for n in _TOLD_FRAMES}
 
     classes_new = state["classes"].unionByName(d["classes"])
@@ -1227,21 +1156,17 @@ def apply_delta(
     def_new = state["def_some"].unionByName(d["def_some"])
 
     # running side stats: broadcast decision + packability without a
-    # per-batch O(closure) count/max scan
+    # per-batch O(closure) count/min/max scan
     n_some = state["_n_some"] + n_d["some"]
     n_def = state["_n_def"] + n_d["def_some"]
-    max_tok = max(state["_max_token"] or -1, d_max if d_max is not None else -1)
-    if max_tok < 0:
-        max_tok = None
 
     fx = ClassFixpoint(
         cfg, state, sc=state["sc"].unionByName(d["sc"]), tc=state["sc_tc"],
         star=state["_sc_star"], classes=state["classes"], rows=state["_n_sc_star"],
-        some=some_new, n_some=n_some, sp_star=sp_star_new, n_sp=n_sp_new, max_token=max_tok,
+        some=some_new, n_some=n_some, sp_star=sp_star_new, n_sp=n_sp_new, packable=packable,
         staged=n_some > cfg.incremental_feedback_threshold,
         defs=_bounded_broadcast(cfg, def_new, n_def) if n_def else None,
-        index=state.get("_sc_index"), rules=state.get("_sc_rules"),
-        index_seeded="_sc_index" in state, rules_seeded="_sc_rules" in state,
+        rules=state.get("_sc_rules"), seeded="_sc_rules" in state,
     )
     # R3 over every new input at once: new closure pairs on either side, new
     # told existentials, or — when the property hierarchy grew — every told
@@ -1250,9 +1175,6 @@ def apply_delta(
     d_classes = d["classes"]
     served, cand = _driver_round0(fx, fold, n_d, full_some, sp_star_new if sp_changed else None)
     if not served:
-        if fx.rules is not None:
-            # they miss this batch's told rows: the next driver round reseeds
-            fx.rules, fx.rules_seeded = None, False
         if n_d["sc"]:
             d_star, n_star = fx.close(d["sc"])
         else:
@@ -1282,18 +1204,13 @@ def apply_delta(
     # ------- R4 equivalence feedback, delta-sized -----------------------
     # Candidates come from the batch's NEW rel rows against all definitions,
     # plus — only when a NEW definition arrived — one broadcast-join scan of
-    # the accumulated rel to activate it against history. Only a steady
-    # batch's candidates are delta-sized: a grown property hierarchy
-    # re-derives every told existential, and a late definition scans the
-    # history.
+    # the accumulated rel to activate it against history.
     late = (
         _fire(state["rel"], _bounded_broadcast(cfg, d["def_some"], n_d["def_some"]))
         if n_d["def_some"]
         else None
     )
-    feedback_rounds(
-        fx, cand, late, narrow=not sp_changed and not n_d["def_some"] and _fits(cfg, fx.rows)
-    )
+    feedback_rounds(fx, cand, late)
 
     new_state = {
         "sc": fx.sc,
@@ -1317,7 +1234,7 @@ def apply_delta(
         # when provably never seen; None = unknown -> callers fall back to
         # computing unsat
         "_has_bot": True if fx.bot > 0 else state.get("_has_bot"),
-        "_max_token": max_tok,
+        "_packable": packable,
         "_r3_plans": fx.plans,
         **fx.driver_state(),
     }
@@ -1838,7 +1755,7 @@ def repoint_state(
     persist: keeps per-batch plans one level deep over parquet leaves with
     REAL file statistics — see the DERIVED_FRAMES comment for why chaining
     in-memory Datasets across batches is an exponential planning-time
-    cliff. Scalar caches (_n_*, _max_token, _has_bot) are carried in the
+    cliff. Scalar caches (_n_*, _packable, _has_bot) are carried in the
     dict untouched."""
     state["_state_roots"] = [r for r in roots if os.path.isdir(r)]
     state["_state_tagged"] = stored = _read_tagged(spark, state["_state_roots"])

@@ -80,6 +80,23 @@ def _packed_distinct(df: DataFrame, c1: str, c2: str, c3: str) -> DataFrame:
     )
 
 
+def _span(*cols: str) -> tuple[str, str]:
+    """SQL aggregates of the least (`lo`) and the greatest (`hi`) token of
+    two or more columns."""
+    return (
+        "least(" + ", ".join(f"min({c})" for c in cols) + ") AS lo",
+        "greatest(" + ", ".join(f"max({c})" for c in cols) + ") AS hi",
+    )
+
+
+def _packs(bounds) -> bool:
+    """Whether the tokens spanned by `bounds` (the least and greatest
+    tokens of some columns; None for a column without one) all fit the
+    packing: a negative token does not, whatever the greatest one is."""
+    known = [b for b in bounds if b is not None]
+    return not known or (0 <= min(known) and max(known) <= _PACK_MASK)
+
+
 def _distinct3(df: DataFrame, c1: str, c2: str, c3: str, packable: bool) -> DataFrame:
     if packable:
         return _packed_distinct(df, c1, c2, c3)
@@ -96,7 +113,7 @@ def derive_relations(
     hot_key_threshold: int = 1_000_000,
     n_salts: int = 16,
     sides_broadcast: bool | None = None,
-    max_token: int | None = None,
+    packable: bool | None = None,
     staged: bool = True,
 ) -> DataFrame:
     """R3: one declarative join chain; Catalyst plans the physical strategy.
@@ -164,29 +181,22 @@ def derive_relations(
 
     from relation_graph_spark.skew import hot_key_salted_join
 
-    # token-packing eligibility: one cheap max() scan over the closure sides
-    # (skipped when the caller hands in a pre-measured max_token). Reuses
-    # the checkpointed side frames where they alias sc_star/sp_star.
-    if max_token is None:
+    # token-packing eligibility: one cheap min/max scan over the closure
+    # sides (skipped when the caller knows it). Reuses the checkpointed side
+    # frames where they alias sc_star/sp_star.
+    if packable is None:
         sc_scan = (
             sub_plain
             if subject_star is None
             else (fill_plain if filler_star is None else sc_star)
         )
-        max_token = (
-            sc_scan.select(F.greatest(F.max("sub"), F.max("sup")).alias("m"))
-            .unionByName(
-                prop_plain.select(F.greatest(F.max("sub"), F.max("sup")).alias("m"))
-            )
-            .unionByName(
-                some.select(
-                    F.greatest(F.max("s"), F.max("p"), F.max("f")).alias("m")
-                )
-            )
-            .agg(F.max("m"))
-            .collect()[0][0]
+        packable = _packs(
+            sc_scan.selectExpr(*_span("sub", "sup"))
+            .unionByName(prop_plain.selectExpr(*_span("sub", "sup")))
+            .unionByName(some.selectExpr(*_span("s", "p", "f")))
+            .agg(F.min("lo"), F.max("hi"))
+            .collect()[0]
         )
-    packable = max_token is not None and 0 <= max_token < (1 << _PACK_BITS)
 
     # x is any subclass (refl.) of the told subject
     if sub_bcast:
@@ -264,35 +274,25 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
     sc = told["sc"].dropDuplicates().localCheckpoint(eager=False)
 
     # ONE combined stats job: told-existential / definition counts (cost-based
-    # decisions below) + the global max token (packability for EVERY
+    # decisions below) + the least and greatest token (packability for EVERY
     # derive_relations call — all closure-side tokens are classes, props or
-    # the reserved TOP/BOT, so max(classes, props) bounds them; computing it
-    # here once replaces a per-derivation-pass max scan)
+    # the reserved TOP/BOT, so the span of classes and props bounds them;
+    # computing it here once replaces a per-derivation-pass min/max scan)
     stats = (
-        some.agg(F.count(F.lit(1)).alias("n"), F.lit(None).cast("bigint").alias("m"))
-        .select(F.lit("some").alias("f"), "n", "m")
+        some.selectExpr("'some' AS f", "count(1) AS n", "NULL AS lo", "NULL AS hi")
+        .unionByName(def_some.selectExpr("'def' AS f", "count(1) AS n", "NULL AS lo", "NULL AS hi"))
         .unionByName(
-            def_some.agg(
-                F.count(F.lit(1)).alias("n"), F.lit(None).cast("bigint").alias("m")
-            ).select(F.lit("def").alias("f"), "n", "m")
+            classes.selectExpr("'classes' AS f", "count(1) AS n", "min(c) AS lo", "max(c) AS hi")
         )
         .unionByName(
-            classes.agg(
-                F.count(F.lit(1)).alias("n"), F.max("c").cast("bigint").alias("m")
-            ).select(F.lit("classes").alias("f"), "n", "m")
-        )
-        .unionByName(
-            props.agg(
-                F.count(F.lit(1)).alias("n"), F.max("p").cast("bigint").alias("m")
-            ).select(F.lit("props").alias("f"), "n", "m")
+            props.selectExpr("'props' AS f", "count(1) AS n", "min(p) AS lo", "max(p) AS hi")
         )
         .collect()
     )
     st = {r["f"]: r for r in stats}
     n_some, n_def = st["some"]["n"], st["def"]["n"]
-    max_token = max(
-        [m for m in (st["classes"]["m"], st["props"]["m"], T.TOP, T.BOT) if m is not None],
-        default=None,
+    packable = _packs(
+        [T.TOP, T.BOT, *(st[f][b] for f in ("classes", "props") for b in ("lo", "hi"))]
     )
 
     thr = cfg.broadcast_row_threshold
@@ -306,7 +306,7 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         sc_tc, classes, broadcast=0 < thr and st["classes"]["n"] <= thr
     ).localCheckpoint(eager=False)
     rel = derive_relations(
-        sc_star, some, sp_star, thr, staged=staged, max_token=max_token
+        sc_star, some, sp_star, thr, staged=staged, packable=packable
     ).localCheckpoint(eager=False)
 
     driver_state, plans = {}, []
@@ -314,10 +314,10 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         # R4 feedback: the stream's semi-naive rounds (feedback_rounds),
         # whose first round is the stream's late-definition case — every
         # definition fires against the round-0 rel. One job counts the
-        # closure sides for the broadcast decisions. The class closure's
-        # ClosureIndex and the driver rules are pulled by the first round
-        # that fires a fact, only while they fit the broadcast bound, as in
-        # the stream; the rounds run in Spark otherwise.
+        # closure sides for the broadcast decisions. The driver rules (the
+        # class closure's ClosureIndex among them) are pulled by the first
+        # round that fires a fact, only while they fit the broadcast bound,
+        # as in the stream; the rounds run in Spark otherwise.
         from relation_graph_spark.incremental import (
             ClassFixpoint,
             _bounded_broadcast,
@@ -335,9 +335,9 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         fx = ClassFixpoint(
             cfg, {"rel": rel}, sc=sc, tc=sc_tc, star=sc_star, classes=classes,
             rows=n.get("star", 0), some=some, n_some=n_some, sp_star=sp_star,
-            n_sp=n.get("sp", 0), max_token=max_token, staged=staged, defs=defs,
+            n_sp=n.get("sp", 0), packable=packable, staged=staged, defs=defs,
         )
-        feedback_rounds(fx, None, _fire(rel, defs), narrow=False)
+        feedback_rounds(fx, None, _fire(rel, defs))
         # the rounds' rel rows are disjoint from the round-0 rel
         rel = rel.unionByName(fx.rel)
         sc, sc_tc, sc_star = fx.sc, fx.tc, fx.star
@@ -357,9 +357,9 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         # told subclass edges including R4-derived feedback facts — the
         # incremental engine's state seed
         "sc_final": sc,
-        # scalar stats, the R3 plan of each feedback round, and the class
-        # closure's index and driver rules if the rounds seeded them,
-        # carried to the incremental engine (avoid re-counts and re-pulls)
+        # scalar stats, the R3 plan of each feedback round, and the driver
+        # rules if the rounds seeded them, carried to the incremental engine
+        # (avoid re-counts and re-pulls)
         "_n_some": n_some,
         "_n_def": n_def,
         "_r3_plans": plans,

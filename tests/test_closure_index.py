@@ -72,7 +72,7 @@ def test_extend_equals_set_closure():
             want = _closure(edges)
             index = index.extend(*_arrays(d), max_pairs=10**9)
             assert _index_pairs(index) == want, (seed, step)
-            sub, sup = index.added_pairs()
+            sub, sup = C._unpack(index.added)
             assert set(zip(sub.tolist(), sup.tolist())) == want - closed
             assert len(index.added) == len(want - closed)
             sup, sub = index.bwd >> 32, index.bwd.astype(np.int32)

@@ -4,8 +4,9 @@ cycles, a named equivalence and an owl:Nothing edge: batch materialize
 equals the Python oracle under every fork of the kernel — driver rounds
 over the class closure's index, or Spark rounds (distributed TC and the
 one-sided passes, fused or staged) — and a 3-batch stream's live sink
-equals the batch output. The class closure's driver state is pulled only
-by a round that needs it."""
+equals the batch output. A negative filler or property token, which no
+packed key holds, sends every round to Spark, unpacked. The class
+closure's driver state is pulled only by a round that needs it."""
 
 import os
 import random
@@ -14,6 +15,7 @@ from dataclasses import replace
 import pytest
 from pyoracle import materialize_py
 
+from relation_graph_spark import closure
 from relation_graph_spark import fixtures as FX
 from relation_graph_spark import incremental as inc
 from relation_graph_spark import tokens as T
@@ -75,8 +77,10 @@ FORKS = {
 
 @pytest.fixture()
 def kernel_paths(monkeypatch):
-    """Record the R3 plan of each kernel round, each incremental TC call
-    (served by the index?) and the staged flag of each Spark derive."""
+    """Record the R3 plan of each kernel round, each (distributed)
+    incremental TC call and the staged flag of each Spark derive, and
+    assert that no TC call is served by the closure's index: only the
+    driver rounds extend it."""
     paths = {"plans": [], "tc": [], "staged": []}
     real_rounds, real_tc, real_passes = (
         inc.feedback_rounds,
@@ -91,17 +95,20 @@ def kernel_paths(monkeypatch):
             paths["plans"] += fx.plans
 
     def tc(*args, **kw):
-        out = real_tc(*args, **kw)
-        paths["tc"].append(out[2] is not None)
-        return out
+        paths["tc"].append(1)
+        return real_tc(*args, **kw)
 
     def passes(*args, **kw):
         paths["staged"].append(kw["staged"])
         return real_passes(*args, **kw)
 
+    def index_served(*args, **kw):
+        raise AssertionError("an incremental TC call was served by the index")
+
     monkeypatch.setattr(inc, "feedback_rounds", rounds)
     monkeypatch.setattr(inc, "incremental_tc", tc)
     monkeypatch.setattr(inc, "derive_delta_passes", passes)
+    monkeypatch.setattr(closure, "_driver_incremental_tc", index_served)
     return paths
 
 
@@ -109,8 +116,15 @@ def kernel_paths(monkeypatch):
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_batch_feedback_forks_equal_oracle(spark, kernel_paths, seed, fork):
     overrides, plan, staged = FORKS[fork]
+    cfg = replace(CFG, **overrides)
     rows = _ontology(seed)
-    got = triples(materialize(FX._rows_to_df(spark, rows, "k"), replace(CFG, **overrides)))
+    if seed == 3:
+        # a negative filler and a negative property token: the R3 rows
+        # holding them must not pass through a packed distinct, and the
+        # driver rules, which pack every token, give way to Spark rounds
+        rows += [[T.AX_SOME, 100, 201, -5], [T.AX_SOME, 101, -9, 100], [T.AX_SUBCLASS, -5, 102]]
+        plan, staged = "passes", cfg.incremental_feedback_threshold == 0
+    got = triples(materialize(FX._rows_to_df(spark, rows, "k"), cfg))
     assert got == materialize_py(rows), (seed, fork)
     # R4 fired, the rounds ran, and every one of them took this fork
     assert kernel_paths["plans"] and set(kernel_paths["plans"]) == {plan}, kernel_paths
@@ -118,7 +132,7 @@ def test_batch_feedback_forks_equal_oracle(spark, kernel_paths, seed, fork):
         # the rounds extend the index directly: no TC call, no Spark derive
         assert not kernel_paths["tc"] and not kernel_paths["staged"], kernel_paths
     else:
-        assert kernel_paths["tc"] and not any(kernel_paths["tc"]), kernel_paths
+        assert kernel_paths["tc"], kernel_paths
         assert set(kernel_paths["staged"]) == {staged}, kernel_paths
 
 

@@ -16,6 +16,7 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
+from relation_graph_spark import closure
 from relation_graph_spark import fixtures as FX
 from relation_graph_spark import incremental as inc
 from relation_graph_spark import tokens as T
@@ -194,8 +195,8 @@ def _random_splits(seed, negative):
     a cycle, an owl:Nothing edge, a named equivalence, definitions that fire
     over several rounds) plus an existential whose subject is TOP. Delta 1
     grows the property hierarchy, delta 2 adds a late definition.
-    `negative` adds a class token below 0, which the driver cannot pack, to
-    the bootstrap."""
+    `negative` adds class, filler and property tokens below 0, which no
+    packed key holds, to delta 1."""
     from test_feedback_kernel import _ontology
 
     rows = _ontology(seed)
@@ -203,23 +204,26 @@ def _random_splits(seed, negative):
     subprop = [r for r in rows if r[0] == T.AX_SUBPROP]
     rest = [r for r in rows if r not in late and r not in subprop]
     rest.append([T.AX_SOME, T.TOP, 202, rest[0][1]])
-    if negative:
-        rest.insert(0, [T.AX_SUBCLASS, -7, 100])
+    neg = [[T.AX_SUBCLASS, -7, 100], [T.AX_SOME, 101, 201, -5], [T.AX_SOME, 102, -9, 101]]
     k = len(rest) // 2
-    return [rest[:k], rest[k:] + subprop, late]
+    return [rest[:k], rest[k:] + subprop + (neg if negative else []), late]
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_driver_round_equals_passes_and_settle(spark, monkeypatch, seed):
     """Batch by batch, the driver rounds add the same rel rows and R4 facts
     as the Spark rounds (derive_delta_passes + _settle, fused and staged),
-    and the state assembles to the Python oracle. With a negative token
-    every round falls back to the Spark rounds."""
+    and the state assembles to the Python oracle. With negative tokens in
+    delta 1 every round from there on falls back to the Spark rounds. No
+    TC call is served by the closure's index: only driver rounds extend
+    it."""
     from pyoracle import materialize_py
 
     negative = seed == 3
     splits = _random_splits(seed, negative)
     told = lambda part, i: told_tables(decode_axioms(FX._rows_to_df(spark, part, f"r{i}")))  # noqa: E731
+    served = []
+    monkeypatch.setattr(closure, "_driver_incremental_tc", lambda *a: served.append(a))
     runs = {}
     for fork, cfg in (
         ("driver", CFG),
@@ -231,16 +235,20 @@ def test_driver_round_equals_passes_and_settle(spark, monkeypatch, seed):
                 m.setattr(inc.ClassFixpoint, "driven", lambda self: False)
             state = inc.initial_state(told(splits[0], 0), cfg)
             added = [(triples(state["rel"]), _pairs(state["sc"]))]
-            plans = list(state["_r3_plans"])
+            plans = [state["_r3_plans"]]
             for i, part in enumerate(splits[1:], 1):
                 state, deltas = inc.apply_delta(state, told(part, i), cfg)
                 added.append((triples(deltas["rel"]), _pairs(deltas["sc"])))
-                plans += state["_r3_plans"]
+                plans.append(state["_r3_plans"])
             runs[fork] = added, plans, triples(inc.assemble_from_state(state, cfg))
     assert runs["driver"][0] == runs["fused"][0] == runs["staged"][0]
     assert runs["driver"][2] == materialize_py([r for s in splits for r in s])
-    assert runs["fused"][1] and set(runs["fused"][1]) == {"passes"}
-    assert set(runs["driver"][1]) == {"passes" if negative else "driver"}, runs["driver"][1]
+    fused = {p for b in runs["fused"][1] for p in b}
+    assert fused == {"passes"}, runs["fused"][1]
+    boot, *deltas = runs["driver"][1]
+    assert set(boot) <= {"driver"}, boot  # seed 3's bootstrap fires nothing
+    assert {p for b in deltas for p in b} == {"passes" if negative else "driver"}, deltas
+    assert not served
 
 
 def _pairs(df):
@@ -310,19 +318,7 @@ def test_delta_derive_matches_passes_inside_apply_delta(spark, monkeypatch, regi
     want = _golden(spark, [[r for s in splits for r in s]])
     monkeypatch.setattr(inc, "derive_delta_passes", passes)
     monkeypatch.setattr(inc.DriverRules, "derive", driver)
-    # the first settle of each batch, the bootstrap's (batch 0) included:
-    # (batch, narrow) — a history-sized candidate set must not be read
-    # through a single partition
-    first_settles = {}
-    real_settle = inc._settle
-
-    def settle(*args, narrow=False, **kw):
-        first_settles.setdefault(batch, narrow)
-        return real_settle(*args, narrow=narrow, **kw)
-
-    monkeypatch.setattr(inc, "_settle", settle)
     told = lambda part, i: told_tables(decode_axioms(FX._rows_to_df(spark, part, f"s{i}")))  # noqa: E731
-    batch = 0
     state = inc.initial_state(told(splits[0], 0), cfg)
     for batch, part in enumerate(splits[1:], 1):
         state, _ = inc.apply_delta(state, told(part, batch), cfg)
@@ -331,10 +327,6 @@ def test_delta_derive_matches_passes_inside_apply_delta(spark, monkeypatch, regi
     assert len(calls) > len(splits) - 1  # R4 rounds derived too
     plan = "passes" if regime == "no_broadcast" else "driver"
     assert {name for name, _full in calls} == {plan}, calls
-    # the bootstrap fired its definitions against the round-0 rel and batch
-    # 2 added late definitions (batch 1, which grew the property hierarchy,
-    # settles in Spark only without the driver rounds)
-    assert set(first_settles) >= {0, 2} and not any(first_settles.values()), first_settles
 
 
 def test_stream_without_broadcasts_equals_batch(spark, tmp_path):
@@ -386,7 +378,7 @@ def test_index_dropped_past_bound_mid_stream(spark, tmp_path):
         3: ["passes", "passes"],
         4: ["passes", "passes"],
     }
-    assert job._state["_sc_index"] is None and job._state["_sc_rules"] is None
+    assert job._state["_sc_rules"] is None and "_sc_index" not in job._state
     assert _sink(job) == _golden(spark, batches)
 
 
@@ -402,7 +394,7 @@ def test_driver_rounds_fall_back_on_a_null_token(spark):
     got = inc.initial_state(tables, CFG)
     want = inc.initial_state(tables, replace(CFG, broadcast_row_threshold=0))
     assert got["_r3_plans"] and set(got["_r3_plans"]) == {"passes"}
-    assert got["_sc_rules"] is None and got["_sc_index"] is not None
+    assert got["_sc_rules"] is None and "_sc_index" not in got
     assert triples(inc.assemble_from_state(got, CFG)) == triples(
         inc.assemble_from_state(want, CFG)
     )

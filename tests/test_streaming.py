@@ -982,8 +982,8 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
         shutil.copy2(os.path.join(inp_stage, f), os.path.join(inp, f))
     cfg = RGConfig(output_subclasses=True, reflexive_subclasses=False)
     work = str(tmp_path / "work")
-    # every seeding of the driver state (the class closure's index and the
-    # driver rules), with the closure it seeded the index from
+    # every seeding of the driver rules (the class closure's index among
+    # them), with the closure it seeded the index from
     from relation_graph_spark import incremental as inc
     from relation_graph_spark.closure import ClosureIndex
 
@@ -991,11 +991,11 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
     pull = inc.ClassFixpoint.pull
 
     def recorded_pull(fx, *args):
-        seeding = not fx.index_seeded
+        seeding = not fx.seeded
         tc = {tuple(r) for r in fx.tc.collect()} if seeding else None
         got = pull(fx, *args)
         if seeding:
-            seeds.append((fx.index, fx.rules, tc))
+            seeds.append((fx.rules, tc))
         return got
 
     monkeypatch.setattr(inc.ClassFixpoint, "pull", recorded_pull)
@@ -1006,18 +1006,18 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
         classmethod(lambda cls, tc: index_pulls.append(tc) or real_index_pull(cls, tc)),
     )
 
-    def pairs(index):
-        sub, sup = index.pairs()
+    def pairs(rules):
+        sub, sup = rules.tc.pairs()
         return set(zip(sub.tolist(), sup.tolist()))
 
     job1 = IncrementalClosureJob(spark, inp, work, cfg)
     job1.run_available(max_files_per_trigger=1)
     assert len(job1.metrics()) == 2
-    # the bootstrap's R4 rounds seed the driver state once, in one pull,
-    # and hand it to the stream: the first delta batch seeds nothing
-    assert len(seeds) == 1 and seeds[0][0] is not None and seeds[0][1] is not None
-    assert pairs(seeds[0][0]) == seeds[0][2]
-    assert pairs(job1._state["_sc_index"]) == {
+    # the bootstrap's R4 rounds seed the driver rules once, in one pull,
+    # and hand them to the stream: the first delta batch seeds nothing
+    assert len(seeds) == 1 and seeds[0][0] is not None
+    assert pairs(seeds[0][0]) == seeds[0][1]
+    assert pairs(job1._state["_sc_rules"]) == {
         tuple(r) for r in job1._state["sc_tc"].collect()
     }
     # phase 2: fresh job object (simulated restart), remaining batches
@@ -1033,13 +1033,13 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
 
     job2.process_batch = recording
     job2.run_available(max_files_per_trigger=1)
-    # the restarted job seeds the driver state once, from the stored sc_tc
-    assert len(seeds) == 2 and seeds[1][0] is not None and seeds[1][1] is not None
-    assert pairs(seeds[1][0]) == seeds[1][2]
+    # the restarted job seeds the driver rules once, from the stored sc_tc
+    assert len(seeds) == 2 and seeds[1][0] is not None
+    assert pairs(seeds[1][0]) == seeds[1][1]
     assert not index_pulls
     # ... and keeps the index equal to the stored closure through later
     # batches
-    assert pairs(job2._state["_sc_index"]) == {
+    assert pairs(job2._state["_sc_rules"]) == {
         tuple(r) for r in job2._state["sc_tc"].collect()
     }
     assert _sink_triples(job2) == _equiv_golden(spark)
