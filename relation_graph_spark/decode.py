@@ -122,6 +122,8 @@ def told_tables(axioms: DataFrame) -> dict[str, DataFrame]:
       classes(c)          — declared + mentioned class tokens
       props(p)            — declared + mentioned property tokens
       assertions(ind, c)  — ClassAssertion rows (individual, class)
+
+    No frame is deduplicated: a token or an axiom may repeat.
     """
     a = axioms
     sc_plain = a.where(F.col("atype") == T.AX_SUBCLASS).select(
@@ -148,11 +150,13 @@ def told_tables(axioms: DataFrame) -> dict[str, DataFrame]:
 
     # declared + mentioned vocabularies in ONE scan each via a per-axiom-type
     # token array + explode, instead of a union of 6 (classes) / 5 (props)
-    # re-scans of the axiom frame — same distinct sets by construction, but
+    # re-scans of the axiom frame — the same token sets by construction, but
     # the input is read once per vocabulary instead of once per union branch
     # (guide §2.4: remove redundant passes; measured 5.1s -> ~1s on the
     # 140k-row bench ontology). Width filtering in decode_axioms guarantees
-    # the selected slots are non-null for each type.
+    # the selected slots are non-null for each type. Like every told frame
+    # they may repeat a row: their consumers deduplicate the tagged union of
+    # all told frames in one pass (incremental.fold_told).
     at = F.col("atype")
     cls_tokens = (
         F.when(at.isin(T.AX_DECL_CLASS, T.AX_CLASS_ASSERTION), F.array("s"))
@@ -160,7 +164,7 @@ def told_tables(axioms: DataFrame) -> dict[str, DataFrame]:
         .when(at.isin(T.AX_SOME, T.AX_EQUIV_SOME), F.array("s", "o"))
         .otherwise(F.array().cast("array<int>"))
     )
-    classes = a.select(F.explode(cls_tokens).alias("c")).distinct()
+    classes = a.select(F.explode(cls_tokens).alias("c"))
 
     prop_tokens = (
         F.when(at == T.AX_DECL_PROP, F.array("s"))
@@ -168,7 +172,7 @@ def told_tables(axioms: DataFrame) -> dict[str, DataFrame]:
         .when(at.isin(T.AX_SOME, T.AX_EQUIV_SOME), F.array("p"))
         .otherwise(F.array().cast("array<int>"))
     )
-    props = a.select(F.explode(prop_tokens).alias("p")).distinct()
+    props = a.select(F.explode(prop_tokens).alias("p"))
 
     assertions = a.where(F.col("atype") == T.AX_CLASS_ASSERTION).select(
         F.col("p").alias("ind"), F.col("s").alias("c")

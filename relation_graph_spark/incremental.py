@@ -76,6 +76,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from relation_graph_spark import closure
 from relation_graph_spark import tokens as T
 from relation_graph_spark.closure import (
     ClosureIndex,
@@ -96,8 +97,10 @@ from relation_graph_spark.materialize import (
     _fire,
     _packs,
     _span,
+    compute_unsat,
     derive_relations,
     materialize_edges,
+    no_unsat,
 )
 
 # every persisted frame -> its int32 token columns, in tagged-column order
@@ -263,35 +266,71 @@ def _bounded_broadcast(cfg: RGConfig, df: DataFrame, rows: int) -> DataFrame:
     return F.broadcast(df) if _fits(cfg, rows) else df
 
 
+def fold_told(
+    told: dict[str, DataFrame],
+    cfg: RGConfig,
+    known: DataFrame | None = None,
+    known_rows: int = 0,
+) -> tuple[DataFrame, dict[str, int], dict, bool]:
+    """The told intake the batch and the stream share: every told frame of
+    `told` as ONE tagged union, less the rows of `known` (the state's
+    tagged told rows, at most `known_rows` of them; none for the batch),
+    deduplicated into ONE checkpoint, then ONE stats job over it. Returns
+    (fold, {frame: rows}, {frame: stats row}, packable): a stats row holds
+    the least token of each column (`lo_t0`..), the greatest (`hi`), and
+    the rows whose first token is owl:Thing (`top`) or owl:Nothing (`bot`);
+    `packable` tells whether every token but the individuals' fits one
+    packed key. The stream's delta-sized fold is read through one
+    partition (see the module doc); the batch's runs the parallel plan."""
+    fold = _union([_tagged(told[n], n) for n in _TOLD_FRAMES])
+    if known is not None:
+        # (an outer join + null filter, not a left_anti: Catalyst pushes an
+        # anti-join through the union into one join — and one broadcast job
+        # — per frame)
+        known = _bounded_broadcast(cfg, known.selectExpr("*", "true AS _known"), known_rows)
+        fold = (
+            fold.join(known, on=["frame", *_TAG_COLS], how="left_outer")
+            .where("_known IS NULL")
+            .drop("_known")
+        )
+    fold = fold.dropDuplicates().localCheckpoint(eager=False)
+    stats = {
+        r["frame"]: r
+        for r in (fold if known is None else fold.coalesce(1))
+        .groupBy("frame")
+        .agg(
+            F.expr("count(1) AS n"),
+            # per column: a frame's padding (_NO_TOKEN) is no token of it
+            *(F.expr(f"min({t}) AS lo_{t}") for t in _TAG_COLS),
+            F.expr("max(greatest(t0, t1, t2)) AS hi"),
+            F.expr(f"count(CASE WHEN t0 = {T.TOP} THEN 1 END) AS top"),
+            F.expr(f"count(CASE WHEN t0 = {T.BOT} THEN 1 END) AS bot"),
+        )
+        .collect()
+    }
+    # individuals never enter a closure side: no packability bound
+    packable = _packs(
+        r[b]
+        for n, r in stats.items()
+        if n != "assertions"
+        for b in ("hi", *(f"lo_{t}" for t in _TAG_COLS[: len(FRAME_COLUMNS[n])]))
+    )
+    return fold, {n: stats[n]["n"] if n in stats else 0 for n in _TOLD_FRAMES}, stats, packable
+
+
 def initial_state(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
     m = materialize_edges(told, cfg)
-    return {
-        "sc": m["sc_final"],
-        "some": m["some"],
-        "def_some": told["def_some"].dropDuplicates(),
-        "sp": told["sp"].dropDuplicates(),
-        "classes": m["classes"],
-        "props": told["props"],
-        "assertions": told["assertions"].dropDuplicates(),
-        "sc_tc": m["sc_closure"],
-        "rel": m["rel"],
-        # derived carry-forward, seeded from the fixpoint's own frames
-        "_sc_star": m["sc_star"],
-        "_sp_star": m["sp_star"],
-        "_n_some": m["_n_some"],
-        "_n_def": m["_n_def"],
-        "_has_bot": m["_has_bot"],
-        "_r3_plans": m["_r3_plans"],
-        # the class closure's index and the driver rules, when the
-        # bootstrap's R4 rounds seeded them: the first delta batch then
-        # needs no pull
-        **m["_driver_state"],
-    }
+    state = {n: m[n] for n in ("some", "def_some", "sp", "classes", "props", "assertions", "rel")}
+    state.update(sc=m["sc_final"], sc_tc=m["sc_closure"], _sc_star=m["sc_star"], _sp_star=m["sp_star"])
+    # the running stats the fixpoint measured and the driver rules it
+    # seeded: the first delta batch then needs no stats job and no pull
+    state.update((k, v) for k, v in m.items() if k.startswith("_"))
+    return state
 
 
 def _ensure_derived(state: dict[str, DataFrame]) -> None:
-    """Populate the in-memory running stats if absent (fresh restart or the
-    first batch after the bootstrap). One-time O(closure) cost per process,
+    """Populate the in-memory running stats if absent (a fresh restart: the
+    bootstrap hands over its own). One-time O(closure) cost per process,
     not per batch: every missing stat comes from ONE union-aggregate job.
     The driver rules are seeded by the first round that needs them
     (ClassFixpoint.pull)."""
@@ -336,11 +375,9 @@ def output_frames(state: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataF
     of the per-batch plans, and the bottom-rule fixpoint is skipped
     entirely. `_has_bot is None` (restart, legacy state) falls back to the
     full computation."""
-    from relation_graph_spark.materialize import compute_unsat
-
     sc_star = state["_sc_star"]
     if state.get("_has_bot") is False:
-        unsat = sc_star.where(F.lit(False)).select(F.col("sub").alias("c"))
+        unsat = no_unsat(sc_star)
     else:
         unsat = compute_unsat(sc_star, state["some"], cfg)
     return {
@@ -529,6 +566,14 @@ def _via(t: np.ndarray, col: int, keys: np.ndarray, shift: int, budget: int) -> 
     return np.unique(_key3(*cols))
 
 
+def _star_keys(tc: np.ndarray, classes: np.ndarray) -> np.ndarray:
+    """The packed star closure pairs (closure.star_closure on the driver):
+    the packed closure `tc` plus each of `classes`' reflexive and (c, TOP)
+    pair, sorted and unique."""
+    top = classes[classes != T.TOP]
+    return np.unique(np.concatenate([tc, _pack(classes, classes), _pack(top, np.full(len(top), T.TOP))]))
+
+
 @dataclass(frozen=True)
 class DriverRules:
     """The class closure and the R3 and R4 rule inputs of the class
@@ -555,10 +600,7 @@ class DriverRules:
         (c,), (sub, sup) = classes, tc
         if not _packable(c, sub, sup):
             return None
-        top = c[c != T.TOP]
-        star = ClosureIndex.of_pairs(
-            np.concatenate([sub, c, top]), np.concatenate([sup, c, np.full(len(top), T.TOP)])
-        )
+        star = ClosureIndex.of_pairs(*_unpack(_star_keys(_pack(sub, sup), c)))
         empty = np.empty(0, np.int64)
         return cls(ClosureIndex.of_pairs(sub, sup), star, empty, empty, empty, empty, empty).grown(
             some, defs, sc, sp_star=sp_star
@@ -683,6 +725,55 @@ def _pull_tagged(tagged: DataFrame, widths: dict[str, int]) -> dict[str, tuple |
     return out
 
 
+def driver_intake(fold: DataFrame, n: dict[str, int], cfg: RGConfig) -> dict:
+    """Round 0's closures on the driver, from ONE pull of the batch's told
+    intake (fold_told) while it fits: at most closure._DRIVER_TC_EDGES told
+    edges in either hierarchy, classes and properties within
+    broadcast_row_threshold, and no null token. Both hierarchies close over
+    packed keys (closure._close_packed, bounded by broadcast_row_threshold
+    pairs) into the class closure `tc`, its star closure `star` (`rows`
+    pairs) and the property star closure `sp_star` (`n_sp` pairs), shipped
+    as local relations; `bot` tells whether the star closure holds an
+    owl:Nothing pair. With definitions whose told existentials fit the
+    bound, the pull carries those and the definitions too, and `rules` are
+    the DriverRules they seed (None if a token does not pack or is null).
+    {} when any of this falls back to Spark."""
+    spark, thr = fold.sparkSession, cfg.broadcast_row_threshold
+    if max(n["sc"], n["sp"]) > closure._DRIVER_TC_EDGES or not _fits(cfg, n["classes"] + n["props"]):
+        return {}
+    frames = ["sc", "sp", "classes", "props"]
+    seeded = bool(n["def_some"]) and _fits(cfg, n["some"])
+    frames += ["some", "def_some"] if seeded else []
+    got = _pull_tagged(
+        fold.where("frame IN (" + ", ".join(f"'{f}'" for f in frames) + ")"),
+        {f: len(FRAME_COLUMNS[f]) for f in frames},
+    )
+    if any(got[f] is None for f in frames[:4]):
+        return {}
+    tc, sp = (
+        closure._close_packed(np.unique(_pack(*got[f])), thr, cfg.max_iterations) for f in ("sc", "sp")
+    )
+    if tc is None or sp is None:
+        return {}
+    (c,), (p,) = got["classes"], got["props"]
+    star = _star_keys(tc, c)
+    sp = np.union1d(sp, _pack(p, p))
+    rules = None
+    if seeded and got["some"] is not None and got["def_some"] is not None:
+        wide = [tuple(a.astype(np.int64) for a in _unpack(k)) for k in (tc, sp)]
+        rules = DriverRules.of(wide[0], got["classes"], got["some"], wide[1], got["sc"], got["def_some"])
+    return dict(
+        tc=_local(spark, "sub int, sup int", *_unpack(tc)),
+        star=_local(spark, "sub int, sup int", *_unpack(star)),
+        sp_star=_local(spark, "sub int, sup int", *_unpack(sp)),
+        rows=len(star),
+        n_sp=len(sp),
+        bot=bool((_low(star) == T.BOT).any()),
+        rules=rules,
+        seeded=seeded,
+    )
+
+
 @dataclass
 class ClassFixpoint:
     """The class side of the R1-R4 fixpoint, as the R4 feedback rounds grow
@@ -786,11 +877,7 @@ class ClassFixpoint:
         if tc is None:
             self.rules = None
             return None
-        new = [tc.added]
-        if classes is not None:
-            top = classes[classes != T.TOP]
-            new += [_pack(classes, classes), _pack(top, np.full(len(top), T.TOP))]
-        d = np.unique(np.concatenate(new))
+        d = _star_keys(tc.added, np.empty(0, np.int32) if classes is None else classes)
         d = d[~_member(self.rules.star.fwd, d)]
         self.rules = replace(self.rules, tc=tc, star=self.rules.star.union(d))
         self._tc_new.append(tc.added)
@@ -1076,19 +1163,20 @@ def apply_delta(
     # being recomputed from the full state each batch.
     _ensure_derived(state)
 
-    # ONE tagged anti-join folds every told frame: the delta frames as one
-    # (frame, t0, t1, t2) union against the same union of the state frames,
-    # then one checkpoint and one stats job (per-frame row count for the
-    # emptiness decisions and running stats, token span for packability).
-    # The state side is vocabulary-sized; its running row bound gates the
-    # broadcast hint (classes, sc <= sc_star; props, sp <= sp_star).
+    # ONE tagged anti-join folds every told frame (fold_told): the delta
+    # frames as one (frame, t0, t1, t2) union against the same union of the
+    # state frames, then one checkpoint and one stats job (per-frame row
+    # count for the emptiness decisions and running stats, token span for
+    # packability). The state side is vocabulary-sized; its running row
+    # bound gates the broadcast hint (classes, sc <= sc_star; props, sp <=
+    # sp_star).
     stored = state.get("_state_tagged")
     state_told = (
         stored.where("frame IN (" + ", ".join(f"'{n}'" for n in _TOLD_FRAMES) + ")")
         .select("frame", *_TAG_COLS)
         if stored is not None
         else _union([_tagged(state[n], n) for n in _TOLD_FRAMES])
-    ).selectExpr("*", "true AS _known")
+    )
     told_rows = (
         2 * state["_n_sc_star"]
         + 2 * state["_n_sp_star"]
@@ -1096,41 +1184,8 @@ def apply_delta(
         + state["_n_def"]
         + state["_n_assertions"]
     )
-    state_told = _bounded_broadcast(cfg, state_told, told_rows)
-    # (an outer join + null filter, not a left_anti: Catalyst pushes an
-    # anti-join through the union into one join — and one broadcast job —
-    # per frame)
-    fold = (
-        _union([_tagged(delta_told[n], n) for n in _TOLD_FRAMES])
-        .join(state_told, on=["frame", *_TAG_COLS], how="left_outer")
-        .where("_known IS NULL")
-        .drop("_known")
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
-    )
-    stats = {
-        r["frame"]: r
-        for r in fold.coalesce(1)
-        .groupBy("frame")
-        .agg(
-            F.expr("count(1) AS n"),
-            # per column: a frame's padding (_NO_TOKEN) is no token of it
-            *(F.expr(f"min({t}) AS lo_{t}") for t in _TAG_COLS),
-            F.expr("max(greatest(t0, t1, t2)) AS hi"),
-            # new classes among TOP / owl:Nothing: their star rows (below)
-            F.expr(f"count(CASE WHEN t0 = {T.TOP} THEN 1 END) AS top"),
-            F.expr(f"count(CASE WHEN t0 = {T.BOT} THEN 1 END) AS bot"),
-        )
-        .collect()
-    }
-    n_d = {n: stats[n]["n"] if n in stats else 0 for n in _TOLD_FRAMES}
-    # individuals never enter a closure side: no packability bound
-    packable = state["_packable"] and _packs(
-        r[b]
-        for n, r in stats.items()
-        if n != "assertions"
-        for b in ("hi", *(f"lo_{t}" for t in _TAG_COLS[: len(FRAME_COLUMNS[n])]))
-    )
+    fold, n_d, stats, packable = fold_told(delta_told, cfg, state_told, told_rows)
+    packable = state["_packable"] and packable
     d = {n: _untag(fold, n) for n in _TOLD_FRAMES}
 
     classes_new = state["classes"].unionByName(d["classes"])

@@ -20,6 +20,21 @@ entailment of the reference's materialize_test.ofn requires exactly one
 feedback round (TestRelationGraph.scala:41-46).
 
 Physical shape (the 100-TB story):
+- one told intake, the fold the streaming engine runs on each micro-batch
+  (incremental.fold_told), here against an empty state: every told frame
+  as one tagged union, deduplicated into ONE checkpoint, then ONE stats
+  job (per-frame row count, least and greatest token, owl:Thing and
+  owl:Nothing rows). While both hierarchies fit the driver (at most
+  closure._DRIVER_TC_EDGES told edges each, classes and properties within
+  broadcast_row_threshold, closures within as many pairs, no null token),
+  ONE pull of the checkpoint brings them there (incremental.driver_intake):
+  they close over packed int64 keys into the class, star and property star
+  closures, shipped back as local relations whose row counts are known, so
+  no job counts a closure side, and no job probes unsat unless the star
+  closure holds an owl:Nothing pair. With definitions that fit, the same
+  pull seeds the R4 rounds' driver rules. Past any gate, transitive_closure,
+  property_star, star_closure and compute_unsat run in Spark, and one job
+  counts both closures.
 - `some` (told existentials) is the fact table: it scales with the input
   stream. `sc_star`/`sp_star` (hierarchy closures) scale with the ontology
   vocabulary and are broadcast below a threshold — this makes R3 a chain of
@@ -257,93 +272,85 @@ def _fire(rel_rows: DataFrame, defs: DataFrame) -> DataFrame:
 def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, DataFrame]:
     """Run the R1-R4 fixpoint; return {'rel','sc_closure','sc_star','unsat',
     'classes','assertions'} frames (pre-output-config, already TOP/BOT-free
-    where noted)."""
+    where noted), the other deduplicated told frames, and the running stats
+    the incremental engine carries (see the module doc's physical shape)."""
     from relation_graph_spark.closure import ensure_iteration_confs
+    from relation_graph_spark.incremental import (
+        _TOLD_FRAMES,
+        ClassFixpoint,
+        _bounded_broadcast,
+        _fits,
+        _untag,
+        driver_intake,
+        feedback_rounds,
+        fold_told,
+    )
 
     ensure_iteration_confs(told["classes"])
-    classes = told["classes"].localCheckpoint(eager=False)
-    props = told["props"]
-
-    # R2 once: property closure is independent of the class feedback loop.
-    sp_star = property_star(
-        told["sp"], props, cfg.max_iterations, cfg.broadcast_row_threshold
-    )
-
-    some = told["some"].dropDuplicates().localCheckpoint(eager=False)
-    def_some = told["def_some"].dropDuplicates().localCheckpoint(eager=False)
-    sc = told["sc"].dropDuplicates().localCheckpoint(eager=False)
-
-    # ONE combined stats job: told-existential / definition counts (cost-based
-    # decisions below) + the least and greatest token (packability for EVERY
-    # derive_relations call — all closure-side tokens are classes, props or
-    # the reserved TOP/BOT, so the span of classes and props bounds them;
-    # computing it here once replaces a per-derivation-pass min/max scan)
-    stats = (
-        some.selectExpr("'some' AS f", "count(1) AS n", "NULL AS lo", "NULL AS hi")
-        .unionByName(def_some.selectExpr("'def' AS f", "count(1) AS n", "NULL AS lo", "NULL AS hi"))
-        .unionByName(
-            classes.selectExpr("'classes' AS f", "count(1) AS n", "min(c) AS lo", "max(c) AS hi")
-        )
-        .unionByName(
-            props.selectExpr("'props' AS f", "count(1) AS n", "min(p) AS lo", "max(p) AS hi")
-        )
-        .collect()
-    )
-    st = {r["f"]: r for r in stats}
-    n_some, n_def = st["some"]["n"], st["def"]["n"]
-    packable = _packs(
-        [T.TOP, T.BOT, *(st[f][b] for f in ("classes", "props") for b in ("lo", "hi"))]
-    )
-
+    # ONE told intake: the stream's fold against an empty state
+    fold, n, _, packable = fold_told(told, cfg)
+    t = {name: _untag(fold, name) for name in _TOLD_FRAMES}
     thr = cfg.broadcast_row_threshold
-    staged = n_some > cfg.incremental_feedback_threshold
-    # round 0: full class closure + full R3
-    sc_tc = transitive_closure(
-        sc, child="sub", parent="sup", max_iterations=cfg.max_iterations,
-        broadcast_row_threshold=thr,
-    )
-    sc_star = star_closure(
-        sc_tc, classes, broadcast=0 < thr and st["classes"]["n"] <= thr
-    ).localCheckpoint(eager=False)
-    rel = derive_relations(
-        sc_star, some, sp_star, thr, staged=staged, packable=packable
-    ).localCheckpoint(eager=False)
-
-    driver_state, plans = {}, []
-    if n_def:
-        # R4 feedback: the stream's semi-naive rounds (feedback_rounds),
-        # whose first round is the stream's late-definition case — every
-        # definition fires against the round-0 rel. One job counts the
-        # closure sides for the broadcast decisions. The driver rules (the
-        # class closure's ClosureIndex among them) are pulled by the first
-        # round that fires a fact, only while they fit the broadcast bound,
-        # as in the stream; the rounds run in Spark otherwise.
-        from relation_graph_spark.incremental import (
-            ClassFixpoint,
-            _bounded_broadcast,
-            feedback_rounds,
+    staged = n["some"] > cfg.incremental_feedback_threshold
+    # round 0: both hierarchies closed on the driver from one pull of the
+    # intake, with known sizes, or — past its gates — in Spark
+    d = driver_intake(fold, n, cfg)
+    if d:
+        sc_tc, sc_star, sp_star, rows, n_sp = (d[k] for k in ("tc", "star", "sp_star", "rows", "n_sp"))
+    else:
+        # R2 once: property closure is independent of the class feedback loop.
+        sp_star = property_star(t["sp"], t["props"], cfg.max_iterations, thr)
+        sc_tc = transitive_closure(
+            t["sc"], child="sub", parent="sup", max_iterations=cfg.max_iterations,
+            broadcast_row_threshold=thr,
         )
-
-        n = dict(
+        sc_star = star_closure(
+            sc_tc, t["classes"], broadcast=_fits(cfg, n["classes"])
+        ).localCheckpoint(eager=False)
+        # the Spark closures' sizes: one job
+        sizes = dict(
             sc_star.selectExpr("'star' AS f")
             .unionByName(sp_star.selectExpr("'sp' AS f"))
             .groupBy("f")
             .count()
             .collect()
         )
-        defs = _bounded_broadcast(cfg, def_some, n_def)
+        rows, n_sp = sizes.get("star", 0), sizes.get("sp", 0)
+    rel = derive_relations(
+        sc_star, t["some"], sp_star, thr, staged=staged, packable=packable,
+        sides_broadcast=_fits(cfg, rows + n_sp),
+    ).localCheckpoint(eager=False)
+
+    sc, bot, driver_state, plans = t["sc"], d.get("bot"), {}, []
+    if n["def_some"]:
+        # R4 feedback: the stream's semi-naive rounds (feedback_rounds),
+        # whose first round is the stream's late-definition case — every
+        # definition fires against the round-0 rel. The driver rules (the
+        # class closure's ClosureIndex among them) come seeded from the
+        # intake's pull, or are pulled by the first round that fires a
+        # fact, only while they fit the broadcast bound, as in the stream;
+        # the rounds run in Spark otherwise.
+        defs = _bounded_broadcast(cfg, t["def_some"], n["def_some"])
         fx = ClassFixpoint(
-            cfg, {"rel": rel}, sc=sc, tc=sc_tc, star=sc_star, classes=classes,
-            rows=n.get("star", 0), some=some, n_some=n_some, sp_star=sp_star,
-            n_sp=n.get("sp", 0), packable=packable, staged=staged, defs=defs,
+            cfg, {"rel": rel}, sc=sc, tc=sc_tc, star=sc_star, classes=t["classes"],
+            rows=rows, some=t["some"], n_some=n["some"], sp_star=sp_star, n_sp=n_sp,
+            packable=packable, staged=staged, defs=defs, rules=d.get("rules"),
+            seeded=d.get("seeded", False),
         )
         feedback_rounds(fx, None, _fire(rel, defs))
         # the rounds' rel rows are disjoint from the round-0 rel
         rel = rel.unionByName(fx.rel)
-        sc, sc_tc, sc_star = fx.sc, fx.tc, fx.star
+        sc, sc_tc, sc_star, rows = fx.sc, fx.tc, fx.star, fx.rows
         driver_state, plans = fx.driver_state(), fx.plans
+        if bot is False:
+            bot = fx.bot > 0
 
-    unsat = compute_unsat(sc_star, some, cfg)
+    # unsat is empty iff no (x, owl:Nothing) pair is in the closure (or
+    # bottom handling is disabled — in which case downstream unsat
+    # computation is a no-op too, so the stat stays truthful); unsat of a
+    # closure the driver did not see (bot None) is computed and probed
+    has_bot = bot and not cfg.disable_owl_nothing
+    unsat = no_unsat(sc_star) if has_bot is False else compute_unsat(sc_star, t["some"], cfg)
     return {
         "rel": rel,
         # the rounds' TC already closes the post-R4 subclass graph
@@ -351,24 +358,31 @@ def materialize_edges(told: dict[str, DataFrame], cfg: RGConfig) -> dict[str, Da
         "sc_star": sc_star,
         "sp_star": sp_star,
         "unsat": unsat,
-        "some": some,
-        "classes": classes,
-        "assertions": told["assertions"],
+        **{name: t[name] for name in ("some", "def_some", "sp", "classes", "props", "assertions")},
         # told subclass edges including R4-derived feedback facts — the
         # incremental engine's state seed
         "sc_final": sc,
         # scalar stats, the R3 plan of each feedback round, and the driver
-        # rules if the rounds seeded them, carried to the incremental engine
-        # (avoid re-counts and re-pulls)
-        "_n_some": n_some,
-        "_n_def": n_def,
+        # rules if seeded, carried to the incremental engine (avoid
+        # re-counts and re-pulls)
+        "_n_some": n["some"],
+        "_n_def": n["def_some"],
+        "_n_assertions": n["assertions"],
+        "_n_sc_star": rows,
+        "_n_sp_star": n_sp,
+        "_packable": packable,
         "_r3_plans": plans,
-        "_driver_state": driver_state,
-        # unsat is empty iff no (x, owl:Nothing) pair is in the closure (or
-        # bottom handling is disabled — in which case downstream unsat
-        # computation is a no-op too, so the stat stays truthful)
-        "_has_bot": not unsat.isEmpty(),
+        **driver_state,
+        "_has_bot": not unsat.isEmpty() if has_bot is None else has_bot,
     }
+
+
+def no_unsat(sc_star: DataFrame) -> DataFrame:
+    """The STATICALLY empty unsat frame (a where(false), not a checkpointed
+    frame): PropagateEmptyRelation then folds every downstream unsat
+    anti-join out of the plan instead of probing an empty broadcast per
+    row."""
+    return sc_star.where(F.lit(False)).select(F.col("sub").alias("c"))
 
 
 def compute_unsat(sc_star: DataFrame, some: DataFrame, cfg: RGConfig) -> DataFrame:
@@ -382,12 +396,8 @@ def compute_unsat(sc_star: DataFrame, some: DataFrame, cfg: RGConfig) -> DataFra
     own fillers sit elsewhere); unsat is class-domain-sized, so every
     iteration is one broadcast semi-join pass over the told existentials —
     no fact-table shuffle."""
-    empty = sc_star.where(F.lit(False)).select(F.col("sub").alias("c"))
     if cfg.disable_owl_nothing:
-        # STATICALLY empty (a where(false), not a checkpointed frame):
-        # PropagateEmptyRelation then folds every downstream unsat anti-join
-        # out of the plan instead of probing an empty broadcast per row
-        return empty
+        return no_unsat(sc_star)
     unsat = (
         sc_star.where(F.col("sup") == T.BOT)
         .select(F.col("sub").alias("c"))
@@ -396,8 +406,8 @@ def compute_unsat(sc_star: DataFrame, some: DataFrame, cfg: RGConfig) -> DataFra
     )
     if unsat.isEmpty():
         # common case: nothing under owl:Nothing — skip the bottom-rule loop
-        # entirely AND hand back the statically-empty frame (see above)
-        return empty
+        # entirely AND hand back the statically-empty frame
+        return no_unsat(sc_star)
     for _ in range(cfg.max_iterations):
         bad_subjects = (
             some.join(F.broadcast(unsat), some["f"] == unsat["c"], "left_semi")

@@ -983,22 +983,20 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
     cfg = RGConfig(output_subclasses=True, reflexive_subclasses=False)
     work = str(tmp_path / "work")
     # every seeding of the driver rules (the class closure's index among
-    # them), with the closure it seeded the index from
+    # them) — by the batch intake's pull or by a round's — with the closure
+    # it seeded the index from
     from relation_graph_spark import incremental as inc
     from relation_graph_spark.closure import ClosureIndex
 
     seeds, index_pulls = [], []
-    pull = inc.ClassFixpoint.pull
+    real_of = inc.DriverRules.of.__func__
 
-    def recorded_pull(fx, *args):
-        seeding = not fx.seeded
-        tc = {tuple(r) for r in fx.tc.collect()} if seeding else None
-        got = pull(fx, *args)
-        if seeding:
-            seeds.append((fx.rules, tc))
-        return got
+    def recorded_of(cls, tc, *rest):
+        rules = real_of(cls, tc, *rest)
+        seeds.append((rules, set(zip(tc[0].tolist(), tc[1].tolist()))))
+        return rules
 
-    monkeypatch.setattr(inc.ClassFixpoint, "pull", recorded_pull)
+    monkeypatch.setattr(inc.DriverRules, "of", classmethod(recorded_of))
     real_index_pull = ClosureIndex.pull.__func__
     monkeypatch.setattr(
         ClosureIndex,
@@ -1013,8 +1011,8 @@ def test_streaming_equivalence_feedback_resume(spark, tmp_path, monkeypatch):
     job1 = IncrementalClosureJob(spark, inp, work, cfg)
     job1.run_available(max_files_per_trigger=1)
     assert len(job1.metrics()) == 2
-    # the bootstrap's R4 rounds seed the driver rules once, in one pull,
-    # and hand them to the stream: the first delta batch seeds nothing
+    # the bootstrap's intake seeds the driver rules once, in its one pull,
+    # and hands them to the stream: the first delta batch seeds nothing
     assert len(seeds) == 1 and seeds[0][0] is not None
     assert pairs(seeds[0][0]) == seeds[0][1]
     assert pairs(job1._state["_sc_rules"]) == {
